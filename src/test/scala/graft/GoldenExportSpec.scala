@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftConf
@@ -13,15 +15,27 @@ import graft.operators.Normalize
   * the engine's normalize/dedup pipeline must treat real production
   * rows as a fixpoint — already-normalized data passes through
   * unchanged and fully deduplicated.
+  *
+  * The export is not part of the repository. Where the file is not
+  * readable, every test is canceled (not failed) with one message
+  * naming the missing path; the assertions run unchanged wherever the
+  * reference export is present.
   */
 class GoldenExportSpec extends SparkSpec {
 
   private val exportCsv = "/root/reference/redit_table_202509091827.csv"
 
-  private def export = spark.read
-    .option("header", "true")
-    .option("multiLine", "true")
-    .csv(exportCsv)
+  /** The export as a frame; cancels the calling test when the file is
+    * absent, before anything reads it.
+    */
+  private def export = {
+    assume(Files.isReadable(Paths.get(exportCsv)),
+      s"reference export $exportCsv is absent or unreadable")
+    spark.read
+      .option("header", "true")
+      .option("multiLine", "true")
+      .csv(exportCsv)
+  }
 
   test("export shape: 19 rows, 12 columns, unique keys, 64-hex hashes") {
     val df = export

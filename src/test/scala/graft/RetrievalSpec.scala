@@ -908,26 +908,34 @@ class RetrievalSpec extends SparkSpec {
       try RetrievalQueries.hybridRrf(spark, sfDir, 5)
       finally spark.conf.unset(RetrievalQueries.HybridExactMaxBytesKey)
     }
-    // forced-exact arm == the gated exact query; its plan carries no
-    // stored-index table
+    // the fused output is a driver-side local relation for either tier
+    // (rrfFuseSized), so its plan cannot tell the tiers apart; the rows
+    // can, because the indexed vector arm is IVF-PQ approximate and the
+    // gated tiers differ at sfDir
+    val gatedExact =
+      SparkEntry.queries("q_hybrid_rrf")(spark, sfDir).collect().toSeq
+    assert(gatedExact != SparkEntry.queries("q_hybrid_rrf_indexed")(
+        spark, sfDir).collect().toSeq,
+      "the gated tiers agree at this scale, so rows cannot show the tier")
+    // forced-exact arm == the gated exact query
     val exact = armAt(Long.MaxValue.toString)
     assert(exact.collect().toSeq ==
       SparkEntry.queries("q_hybrid_rrf")(spark, sfDir).collect().toSeq)
-    assert(!exact.queryExecution.executedPlan.toString
-      .contains("graft-codes-inc"))
-    // forced-indexed arm == the gated indexed query; its plan serves
-    // from the stored codes table
+    // forced-indexed arm == the gated indexed query
     val indexed = armAt("0")
     assert(indexed.collect().toSeq ==
       SparkEntry.queries("q_hybrid_rrf_indexed")(spark, sfDir)
         .collect().toSeq)
-    assert(indexed.queryExecution.executedPlan.toString
-      .contains("graft-codes-inc"))
     // the default threshold keeps sf0.001 (and sf0.1 — 0.80 MB) on
     // the exact tier
-    assert(RetrievalQueries.hybridRrf(spark, sfDir, 5)
-      .queryExecution.executedPlan.toString
-      .contains("graft-codes-inc") == false)
+    assert(RetrievalQueries.hybridRrf(spark, sfDir, 5).collect().toSeq ==
+      gatedExact, "the default threshold must pick the exact tier")
+    // only the indexed tier's vector arm serves from the stored codes
+    // table
+    assert(RetrievalQueries.hybridIndexedCosArm(spark, sfDir, 5)
+      .queryExecution.executedPlan.toString.contains("graft-codes-inc"))
+    assert(!RetrievalQueries.hybridExactCosArm(spark, sfDir, 5)
+      .queryExecution.executedPlan.toString.contains("graft-codes-inc"))
   }
 
   test("external hybrid search: a (text, vector) query fuses both " +
