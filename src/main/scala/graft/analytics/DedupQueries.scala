@@ -619,9 +619,9 @@ object DedupQueries {
   private val ProbeKeyCap = 4096
 
   /** Collect a batch-bounded frame once: the driver copy becomes a
-    * LocalRelation (joins against it broadcast for free — no build
-    * job) and its rows feed probe-key derivation without further Spark
-    * jobs. `None` when the frame exceeds `cap` — callers fall back to
+    * LocalRelation (a Project over it evaluates in the optimizer, with
+    * no job) and its rows feed probe-key derivation without further
+    * Spark jobs. `None` when the frame exceeds `cap` — callers fall back to
     * their distributed shape, re-evaluating the frame's lineage once
     * (the documented broadcastBatch contract: `true` asserts
     * batch-bounded inputs, so the over-cap arm is a backfill-misuse
@@ -692,110 +692,206 @@ object DedupQueries {
     * re-self-joined, and pairs among pre-existing docs (already folded
     * into the labels table by earlier triggers) are not re-derived.
     *
-    * Per-trigger stored-table IO (the MaintenanceProbe axis — at
-    * 1000:1 corpus:batch ratios the stored-table SCANS are what
-    * dominate a trigger, the shuffles having been eliminated by the
-    * broadcast shape below):
-    *  - the batch's own signature rows are fetched back
-    *    partition-PRUNED to the buckets the batch's ids hash into
-    *    ([[bucketsOf]] — derivable from the ids alone);
-    *  - the candidate probe reads only (doc_id, sg) of the stored
-    *    table (columnar pruning; `shs` never crosses the reader);
-    *  - shingle sets for the verify are fetched ONCE (not once per
-    *    pair side), pruned to the buckets the candidate ids hash
-    *    into, and the batch-bounded fetch is joined to both pair
-    *    sides from its materialized copy — the stored `shs` column is
-    *    scanned at most once per trigger, and only in candidate-
-    *    touching buckets.
+    * At streaming cadence (`broadcastBatch`, every batch-bounded frame
+    * under [[frameCap]]) the pairs derive on the driver
+    * ([[batchVerifiedPairsLocal]]); otherwise, or over the cap, the
+    * distributed shape runs ([[batchVerifiedPairsDistributed]]). Both
+    * return the same rows.
     */
   def batchVerifiedPairs(
       s: SparkSession, sigDir: String, batch: DataFrame,
-      threshold: Double = 0.5, broadcastBatch: Boolean = true): DataFrame = {
+      threshold: Double = 0.5, broadcastBatch: Boolean = true): DataFrame =
+    (if (broadcastBatch) batchVerifiedPairsLocal(s, sigDir, batch, threshold)
+     else None)
+      .getOrElse(batchVerifiedPairsDistributed(
+        s, sigDir, batch, threshold, broadcastBatch))
+
+  /** The streaming-cadence arm of [[batchVerifiedPairs]]: three Spark
+    * jobs, each a scan, with every batch-sized step between them on
+    * driver rows.
+    *  1. The batch's signature rows are COMPUTED in hand (one O(batch)
+    *     kernel pass inside the collect), not fetched back: they are a
+    *     pure function of the batch, bit-identical to what its append
+    *     writes. Their band keys are one Project over the local rows.
+    *  2. The stored band keys colliding with the batch's (an exact `In`
+    *     on the band signatures, evaluated in the scan stage; `shs`
+    *     never crosses the reader) come back in one collect; the band
+    *     join, the batch-self pairs and the pair dedup run on the
+    *     driver. A broadcast join would add a build job and its
+    *     distinct an exchange.
+    *  3. The shingle sets of the stored candidates come back in one
+    *     fetch, pruned to the buckets the candidate ids hash into and
+    *     to the ids themselves (an `In` pushed into the sort-clustered
+    *     scan); the verify then runs on the driver ([[verifyLocal]]).
+    *
+    * The stored side is read WITHOUT the batch's own ids, and the
+    * batch's rows join it from hand: "stored − batch ∪ in hand" is the
+    * same set whether or not the batch's append has landed, so this
+    * arm may run beside that append
+    * ([[graft.streaming.StreamingPipeline.maintainClusters]]). The
+    * stored table is opened with the batch's known schema (no
+    * inference job over a table an append may be writing), and a file
+    * deleted under the reader — only a replay clearing this batch's
+    * crashed install deletes table files — holds only batch rows,
+    * which the filter drops anyway, so missing files are skipped. The
+    * caller must have healed compaction crash state first
+    * ([[graft.sinks.IncrementalParquet.recover]]).
+    *
+    * None when a batch-bounded frame exceeds [[frameCap]].
+    */
+  private[graft] def batchVerifiedPairsLocal(
+      s: SparkSession, sigDir: String, batch: DataFrame,
+      threshold: Double): Option[DataFrame] = {
+    val nBuckets = tableBuckets(s, sigDir)
+    val cap = frameCap(s)
+    // wide rows (shingle sets): the tighter cap the fetch uses too
+    val wideCap = math.min(cap, 1 << 16)
+    collectLocal(rawSignatures(batch), wideCap).flatMap { case (mine, mineDf) =>
+      val ids = mine.map(_.getLong(0)).distinct
+      val bn: Array[(Int, String, Long)] = mineDf
+        .select(col("doc_id") +: (0 until Bands).map(b =>
+          bandSignature(col("sg"), lit(b), RowsPerBand)): _*)
+        .collect()
+        .flatMap(r => (0 until Bands).map(b => (b, r.getString(b + 1), r.getLong(0))))
+      val others = graft.sinks.IncrementalParquet.applyTombstones(s, sigDir, "doc_id")(
+        s.read.schema(mineDf.schema.add("bkt", IntegerType))
+          .option("ignoreMissingFiles", "true").parquet(sigDir))
+        .filter(!col("doc_id").isInCollection(ids))
+      val colliders = bandKeys(others, Seq.empty)
+        .filter(col("bsig").isInCollection(bn.map(_._2).distinct))
+        .select(col("b"), col("bsig"), col("doc_id"))
+      collectLocal(colliders, cap).flatMap { case (cs, _) =>
+        val pairs = bandJoin(bn,
+          cs.map(r => (r.getInt(0), r.getString(1), r.getLong(2))) ++ bn)
+        val mineSet = ids.toSet
+        val candIds = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+          .filterNot(mineSet)
+        val fetchPlan = keyPruned(
+          others.filter(col("bkt").isin(
+            candIds.map(id => Int.box(hashBucketLocal(id, nBuckets))).distinct.toSeq: _*)),
+          "doc_id", Some(candIds.toSeq.map(Long.box): Seq[Any])
+            .filter(_.size <= ProbeKeyCap)) {
+            import s.implicits._
+            _.join(broadcast(candIds.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
+          }
+          .select(col("doc_id"), col("shs"))
+        collectLocal(fetchPlan, wideCap).map { case (fetched, _) =>
+          verifyLocal(s, pairs,
+            fetched ++ mine.map(r => org.apache.spark.sql.Row(r.getLong(0), r.get(1))),
+            mineDf.schema("shs"), threshold)
+        }
+      }
+    }
+  }
+
+  /** The band join of [[crossBatchCandidatePairsFrom]] over driver
+    * rows `(b, bsig, doc_id)`: every batch key pairs with every
+    * colliding key of another doc, canonicalized `(a < b)` and
+    * deduplicated.
+    */
+  private def bandJoin(
+      batch: Array[(Int, String, Long)],
+      colliders: Array[(Int, String, Long)]): Array[(Long, Long)] = {
+    val byKey = batch.groupBy(k => (k._1, k._2))
+    colliders.iterator.flatMap { case (b, bsig, idC) =>
+      byKey.getOrElse((b, bsig), Array.empty[(Int, String, Long)]).iterator
+        .collect { case (_, _, idN) if idN != idC =>
+          (math.min(idN, idC), math.max(idN, idC)) }
+    }.distinct.toArray
+  }
+
+  /** The distributed arm of [[batchVerifiedPairs]] (backfill-sized
+    * batches, `broadcastBatch = false`, or frames over [[frameCap]]).
+    * Per-trigger stored-table IO (the MaintenanceProbe axis — at
+    * 1000:1 corpus:batch ratios the stored-table SCANS are what
+    * dominate a trigger):
+    *  - the batch's signature rows are computed, not fetched back (see
+    *    [[batchVerifiedPairsLocal]]), and only their band keys drive
+    *    the candidate probe, hinted broadcast under `broadcastBatch` so
+    *    the stored table is scanned, never exchanged — at micro-batch
+    *    cadence the per-batch corpus SHUFFLE is what would accumulate,
+    *    not the scan. With `broadcastBatch = false` the join shuffles
+    *    both sides;
+    *  - the candidate probe reads only (doc_id, sg) of the stored
+    *    table (columnar pruning; `shs` never crosses the reader);
+    *  - shingle sets for the verify are fetched ONCE (not once per
+    *    pair side), pruned to the buckets the candidate ids hash into,
+    *    and the batch-bounded fetch is joined to both pair sides from
+    *    its materialized copy — the stored `shs` column is scanned at
+    *    most once per trigger, and only in candidate-touching buckets.
+    */
+  private[graft] def batchVerifiedPairsDistributed(
+      s: SparkSession, sigDir: String, batch: DataFrame,
+      threshold: Double, broadcastBatch: Boolean): DataFrame = {
     val stored = storedSignaturesLive(s, sigDir)
     val nBuckets = tableBuckets(s, sigDir)
-    // COMPUTE the batch's signature rows, don't fetch them back: they
-    // are a pure function of the batch — bit-identical to what the
-    // append just wrote — and the bucket-pruned fetch reads EVERY
-    // bucket once the batch spans ≥ bucket-count ids (pruning
-    // saturates, round-9 probe), i.e. a full stored-table scan per
-    // trigger for rows the trigger already holds in hand. One
-    // O(batch) scan-stage kernel pass costs no table IO; the stored
-    // side still contains the batch, so batch-self pairs are
-    // unchanged.
-    val batchSig = bucketedSignatures(batch, nBuckets)
-    // Only the batch's BAND KEYS (b, bsig, doc_id — 4 light rows/doc)
-    // drive the candidate probe; the verify's shingle sets come back
-    // from the STORED table, so the batch's heavy columns never leave
-    // the executors. At streaming cadence the band keys are
-    // driver-sized: collected ONCE as a LocalRelation, the probe
-    // join's broadcast build is free (no build job) — the kernel pass
-    // over the batch runs distributed inside the collect.
-    val bnPlan = bandKeys(batchSig, Seq.empty)
-      .select(col("b"), col("bsig"), col("doc_id").as("id_n"))
-    val bnLocal = if (broadcastBatch) collectLocal(bnPlan, frameCap(s)) else None
-    // broadcast the batch's band keys by default: the stored table is
-    // scanned, never exchanged — at micro-batch cadence the per-batch
-    // corpus SHUFFLE is what would accumulate, not the scan. Pass
-    // broadcastBatch = false for backfill-sized batches whose band
-    // keys exceed broadcast limits; the join then shuffles both sides.
-    val bn = bnLocal.map(x => broadcast(x._2))
-      .getOrElse(hinted(bnPlan, broadcastBatch))
-    val pairsPlan = crossBatchCandidatePairsFrom(bn, stored)
-    // the batch-bounded pair list feeds the candidate-id/key derivation
-    // AND the verify joins — one probe evaluation. Collected at
-    // streaming cadence (LocalRelation: candidate ids, their hash
-    // buckets and the pushed key set all derive driver-side with zero
-    // further jobs); over-cap falls back to the checkpointed shape.
-    val candLocal =
-      if (broadcastBatch) collectLocal(pairsPlan, frameCap(s)) else None
-    val pairs = candLocal.map(_._2).getOrElse(pairsPlan.localCheckpoint())
-    val candIdsLocal: Option[Seq[Long]] = candLocal.map { case (rows, _) =>
-      rows.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.toSeq
-    }
-    val candIds = candIdsLocal match {
-      case Some(ids) =>
-        import s.implicits._
-        ids.toDF("doc_id")
-      case None => pairs.select(col("doc_id_a").as("doc_id"))
-        .unionByName(pairs.select(col("doc_id_b").as("doc_id")))
-        .distinct()
-    }
+    val bn = hinted(bandKeys(bucketedSignatures(batch, nBuckets), Seq.empty)
+      .select(col("b"), col("bsig"), col("doc_id").as("id_n")), broadcastBatch)
+    // the batch-bounded pair list feeds the candidate-id derivation AND
+    // the verify joins — one probe evaluation
+    val pairs = crossBatchCandidatePairsFrom(bn, stored).localCheckpoint()
+    val candIds = pairs.select(col("doc_id_a").as("doc_id"))
+      .unionByName(pairs.select(col("doc_id_b").as("doc_id")))
+      .distinct()
     // ONE bucket-pruned shingle fetch (batch-bounded result),
     // materialized so joining it to both pair sides cannot re-scan the
-    // stored table per side. At streaming cadence the candidate id set
-    // is metadata-sized, so it is pushed INTO the scan as an `In`
-    // predicate (exact — it IS the semi join's key set): files are
-    // sort-clustered by doc_id at append/compaction time, so parquet
-    // page min/max skipping prunes the fetch to ~matching pages
-    // instead of every candidate-bucket file read whole — the term
-    // that made tiny-batch triggers corpus-proportional once bucket
-    // pruning saturated. Over-cap key sets (backfill) fall back to the
-    // broadcast-semi shape.
-    val idKeys: Option[Seq[Any]] =
-      candIdsLocal.filter(_.size <= ProbeKeyCap).map(_.map(Long.box))
-    val candBkts = candIdsLocal
-      .map(_.map(id => Int.box(hashBucketLocal(id, nBuckets))).distinct)
-      .getOrElse(bucketsOf(candIds, "doc_id", nBuckets))
-    val fetchPlan = keyPruned(
-      stored.filter(col("bkt").isin(candBkts: _*)),
-      "doc_id", idKeys)(
-      _.join(hinted(candIds, broadcastBatch), Seq("doc_id"), "left_semi"))
+    // stored table per side
+    val fetched = stored
+      .filter(col("bkt").isin(bucketsOf(candIds, "doc_id", nBuckets): _*))
+      .join(hinted(candIds, broadcastBatch), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("shs"))
-    // candidate-bounded like the embed loop's vector fetch: collected
-    // at streaming cadence (tighter cap — shingle sets are wide), so
-    // the verify joins run over local relations with no checkpoint job
-    val fetched = (if (candIdsLocal.isDefined)
-        collectLocal(fetchPlan, math.min(frameCap(s), 1 << 16)).map(_._2)
-      else None)
-      .getOrElse(fetchPlan.localCheckpoint())
+      .localCheckpoint()
     pairs
-      .join(fetched.select(col("doc_id").as("doc_id_a"), col("shs").as("shs_a")),
-        "doc_id_a")
-      .join(fetched.select(col("doc_id").as("doc_id_b"), col("shs").as("shs_b")),
-        "doc_id_b")
+      .join(fetched.select(col("doc_id").as("doc_id_a"),
+        col("shs").as("shs_a")), "doc_id_a")
+      .join(fetched.select(col("doc_id").as("doc_id_b"),
+        col("shs").as("shs_b")), "doc_id_b")
       .withColumn("jac", jaccard(col("shs_a"), col("shs_b")))
       .filter(col("jac") >= threshold)
       .select(col("doc_id_a"), col("doc_id_b"))
+  }
+
+  /** The Jaccard verify of [[batchVerifiedPairsLocal]] over driver-held
+    * pairs and shingle sets, with no Spark job: the two pair ⋈ shingle
+    * joins run on the driver (inner-join semantics, duplicates
+    * included), and the SAME [[jaccard]] Catalyst expression scores
+    * each joined pair over a LocalRelation — the optimizer's
+    * `ConvertToLocalRelation` evaluates a Project over a LocalRelation
+    * in place, interpreted. The threshold test is part of that
+    * projection, so Spark's comparison semantics (NULL, NaN) decide
+    * which pairs survive, exactly as in the distributed filter. The
+    * surviving edges return as a LocalRelation, which the fold reads
+    * without a job ([[graft.operators.ConnectedComponents
+    * .incrementalDelta]]).
+    */
+  private def verifyLocal(
+      s: SparkSession,
+      pairs: Array[(Long, Long)],
+      shs: Array[org.apache.spark.sql.Row],
+      shsField: StructField,
+      threshold: Double): DataFrame = {
+    import org.apache.spark.sql.Row
+    val byId: Map[Long, Seq[Any]] =
+      shs.toSeq.groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.get(1)) }
+    val joined: Seq[Row] = for {
+      (a, b) <- pairs.toSeq
+      sa <- byId.getOrElse(a, Nil)
+      sb <- byId.getOrElse(b, Nil)
+    } yield Row(a, b, sa, sb)
+    val schema = new StructType()
+      .add("doc_id_a", LongType, nullable = false)
+      .add("doc_id_b", LongType, nullable = false)
+      .add(shsField.copy(name = "shs_a"))
+      .add(shsField.copy(name = "shs_b"))
+    import scala.jdk.CollectionConverters._
+    val kept = s.createDataFrame(joined.asJava, schema)
+      .select(col("doc_id_a"), col("doc_id_b"),
+        (jaccard(col("shs_a"), col("shs_b")) >= threshold).as("keep"))
+      .collect()
+      .collect { case r if !r.isNullAt(2) && r.getBoolean(2) =>
+        (r.getLong(0), r.getLong(1)) }
+    import s.implicits._
+    kept.toSeq.toDF("doc_id_a", "doc_id_b")
   }
 
   /** THE labels table maintained by driving the full STREAMING

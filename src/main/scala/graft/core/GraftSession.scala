@@ -63,12 +63,27 @@ object GraftSession {
       // query library wants the same).
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // Static conf: one executor-side classloader for every session
+      // of this context. Each streaming query runs on a CLONED session,
+      // and with artifact isolation on, every clone gets its own
+      // classloader keyed by its JobArtifactState uuid. The codegen
+      // cache keys on (classloader, code), so a maintainer restarted
+      // per AvailableNow batch recompiled identical generated code
+      // (~47 Janino compiles per absorb; after 7 batches the cache
+      // held 482 keys for 127 distinct bodies under 16 loaders). The
+      // engine adds no per-session artifacts, so nothing needs the
+      // isolation.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Apply engine defaults to an externally built session (e.g. Verify/Bench). */
+  /** Apply engine defaults to an externally built session (e.g.
+    * Verify/Bench). Static confs cannot be set here: such a session
+    * should also set `spark.sql.artifact.isolation.enabled=false` when
+    * it is built (see [[local]]).
+    */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -126,15 +126,50 @@ object Tables {
     * callers then fall back to the plan-side derivation.
     */
   private def localStrings(df: DataFrame): Option[Seq[String]] =
+    localRows(df).filter(_ => df.schema.fields.map(_.dataType).toSeq ==
+        Seq(org.apache.spark.sql.types.StringType))
+      .map(_.map(r => Option(r.getUTF8String(0)).map(_.toString).orNull))
+
+  /** The rows of a frame whose OPTIMIZED plan is a LocalRelation (a
+    * driver-built frame, or a Project/Filter over one, which the
+    * optimizer's `ConvertToLocalRelation` evaluates in place), read as
+    * Catalyst rows in the frame's column order without a Spark job;
+    * None for distributed frames.
+    */
+  def localRows(df: DataFrame): Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
     df.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if lr.output.size == 1 &&
-            lr.output.head.dataType ==
-              org.apache.spark.sql.types.StringType =>
-        Some(lr.data.map(r => Option(r.getUTF8String(0))
-          .map(_.toString).orNull).toSeq)
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(lr.data)
       case _ => None
     }
+
+  /** Eagerly local-checkpoint `df` with the aggregate `metric`
+    * observed on the same job: returns the checkpointed frame and the
+    * metric's value over exactly its rows, with no second job. Metrics
+    * firing for the eager localCheckpoint action is observed but
+    * undocumented Spark behavior, so the wait is BOUNDED (30 s):
+    * `Observation.get` would otherwise hang forever if a Spark upgrade
+    * stopped reporting them. Past the bound, or on a metrics-path
+    * failure, the metric is recomputed over the checkpointed frame by
+    * an explicit job — the same value, since that frame is fixed. The
+    * waiter is a DEDICATED daemon thread per call, not a shared-pool
+    * task: a permanently blocked get strands only its own inert
+    * thread, never starves a pool other code shares.
+    */
+  def checkpointObserved(
+      df: DataFrame, metric: org.apache.spark.sql.Column): (DataFrame, Any) = {
+    val o = org.apache.spark.sql.Observation()
+    val cp = df.observe(o, metric.as("m")).localCheckpoint()
+    val box = new java.util.concurrent.LinkedBlockingQueue[AnyRef](1)
+    val waiter = new Thread(() =>
+      box.offer(try o.get catch { case e: Throwable => e }))
+    waiter.setDaemon(true)
+    waiter.start()
+    box.poll(30, java.util.concurrent.TimeUnit.SECONDS) match {
+      case m: Map[_, _] => (cp, m.asInstanceOf[Map[String, Any]]("m"))
+      case _ => (cp, cp.agg(metric).head().get(0))
+    }
+  }
 
   /** Register every table as a temp view (for spark.sql use). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

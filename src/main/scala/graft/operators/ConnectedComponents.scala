@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -136,57 +136,30 @@ object ConnectedComponents {
     // can only be a fixed point when every component is a singleton —
     // and then round 2 is a no-op pass over nodes-only rows that just
     // confirms convergence.
-    val initObs = Observation()
-    var labels = symSelf
-      .groupBy(col("src")).agg(min(col("dst")).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .observe(initObs, sum(col("label").cast(DecimalType(38, 0))).as("lsum"))
-      .localCheckpoint()
     // convergence via the label-sum: labels only ever DECREASE
     // per-node, so an unchanged (exact, decimal) sum across a round is
     // equivalent to no label having changed — and it rides the round's
-    // own checkpoint action as an observe metric, no extra job and no
-    // per-row old-vs-new comparison. Metrics firing for the eager
-    // localCheckpoint action is observed-but-undocumented Spark
-    // behavior, so the wait is BOUNDED: Observation.get blocks until
-    // metrics land (normally milliseconds after the action, via the
-    // listener bus); if a Spark upgrade stopped reporting metrics for
-    // this action the loop would otherwise hang forever. After 30s,
-    // fall back to an explicit aggregation job over the checkpointed
-    // labels — same exact sum, one extra tiny job, no hang. The waiter
-    // is a DEDICATED daemon thread per call, not a shared-pool task: a
-    // permanently-blocked Observation.get must strand only its own
-    // inert thread, never starve an executor pool other code shares.
-    def lsum(o: Observation, checkpointed: DataFrame): Option[java.math.BigDecimal] = {
-      val box = new java.util.concurrent.LinkedBlockingQueue[AnyRef](1)
-      val waiter = new Thread(() =>
-        box.offer(try o.get catch { case e: Throwable => e }))
-      waiter.setDaemon(true)
-      waiter.start()
-      box.poll(30, java.util.concurrent.TimeUnit.SECONDS) match {
-        case m: Map[_, _] =>
-          Option(m.asInstanceOf[Map[String, Any]]("lsum"))
-            .map(_.asInstanceOf[java.math.BigDecimal])
-        case _ => // timeout (null) or a metrics-path failure
-          Option(checkpointed
-            .agg(sum(col("label").cast(DecimalType(38, 0))).as("lsum"))
-            .head.getDecimal(0))
-      }
+    // own checkpoint action as an observed metric
+    // ([[graft.core.Tables.checkpointObserved]]), no extra job and no
+    // per-row old-vs-new comparison. Each checkpoint is eager: it
+    // truncates lineage and materializes the round.
+    def checkpointed(round: DataFrame): (DataFrame, Option[java.math.BigDecimal]) = {
+      val (cp, s) = graft.core.Tables.checkpointObserved(
+        round, sum(col("label").cast(DecimalType(38, 0))))
+      (cp, Option(s).map(_.asInstanceOf[java.math.BigDecimal]))
     }
-    var prevSum = lsum(initObs, labels)
+    var (labels, prevSum) = checkpointed(symSelf
+      .groupBy(col("src")).agg(min(col("dst")).as("label"))
+      .select(col("src").as("id"), col("label")))
 
     var changed = true
     var it = 1 // the pre-loop aggregation was propagation round 1
     while (changed && it < maxIter) {
-      val obs = Observation()
-      val next = symSelf.join(labels, symSelf("src") === labels("id"))
-        .select(col("dst").as("nid"), col("label"))
-        .groupBy(col("nid")).agg(min(col("label")).as("label"))
-        .select(col("nid").as("id"), col("label"))
-        .observe(obs, sum(col("label").cast(DecimalType(38, 0))).as("lsum"))
-        .localCheckpoint() // eager: truncates lineage, materializes round,
-                           // and fires the observed convergence metric
-      val s = lsum(obs, next)
+      val (next, s) = checkpointed(
+        symSelf.join(labels, symSelf("src") === labels("id"))
+          .select(col("dst").as("nid"), col("label"))
+          .groupBy(col("nid")).agg(min(col("label")).as("label"))
+          .select(col("nid").as("id"), col("label")))
       changed = (prevSum, s) match {
         case (Some(a), Some(b)) => a.compareTo(b) != 0
         case (a, b) => a.isDefined != b.isDefined
@@ -291,20 +264,26 @@ object ConnectedComponents {
       aCol: String,
       bCol: String,
       broadcastNew: Boolean = true): DataFrame = {
-    val (lab, newNodes, altMap, release, local) =
-      foldPieces(labels, newEdges, aCol, bCol, broadcastNew)
-    try { // localCheckpoint is eager: materialized before release fires
-      val ext = lab.unionByName(newNodes)
-      val out = ext.join(hinted(altMap, broadcastNew),
+    def relabel(ext: DataFrame, altMap: DataFrame): DataFrame =
+      ext.join(hinted(altMap, broadcastNew),
           ext("component") === altMap("aid"), "left")
         .select(ext("id"),
           coalesce(col("acomp"), ext("component")).as("component"))
-      // the driver fold's pieces are all local relations with a no-op
-      // release — nothing downstream depends on persisted inputs, so
-      // the eager checkpoint would only add a materialization job
-      // (r17 JobProfile: 64 near-empty tasks protecting nothing)
-      if (local) out else out.localCheckpoint()
-    } finally release()
+    foldPieces(labels, newEdges, aCol, bCol, broadcastNew) match {
+      // the driver fold's pieces are local relations: nothing
+      // downstream depends on persisted inputs, so an eager checkpoint
+      // would only add a materialization job (r17 JobProfile: 64
+      // near-empty tasks protecting nothing)
+      case LocalFold(lab, fresh, alt) =>
+        val spark = lab.sparkSession
+        import spark.implicits._
+        relabel(lab.unionByName(fresh.map(n => (n, n)).toDF("id", "component")),
+          alt.toSeq.toDF("aid", "acomp"))
+      case DistFold(lab, newNodes, altMap, release) =>
+        // localCheckpoint is eager: materialized before release fires
+        try relabel(lab.unionByName(newNodes), altMap).localCheckpoint()
+        finally release()
+    }
   }
 
   /** The UPSERT form of [[incremental]]: only the rows a stored labels
@@ -325,25 +304,43 @@ object ConnectedComponents {
       newEdges: DataFrame,
       aCol: String,
       bCol: String,
-      broadcastNew: Boolean = true): DataFrame = {
-    val (lab, newNodes, altMap, release, local) =
-      foldPieces(labels, newEdges, aCol, bCol, broadcastNew)
-    try {
-      val changedOld = lab.join(hinted(altMap, broadcastNew),
-          lab("component") === altMap("aid"))
-        .filter(col("acomp") =!= lab("component"))
-        .select(lab("id"), col("acomp").as("component"))
-      val fresh = newNodes
-        .join(hinted(altMap, broadcastNew),
-          newNodes("component") === altMap("aid"), "left")
-        .select(newNodes("id"),
-          coalesce(col("acomp"), newNodes("component")).as("component"))
-      val out = changedOld.unionByName(fresh)
-      // localCheckpoint is eager: materialized before release fires;
-      // skipped for the driver fold (local pieces, no-op release —
-      // see incremental)
-      if (local) out else out.localCheckpoint()
-    } finally release()
+      broadcastNew: Boolean = true): DataFrame =
+    foldPieces(labels, newEdges, aCol, bCol, broadcastNew) match {
+      case f: LocalFold => localDelta(f)
+      case DistFold(lab, newNodes, altMap, release) =>
+        try {
+          val changedOld = lab.join(hinted(altMap, broadcastNew),
+              lab("component") === altMap("aid"))
+            .filter(col("acomp") =!= lab("component"))
+            .select(lab("id"), col("acomp").as("component"))
+          val fresh = newNodes
+            .join(hinted(altMap, broadcastNew),
+              newNodes("component") === altMap("aid"), "left")
+            .select(newNodes("id"),
+              coalesce(col("acomp"), newNodes("component")).as("component"))
+          // localCheckpoint is eager: materialized before release fires
+          changedOld.unionByName(fresh).localCheckpoint()
+        } finally release()
+    }
+
+  /** [[incrementalDelta]] over the driver fold: the changed rows of
+    * existing components come from ONE labels scan with the moved
+    * component ids pushed as an exact `In` predicate (none moved — a
+    * replayed batch — means no scan at all), the batch-new nodes map
+    * through the relabel map on the driver, and the delta returns as a
+    * LocalRelation: a caller persisting it writes driver rows, with no
+    * join, broadcast build or exchange in front of the write.
+    */
+  private def localDelta(f: LocalFold): DataFrame = {
+    val spark = f.lab.sparkSession
+    val moved = f.alt.filter { case (c, m) => c != m }
+    val changedOld =
+      if (moved.isEmpty) Array.empty[(Long, Long)]
+      else f.lab.filter(col("component").isInCollection(moved.keys.toSeq))
+        .collect().map(r => (r.getLong(0), moved(r.getLong(1))))
+    val fresh = f.fresh.map(n => (n, f.alt.getOrElse(n, n)))
+    import spark.implicits._
+    (changedOld.toSeq ++ fresh).toDF("id", "component")
   }
 
   /** Broadcast hint honoring the fold's `broadcastNew` escape hatch —
@@ -356,33 +353,70 @@ object ConnectedComponents {
   private def hinted(df: DataFrame, broadcastNew: Boolean): DataFrame =
     if (broadcastNew) broadcast(df) else df
 
-  /** Shared core of [[incremental]] / [[incrementalDelta]]: returns
-    * (existing labels, batch-introduced singleton rows, the
-    * contracted-component relabel map — built by running CC on the
-    * batch-bounded contracted graph — and a release hook for the
-    * persisted inputs, to call after materializing any derived
-    * output). The labels ∪ newNodes union is NOT materialized here:
-    * the delta path never reads it whole (only [[incremental]] does,
-    * and it derives the union itself), and persisting + counting it
-    * was a per-trigger O(corpus) scan-and-cache the maintenance loops
-    * paid for nothing.
+  /** The pieces [[foldPieces]] hands [[incremental]] /
+    * [[incrementalDelta]]: existing labels, batch-introduced singleton
+    * rows, and the contracted-component relabel map `(aid, acomp)`.
+    */
+  private sealed trait Fold
+
+  /** The driver arm's pieces: the batch-new nodes and the relabel map
+    * are plain driver data (the labels stay the caller's frame).
+    */
+  private final case class LocalFold(
+      lab: DataFrame, fresh: Seq[Long], alt: Map[Long, Long]) extends Fold
+
+  /** The distributed arm's pieces, with a release hook for the
+    * persisted inputs — call it after materializing any derived output.
+    */
+  private final case class DistFold(
+      lab: DataFrame, newNodes: DataFrame, altMap: DataFrame,
+      release: () => Unit) extends Fold
+
+  /** Shared core of [[incremental]] / [[incrementalDelta]]: the
+    * contracted-component relabel map is built by running CC on the
+    * batch-bounded contracted graph. The labels ∪ newNodes union is
+    * NOT materialized here: the delta path never reads it whole (only
+    * [[incremental]] does, and it derives the union itself), and
+    * persisting + counting it was a per-trigger O(corpus)
+    * scan-and-cache the maintenance loops paid for nothing.
     */
   private def foldPieces(
       labels: DataFrame,
       newEdges: DataFrame,
       aCol: String,
       bCol: String,
-      broadcastNew: Boolean = true):
-      (DataFrame, DataFrame, DataFrame, () => Unit, Boolean) = {
+      broadcastNew: Boolean = true): Fold = {
     // self-edges are kept in e0 (node derivation) and dropped only for
     // contraction: a batch node appearing ONLY in self-edges must still
     // get a singleton label row, exactly as [[run]] (whose minLabelLoop
     // keeps self-edges too) would label it — dedup pair generators
     // enforce a < b and never emit one, but the fold == full-recompute
     // identity should not depend on that
-    val e0 = newEdges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .distinct()
-      .persist()
+    val pairs = newEdges.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val longOnly = (pairs.schema.fields ++ labels.schema.fields).forall(
+      _.dataType == org.apache.spark.sql.types.LongType)
+    val cap = driverEdgeCap(labels.sparkSession)
+    // Streaming-cadence fast path: when the caller asserted
+    // batch-bounded edges, the WHOLE fold preamble (batch nodes, seen
+    // labels, contraction, min-label components) runs on driver-local
+    // data with ONE Spark job — a pushed-`In` fetch of the touched
+    // labels — instead of the distributed preamble's five-plus
+    // (seen-label checkpoint, new-node checkpoint, contracted-CC
+    // collect, broadcast builds). At a maintenance trigger's scale
+    // every job is a visible slice of the wall; the fixed floor was
+    // job count, not data. Edges that are already driver rows (the
+    // verified pairs of a streaming batch) are read and deduplicated
+    // in place; others are materialized and counted once first.
+    val local =
+      if (broadcastNew && longOnly && pairs.schema.forall(!_.nullable))
+        graft.core.Tables.localRows(pairs)
+          .map(_.map(r => (r.getLong(0), r.getLong(1))).distinct)
+      else None
+    local match {
+      case Some(es) if es.size <= cap => return foldPiecesDriver(labels, es)
+      case _ => ()
+    }
+    val e0 = pairs.distinct().persist()
     val e = e0.filter(col("src") =!= col("dst"))
     val release = () => { e0.unpersist(); () }
     try {
@@ -391,23 +425,10 @@ object ConnectedComponents {
       // arm never pays a wasted partial collect and the under-cap arm
       // collects straight from cache
       val edgeCount = e0.count()
-      // Streaming-cadence fast path: when the caller asserted
-      // batch-bounded edges, the WHOLE fold preamble (batch nodes, seen
-      // labels, contraction, min-label components) runs on driver-local
-      // data in TWO further Spark jobs — a cache-read collect of the
-      // batch edges, then a pushed-`In` fetch of the touched labels —
-      // instead of the distributed preamble's five-plus (seen-label
-      // checkpoint, new-node checkpoint, contracted-CC collect,
-      // broadcast builds). At a maintenance trigger's scale every job
-      // is a visible slice of the wall (TriggerProfile round 11); the
-      // fixed floor was job count, not data.
-      if (broadcastNew && edgeCount <= driverEdgeCap(labels.sparkSession)) {
-        val d = foldPiecesDriver(labels, e0)
-        if (d.isDefined) {
-          release()
-          val (lab, fresh, alt, rel) = d.get
-          return (lab, fresh, alt, rel, true)
-        }
+      if (broadcastNew && longOnly && edgeCount <= cap) {
+        val es = e0.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        release()
+        return foldPiecesDriver(labels, es)
       }
       val lab = labels.select(col("id"), col("component"))
       // ONE broadcast-semi probe of the corpus-sized labels fetches the
@@ -462,7 +483,7 @@ object ConnectedComponents {
       // still reference it. A failing session must not accumulate
       // edge-list copies in executor storage, so the throw path
       // releases too.
-      (lab, newNodes, altMap, release, false)
+      DistFold(lab, newNodes, altMap, release)
     } catch { case t: Throwable => release(); throw t }
   }
 
@@ -504,27 +525,17 @@ object ConnectedComponents {
     find
   }
 
-  /** The driver-side fast path of [[foldPieces]]: collect the batch's
-    * already-persisted-and-counted distinct edges (the caller gated on
-    * [[driverEdgeCap]], so the collect is a bounded cache read — no
-    * partial-evaluation waste on any arm), fetch the labels of
-    * exactly the batch-incident nodes with one pushed-`In` scan, then
-    * run contraction + min-label union-find on plain driver data. The
-    * returned pieces are LocalRelations (joins against them broadcast
-    * with no build job) and are row-identical to the distributed
-    * preamble's — `ConnectedComponentsSpec`/`ClusterMaintenanceSpec`
-    * pin fold == full-recompute across both arms. `None` when the id
-    * columns are not Long (the distributed path continues on the same
-    * persisted edges).
+  /** The driver-side fast path of [[foldPieces]]: over the batch's
+    * distinct driver-held edges (the caller gated on [[driverEdgeCap]]
+    * and on Long id columns), fetch the labels of exactly the
+    * batch-incident nodes with one pushed-`In` scan, then run
+    * contraction + min-label union-find on plain driver data. The
+    * pieces are row-identical to the distributed preamble's —
+    * `ConnectedComponentsSpec`/`ClusterMaintenanceSpec` pin
+    * fold == full-recompute across both arms.
     */
   private def foldPiecesDriver(
-      labels: DataFrame,
-      e0: DataFrame): Option[(DataFrame, DataFrame, DataFrame, () => Unit)] = {
-    val spark = labels.sparkSession
-    val longOnly = (e0.schema.fields ++ labels.schema.fields).forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (!longOnly) return None
-    val edges = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
+      labels: DataFrame, edges: Seq[(Long, Long)]): LocalFold = {
     // batch nodes — self-edge-only nodes included (they still need a
     // singleton label row, matching the distributed path's e0)
     val nodeSet = new java.util.LinkedHashSet[Long]()
@@ -548,16 +559,11 @@ object ConnectedComponents {
     // drop as self-loops exactly like the distributed contraction
     val contracted = edges.collect {
       case (u, w) if u != w && comp(u) != comp(w) => (comp(u), comp(w))
-    }
+    }.toArray
     val find = unionFind(contracted)
-    val altNodes = new java.util.LinkedHashSet[Long]()
-    contracted.foreach { case (u, w) => altNodes.add(u); altNodes.add(w) }
-    val alt = new scala.collection.mutable.ArrayBuffer[(Long, Long)](altNodes.size)
-    altNodes.forEach(n => alt += ((n, find(n))))
-    val fresh = nodes.filterNot(seen.containsKey).map(n => (n, n)).toSeq
-    import spark.implicits._
-    Some((lab, fresh.toDF("id", "component"),
-      alt.toSeq.toDF("aid", "acomp"), () => ()))
+    val alt = contracted.iterator.flatMap { case (u, w) => Iterator(u, w) }
+      .map(n => n -> find(n)).toMap
+    LocalFold(lab, nodes.filterNot(seen.containsKey).toSeq, alt)
   }
 
   /** Min-label components of a BATCH-BOUNDED contracted graph computed

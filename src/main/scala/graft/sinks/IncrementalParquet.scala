@@ -304,23 +304,7 @@ object IncrementalParquet {
       batchRows: => DataFrame): Unit = {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    // heal compaction crash state FIRST, every trigger: a crashed full
-    // compact's retired partition or a crashed minor firing's
-    // duplicates would otherwise stay visible to this trigger's reads
-    // (the maintenance loops read the table right after the append) —
-    // and a post-crash append that recreates a retired partition's
-    // live dir is exactly what turns the stale `.retired` copy into
-    // silent data loss at the next full compact. Healthy-path cost:
-    // three existence checks plus one listing of the (tiny) _compact
-    // dir — the O(partitions) orphan walk runs only behind the
-    // crashed-firing sentinel (see recoverMinorState).
-    if (fs.exists(dir)) {
-      recoverRetired(fs, dir, partCol)
-      // a minor firing raises _compact/.inflight BEFORE installing any
-      // c-file, so every crash window (including a first-ever firing)
-      // is visible from the _compact listing alone
-      recoverMinorState(fs, dir, partCol)
-    }
+    recover(spark, dirStr, partCol)
     val marker = new Path(dir, s"_ingested/b$batchId")
     if (fs.exists(marker)) return // acked: this batch is fully installed
     pinLayout(fs, dir, partCol,
@@ -360,6 +344,32 @@ object IncrementalParquet {
     // without it, which ackedNoteWatermark treats as unparsed
     if (note.nonEmpty) ack.write((note + "\n").getBytes("UTF-8"))
     ack.close()
+  }
+
+  /** Heal a table's compaction crash state — [[appendIdempotent]] runs
+    * this FIRST, every trigger: a crashed full compact's retired
+    * partition or a crashed minor firing's duplicates would otherwise
+    * stay visible to this trigger's reads (the maintenance loops read
+    * the table right after the append) — and a post-crash append that
+    * recreates a retired partition's live dir is exactly what turns the
+    * stale `.retired` copy into silent data loss at the next full
+    * compact. A caller that reads the table WHILE its append runs
+    * calls this before starting either, so the append's own call finds
+    * nothing to move under the reader. Healthy-path cost: three
+    * existence checks plus one listing of the (tiny) _compact dir — the
+    * O(partitions) orphan walk runs only behind the crashed-firing
+    * sentinel (see recoverMinorState).
+    */
+  def recover(spark: SparkSession, dirStr: String, partCol: String): Unit = {
+    val dir = new Path(dirStr)
+    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) {
+      recoverRetired(fs, dir, partCol)
+      // a minor firing raises _compact/.inflight BEFORE installing any
+      // c-file, so every crash window (including a first-ever firing)
+      // is visible from the _compact listing alone
+      recoverMinorState(fs, dir, partCol)
+    }
   }
 
   /** Whether `batchId` is already acked into `dirStr` — callers use
@@ -486,7 +496,10 @@ object IncrementalParquet {
     * gating on emptiness (`if (delta nonempty) upsert`) previously paid
     * a full `isEmpty` job to re-scan rows whose count the write already
     * determined; at streaming cadence that job was a visible slice of
-    * every trigger's wall.
+    * every trigger's wall. A computed result that is already driver
+    * rows (a LocalRelation) is written as one task and handed back as
+    * those same rows — the persisted copy is what a replay reads, and
+    * the caller's write needs no read-back job.
     */
   def batchScopedResultCounted(
       spark: SparkSession, dirStr: String, batchId: Long)(
@@ -495,11 +508,15 @@ object IncrementalParquet {
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     val data = new Path(dir, s"b$batchId")
     val marker = new Path(dir, s"_acked/b$batchId")
-    if (!fs.exists(marker)) {
+    val computed = if (fs.exists(marker)) None else {
       val df = compute
       val stage = new Path(dir, s".b$batchId.stage")
       fs.delete(stage, true)
-      df.write.mode("overwrite").parquet(stage.toString)
+      // a driver-held result writes as ONE task and one file: a local
+      // relation's scan would otherwise spread a dozen rows over
+      // min(rows, cores) tasks and files
+      (if (graft.core.Tables.localRows(df).isDefined) df.coalesce(1) else df)
+        .write.mode("overwrite").parquet(stage.toString)
       fs.delete(data, true) // unacked crash leftovers from this batch
       if (!fs.rename(stage, data))
         throw new IllegalStateException(s"rename $stage -> $data failed")
@@ -518,8 +535,18 @@ object IncrementalParquet {
           case _ => ()
         }
       }
+      Some(df)
     }
-    (spark.read.parquet(data.toString), parquetRowCount(fs, data))
+    computed.flatMap(df =>
+        graft.core.Tables.localRows(df).map(rs => (df, rs.size.toLong)))
+      .getOrElse {
+        // the computing call knows the stored schema, so its read-back
+        // infers nothing (inference is a footer-reading Spark job); a
+        // replay of a stored result infers it
+        val stored = computed.fold(spark.read)(df => spark.read.schema(df.schema))
+          .parquet(data.toString)
+        (stored, parquetRowCount(fs, data))
+      }
   }
 
   /** Exact row count of a parquet directory from file footers alone —

@@ -4,6 +4,7 @@ import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.core.Model
 
@@ -399,9 +400,22 @@ object Upsert {
     */
   def readKeyedTable(
       spark: SparkSession, tableDir: String, bucketCol: String = "kb"): DataFrame = {
-    val df = spark.read.parquet(tableDir)
+    val dir = new org.apache.hadoop.fs.Path(tableDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val df = openTable(spark, fs, dir, readBuckets(fs, dir))
     if (df.columns.contains(bucketCol)) df.drop(bucketCol) else df
   }
+
+  /** Open a keyed table. A pinned table is a bucketed table this sink
+    * wrote, so its schema is its files' recorded data schema plus `kb`:
+    * it opens with that schema (one footer read on the driver) instead
+    * of paying the inference job. Legacy and pinless tables infer.
+    */
+  private def openTable(
+      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, pinned: Option[Int]): DataFrame =
+    pinned.flatMap(_ => bucketedSchema(fs, dir))
+      .fold(spark.read)(spark.read.schema(_)).parquet(dir.toString)
 
   /** The bucket-count pin of a partitioned keyed table. The count is a
     * LAYOUT property, not a per-call choice: rebucketing with a
@@ -571,12 +585,6 @@ object Upsert {
       updateColumns: Seq[String] = Model.DefaultUpdateColumns,
       numBuckets: Int = 64): Unit = {
     import org.apache.hadoop.fs.{FileSystem, Path}
-    // ONE evaluation of the caller's stage: the touched-bucket collect
-    // and the merged write below both consume it, and a
-    // non-deterministic lineage evaluated twice could stage rows into
-    // a bucket absent from `touched` — whose files the tmp cleanup
-    // would then silently discard
-    val stage = stage0.localCheckpoint()
     val dir = new Path(tableDir)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir.getParent, s".${dir.getName}.stage")
@@ -591,7 +599,7 @@ object Upsert {
       // directory before the (atomic) install, so a bucketed table can
       // never exist without its pin — no crash window between table
       // birth and pin write
-      stage.withColumn("kb", keyBucket(col(key), numBuckets))
+      stage0.withColumn("kb", keyBucket(col(key), numBuckets))
         .write.partitionBy("kb").parquet(tmp.toString)
       writeBuckets(fs, tmp, numBuckets)
       if (!fs.rename(tmp, dir))
@@ -599,13 +607,14 @@ object Upsert {
       return
     }
 
-    val existing = spark.read.parquet(tableDir)
+    val pinned = readBuckets(fs, dir)
+    val existing = openTable(spark, fs, dir, pinned)
     if (!existing.columns.contains("kb")) {
       // legacy flat layout: one-time O(table) migration to buckets.
       // The pin travels inside the staged directory (see create path);
       // the crash window between the two renames is covered by the
       // .old restore in the recovery preamble above.
-      val migrated = merge(existing, stage, key, updateColumns)
+      val migrated = merge(existing, stage0, key, updateColumns)
         .withColumn("kb", keyBucket(col(key), numBuckets))
       migrated.write.partitionBy("kb").parquet(tmp.toString)
       writeBuckets(fs, tmp, numBuckets)
@@ -629,7 +638,7 @@ object Upsert {
     // stored row sits in keyBucket(key, numBuckets). O(table), but only
     // on the rare pinless path — the same order as the migration that
     // produced such a table.
-    val nb = readBuckets(fs, dir).getOrElse {
+    val nb = pinned.getOrElse {
       val mismatched = existing
         .filter(keyBucket(col(key), numBuckets) =!= col("kb"))
         .limit(1).count()
@@ -642,10 +651,24 @@ object Upsert {
       writeBuckets(fs, dir, numBuckets)
       numBuckets
     }
-    val withBucket = stage.withColumn("kb", keyBucket(col(key), nb))
-    // staged bucket ids: bounded by nb, a tiny driver-side list
-    val touched = withBucket.select(col("kb")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    // ONE evaluation of the caller's stage: the touched-bucket set and
+    // the merged write below both consume it, and a non-deterministic
+    // lineage evaluated twice could stage rows into a bucket absent
+    // from `touched` — whose files the tmp cleanup would then silently
+    // discard. A driver-held stage is already evaluated: the SAME
+    // keyBucket expression runs over its rows in the optimizer, with
+    // no job. Otherwise the staged bucket ids (bounded by nb) ride the
+    // checkpoint job as an observed metric, so they cost no job of
+    // their own.
+    val (stage, touched) = graft.core.Tables.localRows(stage0) match {
+      case Some(_) =>
+        (stage0, stage0.select(keyBucket(col(key), nb)).collect()
+          .map(_.getInt(0)).distinct.sorted.toSeq)
+      case None =>
+        val (cp, kbs) = graft.core.Tables.checkpointObserved(
+          stage0, collect_set(keyBucket(col(key), nb)))
+        (cp, kbs.asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted)
+    }
     // partition-pruned target read: only touched buckets are scanned
     val target = existing
       .filter(col("kb").isin(touched.map(Int.box): _*))
@@ -666,6 +689,31 @@ object Upsert {
     }
     fs.delete(retiredDir, true)
     fs.delete(tmp, true)
+  }
+
+  /** The read schema of a bucketed table this sink wrote: the data
+    * schema Spark records in a data file's footer (one file, read on
+    * the driver) plus the integer `kb` partition column. None when no
+    * data file carries a Spark schema.
+    */
+  private def bucketedSchema(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Option[StructType] = {
+    val visible = (p: org.apache.hadoop.fs.Path) =>
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val file = fs.listStatus(dir).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("kb="))
+      .flatMap(st => fs.listStatus(st.getPath).iterator)
+      .find(st => st.isFile && visible(st.getPath))
+    file.flatMap { st =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, fs.getConf))
+      val json = try rd.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally rd.close()
+      Option(json).map(j =>
+        DataType.fromJson(j).asInstanceOf[StructType].add("kb", IntegerType))
+    }
   }
 
   /** Parquet-table upsert used by tests and small serving tables: read

@@ -30,11 +30,17 @@ object ListingSource {
 
   /** Explode to one row per post with the reference's field names.
     * Null-safe exactly like the Python `.get()` chain: absent fields
-    * stay null; `limit` caps rows like Fetch_reddit.py:170-171.
+    * stay null. `limit` caps the posts taken from EACH listing
+    * document (its first `limit` children): [[graft.jobs.FetchJob]]
+    * reads one page per call, so this is the reference's per-call cap
+    * (Fetch_reddit.py:170-171). The cap is a `slice` inside the
+    * explode, not a `.limit`: a limit node names its generated counter
+    * from a JVM-wide id, so every fetch compiled fresh classes and ran
+    * a second, single-partition job.
     */
   def posts(listing: DataFrame, limit: Int = Int.MaxValue): DataFrame =
     listing
-      .select(explode(col("data.children")).as("c"))
+      .select(explode(slice(col("data.children"), 1, limit)).as("c"))
       .select(
         col("c.data.name").as("name"),
         col("c.data.id").as("id"),
@@ -46,5 +52,4 @@ object ListingSource {
         col("c.data.permalink").as("permalink"),
         col("c.data.subreddit").as("subreddit"),
         col("c.data.link_flair_text").as("link_flair_text"))
-      .limit(limit)
 }

@@ -798,7 +798,8 @@ object StreamingPipeline {
     *
     *  1. the batch's signatures append into the stored table
     *     ([[graft.analytics.DedupQueries.appendToSignaturesIdempotent]]
-    *     — ack markers make a replay a no-op);
+    *     — ack markers make a replay a no-op); once the table exists
+    *     the append runs beside steps 2–3, which do not depend on it;
     *  2. near-dup pairs TOUCHING the batch are derived from the stored
     *     table at |batch| × colliders cost
     *     ([[graft.analytics.DedupQueries.batchVerifiedPairs]] — the
@@ -832,29 +833,65 @@ object StreamingPipeline {
       batch: DataFrame, batchId: Long,
       broadcastBatch: Boolean = true,
       threshold: Double = 0.5): Unit = {
-    graft.analytics.DedupQueries.appendToSignaturesIdempotent(
-      batch, sigDir, batchId)
+    import graft.analytics.DedupQueries
     // heal a previous upsert's crashed swap BEFORE reading labels: the
     // delta is computed FROM the table, so deferring recovery to the
     // write (where the upsert would run it anyway) is too late — a
     // replay would fold against a table missing a retired bucket and
     // write a permanently-divergent delta over the recovered rows
     Upsert.recoverParquetPartitioned(spark, labelsDir)
-    val (delta, nDelta) =
-      graft.sinks.IncrementalParquet.batchScopedResultCounted(
-        spark, deltaDirFor(labelsDir), batchId) {
-      val edges = graft.analytics.DedupQueries.batchVerifiedPairs(
-        spark, sigDir, batch, threshold, broadcastBatch)
-      graft.operators.ConnectedComponents.incrementalDelta(
-        clusterLabels(spark, labelsDir), edges, "doc_id_a", "doc_id_b",
-        broadcastNew = broadcastBatch)
+    // Once the signature table exists, the batch's append runs BESIDE
+    // the rest of the trigger: the driver-side pair derivation reads
+    // "stored − batch ∪ in hand", the same rows whether or not the
+    // append has landed (DedupQueries.batchVerifiedPairsLocal), and the
+    // labels fold never reads the signature table. The table's
+    // compaction crash state is healed first, so the append moves
+    // nothing under the reader. The append runs on its own thread,
+    // which inherits this thread's Spark job properties. The table's
+    // first batch, and the distributed arm, append first.
+    val fs = new org.apache.hadoop.fs.Path(sigDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val beside = broadcastBatch && fs.exists(new org.apache.hadoop.fs.Path(sigDir))
+    val append = new java.util.concurrent.FutureTask[Unit](() =>
+      DedupQueries.appendToSignaturesIdempotent(batch, sigDir, batchId))
+    def appended(): Unit =
+      try append.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    if (beside) {
+      graft.sinks.IncrementalParquet.recover(spark, sigDir, "bkt")
+      new Thread(append, s"graft-signature-append-$batchId").start()
+    } else {
+      append.run()
+      appended()
     }
-    // the emptiness gate reads the stored delta's FOOTER count — the
-    // delta is parquet-backed either way (no recompute), and an
-    // isEmpty job per trigger was pure fixed floor
-    if (nDelta > 0)
-      Upsert.upsertParquetPartitioned(spark, delta, labelsDir,
-        key = "id", updateColumns = Seq("component"), numBuckets = 16)
+    val folded = scala.util.Try {
+      val (delta, nDelta) =
+        graft.sinks.IncrementalParquet.batchScopedResultCounted(
+          spark, deltaDirFor(labelsDir), batchId) {
+        val edges = (if (broadcastBatch)
+            DedupQueries.batchVerifiedPairsLocal(spark, sigDir, batch, threshold)
+          else None).getOrElse {
+          appended()
+          DedupQueries.batchVerifiedPairsDistributed(
+            spark, sigDir, batch, threshold, broadcastBatch)
+        }
+        graft.operators.ConnectedComponents.incrementalDelta(
+          clusterLabels(spark, labelsDir), edges, "doc_id_a", "doc_id_b",
+          broadcastNew = broadcastBatch)
+      }
+      // the emptiness gate reads the stored delta's FOOTER count — the
+      // delta is parquet-backed either way (no recompute), and an
+      // isEmpty job per trigger was pure fixed floor
+      if (nDelta > 0)
+        Upsert.upsertParquetPartitioned(spark, delta, labelsDir,
+          key = "id", updateColumns = Seq("component"), numBuckets = 16)
+    }
+    // await the append before rethrowing either failure: a failed fold
+    // must not leave an orphaned writer that a restart's replay of the
+    // same batch would race on the same table and staging dirs
+    val written = scala.util.Try(appended())
+    folded.get
+    written.get
   }
 
   /** The persisted-delta sibling of a labels table (dot-prefixed, like
@@ -876,7 +913,7 @@ object StreamingPipeline {
     val p = new Path(labelsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      graft.core.Tables.parquetCachedSchema(spark, labelsDir)
+      Upsert.readKeyedTable(spark, labelsDir)
         .select(col("id"), col("component"))
     else {
       import spark.implicits._

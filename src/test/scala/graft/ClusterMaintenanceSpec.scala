@@ -277,6 +277,49 @@ class ClusterMaintenanceSpec extends SparkSpec {
     }
   }
 
+  test("a steady-state maintenance batch runs at most 14 Spark jobs") {
+    // the trigger's fixed floor is its job count, not its data: each
+    // batch-sized step (verify, edge dedup, fold, delta build, upsert
+    // bookkeeping) must run on driver rows without a job of its own
+    withTempDir { root =>
+      val sig = root.resolve("sig").toString
+      val labels = root.resolve("labels").toString
+      StreamingPipeline.maintainClusters(spark, sig, labels,
+        docs.filter(col("doc_id") % 2 === 0), 0L)
+      StreamingPipeline.maintainClusters(spark, sig, labels,
+        docs.filter(col("doc_id") % 4 === 1), 1L)
+      val before = labelMap(labels)
+      val (_, jobs) = jobsOf {
+        StreamingPipeline.maintainClusters(spark, sig, labels,
+          docs.filter(col("doc_id") % 4 === 3), 2L)
+      }
+      info(s"$jobs Spark jobs")
+      assert(labelMap(labels) != before, "vacuous: the batch wrote no delta")
+      assert(jobs <= 14, s"$jobs Spark jobs for one steady-state batch")
+    }
+  }
+
+  test("driver-local fold and forced distributed fold give identical labels") {
+    val batches = (0 until 3).map(w => docs.filter(col("doc_id") % 3 === w))
+    def fold(root: Path): Map[Long, Long] = {
+      val sig = root.resolve("sig").toString
+      val labels = root.resolve("labels").toString
+      batches.zipWithIndex.foreach { case (b, i) =>
+        StreamingPipeline.maintainClusters(spark, sig, labels, b, i.toLong)
+      }
+      labelMap(labels)
+    }
+    val local = withTempDir(fold)
+    // the test seams force every distributed arm: pair probe, shingle
+    // fetch, verify joins, fold preamble and delta joins
+    val distributed = withConf("graft.dedup.driverFrameCap", "0") {
+      withConf("graft.cc.driverEdgeCap", "0")(withTempDir(fold))
+    }
+    assert(local.nonEmpty)
+    assert(local == distributed)
+    assert(local == fullRecompute(docs))
+  }
+
   test("replaying a folded batch is a no-op: empty delta, same labels") {
     withTempDir { root =>
       val sig = root.resolve("sig").toString

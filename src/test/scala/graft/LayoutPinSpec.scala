@@ -22,20 +22,6 @@ import graft.sinks.IncrementalParquet
   */
 class LayoutPinSpec extends SparkSpec {
 
-  /** Run `body` with a session conf set, restoring (or clearing) it
-    * after — the suite shares one session, so conf leaks would poison
-    * sibling tests.
-    */
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def withoutConf[T](key: String)(body: => T): T = {
     val prior = spark.conf.getOption(key)
     spark.conf.unset(key)

@@ -47,6 +47,40 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.move(part, incoming.resolve(name))
   }
 
+  /** Run `body` with a session conf set, restoring (or clearing) it
+    * after — the suites share one session, so conf leaks would poison
+    * sibling tests.
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran (any thread), counted by a listener once the bus has drained.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   def withTempDir[T](f: java.nio.file.Path => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("graft-test")
     try f(dir)

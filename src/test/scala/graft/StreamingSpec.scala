@@ -503,6 +503,33 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a restarted AvailableNow maintainer reuses its generated code") {
+    // every start runs on a cloned session; the codegen cache must still
+    // hit for the restarted query's identical plans
+    withTempDir { root =>
+      import spark.implicits._
+      val incoming = Files.createDirectory(root.resolve("incoming"))
+      val pst = root.resolve("pst").toString
+      def absorb(): Unit = StreamingPipeline.startPostingsIngest(spark,
+        incoming.toString, pst, root.resolve("dl").toString,
+        root.resolve("ckpt").toString, Trigger.AvailableNow())
+        .awaitTermination(120000)
+      land(Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
+        .toDF("doc_id", "text"), incoming, "b0.parquet")
+      absorb()
+      land(Seq((3L, "gamma delta epsilon")).toDF("doc_id", "text"),
+        incoming, "b1.parquet")
+      val compiled = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME
+      val c0 = compiled.getCount
+      absorb()
+      val compiles = compiled.getCount - c0
+      info(s"$compiles classes compiled")
+      assert(spark.read.parquet(pst).filter($"doc_id" === 3L).count() == 3L)
+      assert(compiles <= 4, s"$compiles classes compiled by the restart")
+    }
+  }
+
   test("hourlyEventCounts compiles to a watermarked streaming agg") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
