@@ -366,7 +366,7 @@ object RetrievalQueries {
       docs.filter(col("doc_id") < nQueries)
         .select(col("doc_id"), col("text")).collect().toSeq
         .sortBy(_.getLong(0))
-        .flatMap(r => salientTerms(r.getString(1))
+        .flatMap(r => Option(r.getString(1)).toSeq.flatMap(salientTerms)
           .map(t => (r.getLong(0), t)))
         .toDF("q_id", "term")
     } else queryTermsAll(docs.filter(col("doc_id") < nQueries))
@@ -463,8 +463,8 @@ object RetrievalQueries {
     * the round-12 ServeProfile lesson). Semantics mirror
     * [[queryTermsAll]] exactly: whitespace tokens (the same java.util
     * .regex \\S+ class Spark's regexp_extract_all compiles) of the
-    * lowercased text (Locale.ROOT — the [[phraseSearchText]]
-    * discipline), top [[TermsPerQuery]] by (tf desc, term asc). The
+    * text lowercased by Spark's own lower() ([[sparkLower]]), top
+    * [[TermsPerQuery]] by (tf desc, term asc). The
     * q_bm25_text / q_hybrid_text hash gates pin the identity
     * cross-engine.
     */
@@ -472,7 +472,7 @@ object RetrievalQueries {
       s: SparkSession, queries: Seq[String]): DataFrame = {
     import s.implicits._
     queries.zipWithIndex.flatMap { case (text, i) =>
-      salientTerms(text).map(t => (-(i + 1).toLong, t))
+      Option(text).toSeq.flatMap(salientTerms).map(t => (-(i + 1).toLong, t))
     }.toDF("q_id", "term")
   }
 
@@ -484,7 +484,7 @@ object RetrievalQueries {
     * hash-gated by q_bm25_text / q_hybrid_text).
     */
   private def salientTerms(text: String): Seq[String] =
-    "\\S+".r.findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSeq
+    "\\S+".r.findAllIn(sparkLower(text)).toSeq
       .groupBy(identity).view.mapValues(_.size).toSeq
       .sortWith { case ((t1, n1), (t2, n2)) =>
         n1 > n2 || (n1 == n2 && utf8Compare(t1, t2) < 0) }
@@ -500,14 +500,27 @@ object RetrievalQueries {
     * property-pinned in RetrievalSpec.
     */
   private[graft] def topShingle(text: String, n: Int): Option[String] = {
-    val ts = "\\S+".r.findAllIn(text.toLowerCase(java.util.Locale.ROOT))
-      .toSeq
+    val ts = "\\S+".r.findAllIn(sparkLower(text)).toSeq
     if (ts.length < n) None
     else Some(ts.sliding(n).map(_.mkString(" ")).toSeq
       .groupBy(identity).view.mapValues(_.size).toSeq
       .sortWith { case ((g1, c1), (g2, c2)) =>
         c1 > c2 || (c1 == c2 && utf8Compare(g1, g2) < 0) }
       .head._1)
+  }
+
+  /** `text` lowercased by Spark's own lower() — the expression the
+    * corpus-side tokenizers run, evaluated eagerly on the driver (the
+    * [[Tables.valueBucketsLocal]] discipline), so a driver-side query
+    * derivation folds case exactly as the stored index did: under any
+    * JVM default locale, and under either setting of
+    * `spark.sql.icu.caseMappings.enabled` (ICU root-locale mappings by
+    * default, the JVM's default-locale ones when it is off).
+    */
+  private[graft] def sparkLower(text: String): String = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+    Lower(Literal(text))
+      .eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString
   }
 
   /** Unsigned UTF-8 byte comparison — the string order Spark
@@ -545,7 +558,15 @@ object RetrievalQueries {
     */
   private[graft] def bm25RankedFromDirs(s: SparkSession,
       dirs: (String, String),
-      qt: DataFrame, termBound: Long): DataFrame = {
+      qt: DataFrame, termBound: Long): DataFrame =
+    bm25Served(s, dirs, qt, termBound).run
+
+  /** [[bm25RankedFromDirs]] as a [[Tables.Served]] body: the pruned
+    * postings, the doc stats and the query terms are its leaves, and
+    * the literal arm's ranking is laid out by the request's tier.
+    */
+  private def bm25Served(s: SparkSession, dirs: (String, String),
+      qt: DataFrame, termBound: Long): Tables.Served = {
     val (pstDir, dlDir) = dirs
     val maxLit = s.conf.get(
       PushdownTermsMaxKey, PushdownTermsMaxDefault.toString).toLong
@@ -590,11 +611,13 @@ object RetrievalQueries {
       .applyTombstones(s, dlDir, "doc_id")(
         Tables.parquetCachedSchema(s, dlDir))
       .select(col("doc_id"), col("dl"))
-    // the bulk-query arm also drops the query-frame broadcast hint:
-    // at the query scales that pick it, the term frame itself may be
-    // too large to force through the driver
-    bm25Ranked(qt, pstLive, dlT, gsLocal(s, dlDir),
-      broadcastQueries = literalArm)
+    val gs = gsLocal(s, dlDir)
+    // the bulk-query arm keeps the planner shape at any size: at the
+    // query scales that pick it, the term frame itself may be too
+    // large to force through the driver or into one task
+    Tables.Served(Seq(pstLive, dlT, qt), tier =>
+      bm25Ranked(qt, pstLive, dlT, gs,
+        if (literalArm) tier else Tables.Tier.Planner))
   }
 
   private val storedGsScalars =
@@ -645,41 +668,54 @@ object RetrievalQueries {
     * the corpus-state relations: `pst(doc_id, term, tf)` already
     * restricted to query terms, `dl(doc_id, dl)`, and the 1-row
     * `gs(n, totlen)`. Shared by the one-shot, served and hybrid forms —
-    * only WHERE the state comes from differs (recompute vs stored).
+    * only WHERE the state comes from differs (recompute vs stored) —
+    * and laid out by `tier` ([[Tables.Tier]]): interactive batches
+    * broadcast the (queries × TermsPerQuery) term frame, the bulk-query
+    * JOIN arm ([[Tables.Tier.Planner]]) leaves it to the planner so an
+    * unbounded offline query set shuffle-joins on term instead of being
+    * forced through a driver-sized broadcast (AQE still broadcasts
+    * small frames on its own).
     */
   private[graft] def bm25Ranked(
       qt: DataFrame, pst: DataFrame, dl: DataFrame, gs: DataFrame,
-      broadcastQueries: Boolean = true): DataFrame = {
-    // interactive batches broadcast the (queries × TermsPerQuery) term
-    // frame; the bulk-query JOIN arm drops the hint so an unbounded
-    // offline query set shuffle-joins on term instead of being forced
-    // through a driver-sized broadcast (AQE still broadcasts small
-    // frames on its own)
-    def qtSide(d: DataFrame) = if (broadcastQueries) broadcast(d) else d
+      tier: Tables.Tier = Tables.Tier.Broadcast): DataFrame = {
     // term-partition barrier: both consumers below (the df aggregation
     // and the scoring join) read `p` behind the SAME exchange, so
     // ReuseExchange runs the postings subtree ONCE — without it each
     // reference re-executes the tokenize/scan chain (the q_top_terms
     // lesson; 5 full-corpus tokenizer passes in this query's first
-    // plan shape, 1 after)
-    val p = pst.repartition(col("term"))
+    // plan shape, 1 after). The one-partition tier reads its pruned
+    // postings twice in the same task instead: the barrier would be
+    // an exchange, i.e. a job.
+    val p = if (tier.onePartition) tier.leaf(pst) else pst.repartition(col("term"))
     // df of the query terms only — derived from the already-filtered
-    // postings, so the aggregation is posting-list-sized; the 1-row
-    // (n, totlen) scalars ride the broadcast idf frame so their
-    // subtree is referenced exactly once in the whole plan
+    // postings, so the aggregation is posting-list-sized
     val dft = p.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val idf = dft.crossJoin(broadcast(gs)).select(col("term"),
-      TextQueries.quantizeLog2(log2(lit(1.0) +
-        (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))).as("idf"),
-      col("n"), col("totlen"))
+    def idfOf(n: Column) = TextQueries.quantizeLog2(log2(lit(1.0) +
+      (n - col("df") + lit(0.5)) / (col("df") + lit(0.5)))).as("idf")
+    // the 1-row (n, totlen) scalars: driver-held ones fold in as
+    // literals in the one-partition tier (the cross join below is a
+    // BroadcastNestedLoopJoin, i.e. a job); otherwise they ride the
+    // broadcast idf frame so their subtree is referenced exactly once
+    // in the whole plan
+    val idf = Tables.localRows(gs).filter(_ => tier.onePartition) match {
+      case Some(Seq(r)) =>
+        dft.select(col("term"), idfOf(lit(r.getLong(0))),
+          lit(r.getLong(0)).as("n"), lit(r.getLong(1)).as("totlen"))
+      case _ =>
+        dft.crossJoin(broadcast(gs)).select(col("term"), idfOf(col("n")),
+          col("n"), col("totlen"))
+    }
     // one exact integer ratio per (candidate, term): decimal(38,0)
     // products (overflow-proof — see [[tfNorm]]), ONE cast to double
     // per side, one IEEE division, one IEEE multiply
-    val sc = qtSide(qt)
-      .join(p.withColumnRenamed("doc_id", "n_id"), Seq("term"))
+    val cand = tier.single(tier.small(qt)
+        .join(p.withColumnRenamed("doc_id", "n_id"), Seq("term")))
       .filter(col("n_id") =!= col("q_id"))
-      .join(broadcast(idf), Seq("term"))
-      .join(dl.withColumnRenamed("doc_id", "n_id"), Seq("n_id"))
+    val withIdf = tier.single(cand.join(
+      if (tier.onePartition) tier.small(idf) else broadcast(idf), Seq("term")))
+    val sc = withIdf
+      .join(tier.leaf(dl).withColumnRenamed("doc_id", "n_id"), Seq("n_id"))
       .select(col("q_id"), col("n_id"), col("term"),
         (col("idf") *
           tfNorm(col("tf"), col("dl"), col("n"), col("totlen"))).as("sc"))
@@ -1087,20 +1123,22 @@ object RetrievalQueries {
     docs.filter(col("doc_id") < NQueries)
       .select(col("doc_id"), col("text")).collect().toSeq
       .sortBy(_.getLong(0))
-      .flatMap(r => topShingle(r.getString(1), 2)
+      .flatMap(r => Option(r.getString(1)).flatMap(topShingle(_, 2))
         .map(p => (r.getLong(0), p)))
       .toDF("q_id", "phrase")
   }
 
   /** The phrase ranking tail shared by the one-shot and served forms:
     * `m(n_id, bigram, occurrences)` — candidates already restricted to
-    * the query phrases — joined to the broadcast phrase set, ranked by
-    * occurrence count. Integer-exact end to end.
+    * the query phrases — joined to the (broadcast, above the one-task
+    * bound) phrase set, ranked by occurrence count. Integer-exact end
+    * to end.
     */
-  private def phraseRank(qp: DataFrame, m: DataFrame): DataFrame = {
+  private def phraseRank(qp: DataFrame, m: DataFrame,
+      tier: Tables.Tier = Tables.Tier.Broadcast): DataFrame = {
     val wr = Window.partitionBy(col("q_id"))
       .orderBy(col("occurrences").desc, col("n_id"))
-    m.join(broadcast(qp), col("bigram") === col("phrase") &&
+    m.join(tier.small(qp), col("bigram") === col("phrase") &&
         col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"), col("occurrences"))
       .withColumn("rank", row_number().over(wr).cast(IntegerType))
@@ -1118,7 +1156,9 @@ object RetrievalQueries {
     * and a group-by that demands all n−1 distinct offsets per
     * (phrase, doc, base). Output: (q_id = input position, n_id, rank,
     * occurrences), occurrence-ranked like the gated forms. Phrases
-    * are lowercased and whitespace-tokenized with the corpus rule.
+    * are lowercased and whitespace-tokenized with the corpus rule. The
+    * pruned scan and the triples are the request's leaves
+    * ([[Tables.tier]]).
     */
   def phraseSearchText(
       s: SparkSession, dir: String, phrases: Seq[String]): DataFrame = {
@@ -1127,11 +1167,7 @@ object RetrievalQueries {
     val nb = DedupQueries.tableBuckets(s, bpstDir)
     // (q_id, bigram, off, need) triples — driver-sized by definition
     val triples = phrases.zipWithIndex.flatMap { case (p, i) =>
-      // Locale.ROOT: the stored index lowercased via Spark's
-      // locale-free lower(); a tr_TR default locale would dotless-ı
-      // "Istanbul" here and never match a stored bigram
-      val ts = p.trim.toLowerCase(java.util.Locale.ROOT)
-        .split("\\s+").toSeq.filter(_.nonEmpty)
+      val ts = sparkLower(p.trim).split("\\s+").toSeq.filter(_.nonEmpty)
       require(ts.length >= 2,
         s"phrase '$p' has ${ts.length} token(s); phrases need n >= 2")
       ts.sliding(2).zipWithIndex.map { case (bg, k) =>
@@ -1143,12 +1179,12 @@ object RetrievalQueries {
     val pruned = storedPhraseLive(s, bpstDir)
       .filter(col("bkt").isin(needBkts: _*) && col("bigram").isin(need: _*))
       .select(col("doc_id"), col("bigram"), col("pos"))
-    val tripleDf = broadcast(
-      triples.toDF("q_id", "bigram", "off", "need"))
+    val tripleDf = triples.toDF("q_id", "bigram", "off", "need")
+    val tier = Tables.tier(pruned, tripleDf)
     // every (constituent bigram, stored position) pair votes for base
     // offset pos − off; a base with all n−1 distinct offsets is one
     // phrase occurrence
-    val hits = pruned.join(tripleDf, Seq("bigram"))
+    val hits = tier.leaf(pruned).join(tier.small(tripleDf), Seq("bigram"))
       .select(col("q_id"), col("doc_id"), col("need"),
         (col("pos") - col("off")).as("base"), col("off"))
       .groupBy(col("q_id"), col("doc_id"), col("need"), col("base"))
@@ -1181,12 +1217,14 @@ object RetrievalQueries {
       Tables.valueBuckets(qp.select(col("phrase")), nb)
     // occurrence counts are a group-by over the PRUNED positional
     // scan — posting-list-sized, never corpus-sized
-    val m = storedPhraseLive(s, bpstDir)
+    val pruned = storedPhraseLive(s, bpstDir)
       .filter(col("bkt").isin(bkts: _*) && col("bigram").isin(phrases: _*))
+    val tier = Tables.tier(pruned, qp)
+    val m = tier.leaf(pruned)
       .groupBy(col("doc_id"), col("bigram"))
       .agg(count(lit(1)).as("occurrences"))
       .withColumnRenamed("doc_id", "n_id")
-    phraseRank(qp, m)
+    phraseRank(qp, m, tier)
   }
 
   /** q_phrase_search's DuckDB mirror — shared verbatim by
@@ -1802,8 +1840,9 @@ object RetrievalQueries {
     * `ct`: q_id, n_id, cos_rank), rrf = Σ 1/(60+rank) — IEEE-exact,
     * no libm — ranked and cut at [[TopK]].
     */
-  private def rrfFuse(bt: DataFrame, ct: DataFrame): DataFrame =
-    rrfFusedRanked(bt, ct)
+  private def rrfFuse(bt: DataFrame, ct: DataFrame,
+      tier: Tables.Tier = Tables.Tier.Planner): DataFrame =
+    rrfFusedRanked(bt, ct, tier)
       .select(col("q_id"), col("n_id"), col("rank"), col("bm_rank"),
         col("cos_rank"),
         (floor(col("rrf") * 1000000) / 1000000).as("rrf_score"))
@@ -1815,10 +1854,12 @@ object RetrievalQueries {
     * chain (MMR's rel must be the raw score, not the display-rounded
     * one).
     */
-  private def rrfFusedRanked(bt: DataFrame, ct: DataFrame): DataFrame = {
+  private def rrfFusedRanked(bt: DataFrame, ct: DataFrame,
+      tier: Tables.Tier = Tables.Tier.Planner): DataFrame = {
     val wr = Window.partitionBy(col("q_id"))
       .orderBy(col("rrf").desc, col("n_id"))
-    bt.join(ct, Seq("q_id", "n_id"), "full_outer")
+    tier.single(tier.leaf(bt).join(tier.leaf(ct), Seq("q_id", "n_id"),
+        "full_outer"))
       .select(col("q_id"), col("n_id"),
         (coalesce(lit(1.0) / (lit(60) + col("bm_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("cos_rank")), lit(0.0)))
@@ -1844,13 +1885,38 @@ object RetrievalQueries {
     })
 
   /** Evaluate `fa` on the arm pool while `fb` runs on the calling
-    * thread; rethrows `fa`'s failure unwrapped.
+    * thread; rethrows `fa`'s failure unwrapped. A pool thread keeps the
+    * Spark local properties of whichever thread created it, so the arm
+    * runs under the caller's job group and description (copied in,
+    * cleared after): its jobs belong to the caller's request. If `fb`
+    * throws, the arm's jobs are cancelled (by a per-call job tag) until
+    * the arm ends, so a failed request leaves no job running.
     */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
+  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
+    val sc = SparkSession.active.sparkContext
+    val props = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+    val tag = s"graft-fusion-arm-${java.util.UUID.randomUUID}"
     val f = armPool.submit(new java.util.concurrent.Callable[A] {
-      def call(): A = fa
+      def call(): A = {
+        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        sc.addJobTag(tag)
+        try fa
+        finally {
+          sc.removeJobTag(tag)
+          props.foreach { case (k, _) => sc.setLocalProperty(k, null) }
+        }
+      }
     })
-    val b = fb
+    val b = try fb catch {
+      case e: Throwable =>
+        while (!f.isDone) {
+          sc.cancelJobsWithTag(tag)
+          try f.get(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+          catch { case _: Exception => () }
+        }
+        throw e
+    }
     val a = try f.get() catch {
       case e: java.util.concurrent.ExecutionException => throw e.getCause
     }
@@ -2143,6 +2209,10 @@ object RetrievalQueries {
 
   /** The EXACT candidate pool + greedy selection over an arbitrary
     * query frame (q_id, qv, qn) — the oracle-exact small-corpus form.
+    * The embeddings and the query frame are the request's leaves
+    * ([[Tables.tier]]): within one task's bound the theta join is a
+    * one-task CartesianProduct and the grouped greedy kernel runs in
+    * the same partition, so the whole request is one job.
     */
   private def mmrForQueries(s: SparkSession, dir: String, q: DataFrame,
       pool: Int, picks: Int, lam: Double, numQueries: Long): DataFrame = {
@@ -2156,13 +2226,16 @@ object RetrievalQueries {
     // and AQE decides (the BM25 JOIN-arm discipline) — the theta-join
     // pool is then a shuffle join, still never all-pairs materialized
     // past the rank cut
-    val qSide = if (mmrBulk(s, numQueries)) q else broadcast(q)
-    val cand = c.join(qSide, col("n_id") =!= col("q_id"))
+    val tier =
+      if (mmrBulk(s, numQueries)) Tables.Tier.Planner else Tables.tier(c, q)
+    val cand = tier.single(tier.single(c).join(tier.cross(q),
+        col("n_id") =!= col("q_id")))
       .withColumn("rel", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
       .withColumn("rk", row_number().over(wrel))
       .filter(col("rk") <= pool)
       .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
-    mmrSelect(cand, picks, lam, numQueries)
+    if (tier.onePartition) mmrGreedyDistributed(cand, picks, lam)
+    else mmrSelect(cand, picks, lam, numQueries)
   }
 
   /** Exact-cosine re-rank depth of the ADC candidate stage feeding the
@@ -2328,7 +2401,10 @@ object RetrievalQueries {
     * queries × pool candidate VECTORS to the driver and running the
     * selection single-threaded. Same compiled kernel as the driver
     * arm — identical output by construction (and pinned row-identical
-    * by the arm-identity spec on random pools).
+    * by the arm-identity spec on random pools). Over a one-partition
+    * candidate frame ([[Tables.Tier.OnePartition]]) the grouping plans
+    * no exchange, so the exact tier's interactive request runs the
+    * greedy inside its one job instead of collecting the pool.
     */
   private[graft] def mmrGreedyDistributed(
       cand0: DataFrame, picks: Int, lam: Double): DataFrame = {
@@ -2536,21 +2612,33 @@ object RetrievalQueries {
     * arrives as raw text + raw vectors, never staged into the corpus.
     * Query ids are input positions; both arms ride negative internal
     * ids so corpus self-exclusion never fires for external queries.
+    * One tier for the whole request, from both arms' leaves
+    * ([[Tables.tier]]): within one task's bound the two arms and the
+    * fusion run in one partition as ONE job; above it the arms are
+    * collected concurrently and fused driver-side ([[rrfFuseSized]]).
     */
   def hybridSearch(s: SparkSession, dir: String,
-      queries: Seq[(String, Array[Float])]): DataFrame =
-    rrfFuseSized(s, queries.size.toLong,
-      bm25RankedFromIndex(s, dir,
-          externalQueryTerms(s, queries.map(_._1)),
-          queries.size.toLong * TermsPerQuery)
-        .filter(col("rank") <= FuseDepth)
-        .select(col("q_id"), col("n_id"), col("rank").as("bm_rank")),
-      SimilarityQueries.annRankedForVectors(
-          s, dir, queries.map(_._2), nprobe = 2, topC = 24,
-          depth = FuseDepth)
-        .select(col("q_id"), col("n_id"), col("rank").as("cos_rank")))
+      queries: Seq[(String, Array[Float])]): DataFrame = {
+    val n = queries.size.toLong
+    // the arms share no subtree, so their driver-side construction
+    // (index lookups, pruned-scan listing, query-side derivation)
+    // overlaps on the arm pool
+    val (bm, ann) = inParallel(
+      bm25Served(s, incrementalPostingsDirs(s, dir),
+        externalQueryTerms(s, queries.map(_._1)), n * TermsPerQuery),
+      SimilarityQueries.annServedForVectors(
+        s, dir, queries.map(_._2), nprobe = 2, topC = 24, depth = FuseDepth))
+    def bt(tier: Tables.Tier) = bm.plan(tier)
+      .filter(col("rank") <= FuseDepth)
+      .select(col("q_id"), col("n_id"), col("rank").as("bm_rank"))
+    def ct(tier: Tables.Tier) = ann.plan(tier)
+      .select(col("q_id"), col("n_id"), col("rank").as("cos_rank"))
+    val tier = Tables.tier(bm.leaves ++ ann.leaves: _*)
+    (if (tier.onePartition) rrfFuse(bt(tier), ct(tier), tier)
+     else rrfFuseSized(s, n, bt(tier), ct(tier)))
       .withColumn("q_id", -col("q_id") - 1)
       .orderBy(col("q_id"), col("rank"))
+  }
 
   /** Diversified hybrid retrieval — MMR over the RRF-fused candidate
     * list: rel is the RAW fused rrf (IEEE-exact, a sum of at most two
@@ -2587,8 +2675,8 @@ object RetrievalQueries {
       numQueries: Long, picks: Int, lam: Double,
       mkBt: => DataFrame, mkCt: => DataFrame): DataFrame =
     if (mmrBulk(s, numQueries))
-      mmrSelect(fusedCandidates(s, dir, rrfFusedRanked(mkBt, mkCt),
-        bulk = true), picks, lam, numQueries)
+      mmrSelect(fusedCandidates(s, dir, rrfFusedRanked(mkBt, mkCt)),
+        picks, lam, numQueries)
     else {
       val (btRows, ctRows) = inParallel(collectArm(mkBt), collectArm(mkCt))
       mmrGreedyLocal(s, dir,
@@ -2656,12 +2744,10 @@ object RetrievalQueries {
 
   /** The BULK MMR candidate frame (q_id, n_id, rel, cv, cn) over a
     * fused ranking: the triples stay distributed and the vectors
-    * arrive by un-hinted join (see [[mmrIndexedCandidates]]). The
-    * interactive tier no longer builds this frame — it fuses
-    * driver-side and point-fetches inside [[mmrGreedyLocal]] (r18).
+    * arrive by un-hinted join (see [[mmrIndexedCandidates]]).
     */
   private def fusedCandidates(s: SparkSession, dir: String,
-      fused: DataFrame, bulk: Boolean = true): DataFrame =
+      fused: DataFrame): DataFrame =
     t(s, dir, "embeddings")
       .select(col("vec_id").as("n_id"), col("embedding").as("cv"),
         l2Norm(col("embedding")).as("cn"))
@@ -2996,7 +3082,7 @@ object RetrievalQueries {
         val qpPairs = docs.filter(col("doc_id") < NQueries)
           .select(col("doc_id"), col("text")).collect().toSeq
           .sortBy(_.getLong(0))
-          .flatMap(r => topShingle(r.getString(1), 3)
+          .flatMap(r => Option(r.getString(1)).flatMap(topShingle(_, 3))
             .map(p => (r.getLong(0), p)))
         val qp = qpPairs.toDF("q_id", "phrase")
         // the phrase set is driver-sized (one trigram per query doc):

@@ -920,10 +920,17 @@ object SimilarityQueries {
     */
   def adcCandidatesFromCodes(
       codes: DataFrame, probes: DataFrame, probedCells: Seq[Int],
-      topC: Int = 8): DataFrame = {
+      topC: Int = 8): DataFrame =
+    adcCandidates(codes.filter(col("cell").isin(probedCells: _*)), probes,
+      topC, Tables.Tier.Broadcast)
+
+  /** [[adcCandidatesFromCodes]] over codes already pruned to the probed
+    * cells, laid out by the request's tier.
+    */
+  private def adcCandidates(pruned: DataFrame, probes: DataFrame,
+      topC: Int, tier: Tables.Tier): DataFrame = {
     val wCand = Window.partitionBy(col("q_id")).orderBy(col("ad2"), col("n_id"))
-    codes.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes),
+    tier.leaf(pruned).join(tier.small(probes),
         col("cell") === col("pcell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         PqExpressions.adcScore(col("cl"), col("dl"), 8).as("ad2"))
@@ -943,8 +950,8 @@ object SimilarityQueries {
       e: DataFrame, codes: DataFrame, cbIvf: Array[Double],
       cbPq: Array[Double], nQueries: Int, nprobe: Int = 2,
       topC: Int = 8, depth: Int = 3): DataFrame =
-    ivfPqServeForQueries(e, codes, cbIvf, cbPq,
-      e.filter(col("vec_id") < nQueries), nprobe, topC, depth)
+    ivfPqServed(e, codes, cbIvf, cbPq,
+      e.filter(col("vec_id") < nQueries), nprobe, topC, depth).run
 
   /** ANN top-k for EXTERNAL query vectors against the stored codes
     * table — the user-facing vector-search entry (the catalog serves
@@ -971,12 +978,20 @@ object SimilarityQueries {
     */
   private[analytics] def annRankedForVectors(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], nprobe: Int, topC: Int,
-      depth: Int): DataFrame = {
+      depth: Int): DataFrame =
+    annServedForVectors(s, dir, vectors, nprobe, topC, depth).run
+
+  /** [[annRankedForVectors]] as a [[Tables.Served]] body — hybrid
+    * search picks one tier from its leaves and the BM25 arm's.
+    */
+  private[analytics] def annServedForVectors(s: SparkSession, dir: String,
+      vectors: Seq[Array[Float]], nprobe: Int, topC: Int,
+      depth: Int): Tables.Served = {
     import s.implicits._
     val qdf = vectors.zipWithIndex
       .map { case (v, i) => (-(i + 1).toLong, v) }
       .toDF("vec_id", "embedding")
-    servedRankedForQueryFrame(s, dir, qdf, nprobe, topC, depth)
+    servedForQueryFrame(s, dir, qdf, nprobe, topC, depth)
   }
 
   /** The pinned-codebook stored-codes serve over an ARBITRARY query
@@ -988,21 +1003,29 @@ object SimilarityQueries {
     */
   private[analytics] def servedRankedForQueryFrame(s: SparkSession,
       dir: String, queryVecs: DataFrame, nprobe: Int, topC: Int,
-      depth: Int): DataFrame = {
-    val e = t(s, dir, "embeddings")
+      depth: Int): DataFrame =
+    servedForQueryFrame(s, dir, queryVecs, nprobe, topC, depth).run
+
+  private def servedForQueryFrame(s: SparkSession, dir: String,
+      queryVecs: DataFrame, nprobe: Int, topC: Int,
+      depth: Int): Tables.Served = {
     val cb = pinnedCodebook(s, dir)
     val codes = storedCodesLive(s, incrementalCodesPath(s, dir, cb, cb))
-    ivfPqServeForQueries(e, codes, cb, cb, queryVecs, nprobe, topC, depth)
+    ivfPqServed(t(s, dir, "embeddings"), codes, cb, cb, queryVecs, nprobe,
+      topC, depth)
   }
 
   /** The stored-codes serve body over an arbitrary query-vector frame
     * (vec_id, embedding) — shared by the corpus-query form above and
-    * the external-vector entry [[annSearchVectors]].
+    * the external-vector entry [[annSearchVectors]] — as a
+    * [[Tables.Served]] body: the codes pruned to the probed cells, the
+    * embeddings the re-rank fetches from, and the two local query
+    * relations are its leaves.
     */
-  private def ivfPqServeForQueries(
+  private def ivfPqServed(
       e: DataFrame, codes: DataFrame, cbIvf: Array[Double],
       cbPq: Array[Double], queryVecs: DataFrame, nprobe: Int,
-      topC: Int, depth: Int): DataFrame = {
+      topC: Int, depth: Int): Tables.Served = {
     // ONE tiny collect covers the whole query side: nQueries vectors
     // with their probe cells, subspace distance lookups, raw vector
     // and norm — ≤ nQueries rows of driver metadata. The probe table,
@@ -1041,8 +1064,10 @@ object SimilarityQueries {
     val qn = localDf(s, qnSchema, qRows.toSeq.map(r =>
       org.apache.spark.sql.Row(r.getLong(0), r.getAs[Any]("qv"),
         r.getDouble(4))))
-    exactReRankTail(e, adcCandidatesFromCodes(codes, probes, cells, topC),
-      qn, depth)
+    val pruned = codes.filter(col("cell").isin(cells: _*))
+    Tables.Served(Seq(pruned, e, probes, qn), tier =>
+      exactReRankTail(e, adcCandidates(pruned, probes, topC, tier), qn,
+        depth, tier))
   }
 
   /** The pinned-codebook stored-index serve as a RANKED relation at an
@@ -1218,7 +1243,7 @@ object SimilarityQueries {
     */
   private def exactReRankTail(
       e: DataFrame, cand: DataFrame, qn: DataFrame,
-      depth: Int = 3): DataFrame = {
+      depth: Int, tier: Tables.Tier): DataFrame = {
     val s = e.sparkSession
     val threshold = s.conf.get(
       ReRankFetchBytesKey, ReRankFetchBytesDefault.toString).toLong
@@ -1234,10 +1259,11 @@ object SimilarityQueries {
       }
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
-    val fetched = probe.join(broadcast(candDf), col("vec_id") === col("n_id"))
+    val fetched = tier.single(tier.leaf(probe)
+        .join(tier.small(candDf), col("vec_id") === col("n_id")))
       .select(col("q_id"), col("n_id"), col("ad2"),
         col("embedding").as("nv"), l2Norm(col("embedding")).as("cn"))
-    fetched.join(broadcast(qn), col("q_id") === col("q_id2"))
+    fetched.join(tier.small(qn), col("q_id") === col("q_id2"))
       .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("cn")))
       .withColumn("rank", row_number().over(wRank).cast(IntegerType))
       .filter(col("rank") <= depth)
@@ -1284,7 +1310,9 @@ object SimilarityQueries {
     val qn = localDf(s, qnSchema, qRows.groupBy(_.getLong(0)).values.toSeq
       .map(_.head).map(r => org.apache.spark.sql.Row(
         r.getLong(0), r.getAs[Any]("qv"), r.getDouble(4))))
-    exactReRankTail(e, adcCandidatesFromCodes(codes, probes, cells, topC = 8), qn)
+    val pruned = codes.filter(col("cell").isin(cells: _*))
+    val tier = Tables.tier(pruned, e, probes, qn)
+    exactReRankTail(e, adcCandidates(pruned, probes, 8, tier), qn, 3, tier)
   }
 
   /** One unrolled per-subspace PQ k-means iteration as DuckDB CTEs

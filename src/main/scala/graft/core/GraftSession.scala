@@ -74,10 +74,23 @@ object GraftSession {
       // engine adds no per-session artifacts, so nothing needs the
       // isolation.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config(MaxSinglePartitionBytes, Long.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Joins whose children are ALL single-partition already plan no
+    * exchange, unless a child's size estimate passes this conf (128 MB
+    * by default), when Spark re-shuffles for parallelism. The
+    * one-partition serve tier ([[Tables.Tier]]) picks one partition
+    * from its leaves' sizes; the estimates this check reads are of join
+    * outputs, which without CBO multiply their children's sizes, so a
+    * re-rank join over a few hundred KB of inputs "exceeded" it and
+    * ran as five jobs instead of one. Raised so the tier's own bound
+    * decides; it touches no join with a multi-partition child.
+    */
+  private val MaxSinglePartitionBytes = "spark.sql.maxSinglePartitionBytes"
 
   /** Apply engine defaults to an externally built session (e.g.
     * Verify/Bench). Static confs cannot be set here: such a session
@@ -90,6 +103,7 @@ object GraftSession {
     spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "512")
     spark.conf.set(
       "spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
+    spark.conf.set(MaxSinglePartitionBytes, Long.MaxValue.toString)
     spark
   }
 }

@@ -143,6 +143,87 @@ object Tables {
       case _ => None
     }
 
+  /** The execution shape of one request's plan. Every Spark job costs a
+    * scheduler round trip, and AQE runs each exchange and broadcast of
+    * a plan as a job of its own, so an interactive request over a few
+    * hundred KB of pruned index paid ~10 jobs for data one task reads
+    * in milliseconds. In the [[Tier.OnePartition]] tier every leaf is
+    * one partition and every join a shuffle-hash join of one-partition
+    * sides, so Spark plans no exchange and no broadcast and the whole
+    * request runs as ONE job. The other tiers are the distributed
+    * shapes: [[Tier.Broadcast]] broadcasts the driver-sized join sides
+    * (the interactive shape above the one-task bound), [[Tier.Planner]]
+    * leaves every side to the planner (the bulk-query shape, whose
+    * query side may outgrow a broadcast).
+    */
+  sealed abstract class Tier(val onePartition: Boolean) {
+    /** A leaf of the request: one partition in the one-partition tier,
+      * as-is otherwise. The shuffle-hash hint keeps the planner from
+      * broadcasting a one-partition join side (a broadcast is a job).
+      */
+    def leaf(df: DataFrame): DataFrame =
+      if (onePartition) df.coalesce(1).hint("shuffle_hash") else df
+    /** A driver-sized side of an equi-join. */
+    def small(df: DataFrame): DataFrame
+    /** The driver-sized side of a theta join (no equi key): in the
+      * one-partition tier a CartesianProduct side, which over two
+      * one-partition sides runs as one task.
+      */
+    def cross(df: DataFrame): DataFrame
+    /** Exactly one partition in the one-partition tier, unhinted: a
+      * theta-join side, or a join's output that feeds another join or
+      * comes out of a full-outer or theta join. Spark skips the
+      * exchanges of a join only when every child is exactly
+      * SinglePartition; an inner shuffle-hash join reports a
+      * PartitioningCollection (enough for a window or an aggregate, not
+      * for the next join), a full-outer or cartesian one an
+      * UnknownPartitioning. Each coalesce also ends a
+      * whole-stage-codegen stage, so it goes only where needed.
+      */
+    def single(df: DataFrame): DataFrame =
+      if (onePartition) df.coalesce(1) else df
+  }
+
+  object Tier {
+    case object OnePartition extends Tier(true) {
+      def small(df: DataFrame): DataFrame = leaf(df)
+      def cross(df: DataFrame): DataFrame =
+        df.coalesce(1).hint("shuffle_replicate_nl")
+    }
+    case object Broadcast extends Tier(false) {
+      def small(df: DataFrame): DataFrame = broadcast(df)
+      def cross(df: DataFrame): DataFrame = broadcast(df)
+    }
+    case object Planner extends Tier(false) {
+      def small(df: DataFrame): DataFrame = df
+      def cross(df: DataFrame): DataFrame = df
+    }
+  }
+
+  /** The tier of one request, picked once from its leaves (the
+    * partition-pruned index scans and the local query relations): the
+    * sum of their optimized-plan size estimates against
+    * `spark.sql.files.maxPartitionBytes`, Spark's own bound on the bytes
+    * one task reads. A request within it runs in
+    * [[Tier.OnePartition]]; one above it keeps the distributed
+    * [[Tier.Broadcast]] shape.
+    */
+  def tier(leaves: DataFrame*): Tier = {
+    val bound = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      leaves.head.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"))
+    val bytes = leaves.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+    if (bytes <= bound) Tier.OnePartition else Tier.Broadcast
+  }
+
+  /** A request body written once against [[Tier]]: its leaves, and its
+    * plan over whichever tier the leaves pick. A caller that serves
+    * several bodies in one request (hybrid search's two arms) picks
+    * one tier from all their leaves.
+    */
+  final case class Served(leaves: Seq[DataFrame], plan: Tier => DataFrame) {
+    def run: DataFrame = plan(tier(leaves: _*))
+  }
+
   /** Eagerly local-checkpoint `df` with the aggregate `metric`
     * observed on the same job: returns the checkpointed frame and the
     * metric's value over exactly its rows, with no second job. Metrics

@@ -150,8 +150,9 @@ class PlanSpec extends SparkSpec {
     // codes table: cell assignment and PQ encoding were paid ONCE at
     // index build; the serve plan must contain neither kernel, score
     // candidates by ADC over stored codes, and never shuffle the corpus
-    // before candidate ranking
-    val p = plan("q_ann_ivfpq")
+    // before candidate ranking. The broadcast shape is the distributed
+    // tier's (the one-partition tier is pinned below).
+    val p = withDistributedServes(plan("q_ann_ivfpq"))
     assert(count(p, "nearest_cell_16\\(") == 0, p.take(3000))
     assert(count(p, "pq_encode_16x8") == 0, p.take(3000))
     assert(p.contains("adc_score"), p.take(3000))
@@ -183,8 +184,9 @@ class PlanSpec extends SparkSpec {
       "no corpus-side kernels in the query plan") {
     // cell assignment and residual PQ encoding were paid ONCE at index
     // build; the serve plan reads the partitioned codes table, scores
-    // by ADC, and never runs an encode kernel over the corpus
-    val p = plan("q_ann_ivfpq_residual")
+    // by ADC, and never runs an encode kernel over the corpus (the
+    // distributed tier's shape; the one-partition tier is pinned below)
+    val p = withDistributedServes(plan("q_ann_ivfpq_residual"))
     assert(count(p, "nearest_cell_16\\(") == 0, p.take(3000))
     assert(count(p, "pq_encode_16x8") == 0, p.take(3000))
     assert(p.contains("adc_score"), p.take(3000))
@@ -697,7 +699,7 @@ class PlanSpec extends SparkSpec {
     // (their own tests above); here the diversified tail's claim is
     // pinned: after the arms, everything is query-batch-sized — the
     // candidate-vector fetch prunes the embeddings scan to candidate
-    // ids inside fusedCandidates' collect, and the final plan is the
+    // ids inside mmrGreedyLocal's fetch, and the final plan is the
     // driver-greedy local relation
     val p = plan("q_search_diversified")
     assert(!p.contains("embeddings.parquet") &&
@@ -708,7 +710,9 @@ class PlanSpec extends SparkSpec {
 
   test("q_mmr_diversify: the 5-step greedy loop runs over checkpointed " +
       "local relations — the corpus scan never re-executes per step") {
-    val p = plan("q_mmr_diversify")
+    // the distributed tier (the one-partition tier runs the grouped
+    // greedy kernel inside its one job, pinned below)
+    val p = withDistributedServes(plan("q_mmr_diversify"))
     // the candidate + pairwise frames are localCheckpoint-materialized
     // BEFORE the selection loop, so the final plan reads ExistingRDDs
     // and contains NO embeddings scan at all
@@ -716,5 +720,53 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"),
       p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(2000))
+  }
+
+  /** Executed-plan text of a catalog query in the one-partition serve
+    * tier, which the test corpus's stored-index serves all take.
+    */
+  private def onePartitionPlan(name: String): String = {
+    val p = plan(name)
+    assert(!p.contains("Exchange"), s"$name plans an exchange:\n" + p.take(4000))
+    p
+  }
+
+  private def scansOf(p: String, table: String): Seq[String] =
+    p.linesIterator.filter(l => l.contains("FileScan") && l.contains(table)).toSeq
+
+  test("one-partition tier: the stored-codes ANN serves plan no exchange " +
+      "and no broadcast, score by ADC over stored codes pruned to the " +
+      "probed cells, and run no corpus-side kernel") {
+    for (q <- Seq("q_ann_ivfpq", "q_ann_ivfpq_residual", "q_ann_codes_served")) {
+      val p = onePartitionPlan(q)
+      assert(p.contains("adc_score"), p.take(3000))
+      assert(count(p, "nearest_cell_16\\(") == 0 &&
+        count(p, "pq_encode_16x8") == 0, p.take(3000))
+      val codeScans = scansOf(p, "codes")
+      assert(codeScans.nonEmpty && codeScans.forall(l =>
+        "PartitionFilters: \\[[^\\]]*cell#\\d+ (IN|INSET) ".r.findFirstIn(l).nonEmpty),
+        codeScans.mkString("\n").take(2000))
+    }
+  }
+
+  test("one-partition tier: the stored-index BM25 and phrase serves plan " +
+      "no exchange and no broadcast over pruned bkt/In(...) scans") {
+    val bm = onePartitionPlan("q_bm25_served")
+    val pst = scansOf(bm, "/pst")
+    assert(pst.nonEmpty && pst.forall(l =>
+      l.contains("PartitionFilters: [bkt") && l.contains("In(term")),
+      pst.mkString("\n").take(2000))
+    val ph = onePartitionPlan("q_phrase_served")
+    val bpst = scansOf(ph, "/bpst")
+    assert(bpst.nonEmpty && bpst.forall(l =>
+      l.contains("PartitionFilters: [bkt") && l.contains("In(bigram")),
+      bpst.mkString("\n").take(2000))
+  }
+
+  test("one-partition tier: exact MMR runs its theta join as a one-task " +
+      "CartesianProduct, with no exchange and no broadcast") {
+    val p = onePartitionPlan("q_mmr_diversify")
+    assert(p.contains("CartesianProduct"), p.take(3000))
+    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 }

@@ -995,9 +995,21 @@ class RetrievalSpec extends SparkSpec {
   // tie-break bug class).
   // ------------------------------------------------------------------
 
+  /** `body` under a Turkish JVM default locale, where the JVM's own
+    * default-locale lowercasing maps 'I' to dotless 'ı'; the driver
+    * derivations must still fold case exactly as Spark's lower().
+    */
+  private def underTurkishLocale[T](body: => T): T = {
+    val prior = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try body finally java.util.Locale.setDefault(prior)
+  }
+
   test("property: externalQueryTerms == queryTermsAll on 120+ random " +
       "unicode texts (supplementary plane, mixed case, ragged " +
       "whitespace, tf ties at the salient-term boundary)") {
+    // also a NULL text, and the whole property again under a Turkish
+    // default locale
     import spark.implicits._
     val rnd = new scala.util.Random(1701)
     // token pool chosen to be ADVERSARIAL for the twin's two known
@@ -1019,27 +1031,36 @@ class RetrievalSpec extends SparkSpec {
       // pick ￮ (EF BF AE < F0 9F 98 80)
       "a a b b ￮ 😀",
       "😀 ￮ a a b b",
-      "ß ß SS ss İ i̇")
+      "ß ß SS ss İ i̇",
+      // the NULL text drops in both arms, as lower(NULL) explodes to
+      // no rows
+      null, "ISTANBUL Istanbul istanbul İstanbul III")
     val texts = crafted ++ Seq.fill(120)(randText())
-    val expected = RetrievalQueries.queryTermsAll(
-        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-          .toDF("doc_id", "text"))
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.map(_.getString(1)).toSet).toMap
-    val got = RetrievalQueries.externalQueryTerms(spark, texts)
-      .collect().groupBy(r => -r.getLong(0) - 1)
-      .view.mapValues(_.map(_.getString(1)).toSet).toMap
-    assert(got.keySet == expected.keySet,
-      s"texts with terms differ: ${got.keySet.diff(expected.keySet)} / " +
-        s"${expected.keySet.diff(got.keySet)}")
-    for ((i, terms) <- expected)
-      assert(got(i) == terms,
-        s"text #$i '${texts(i.toInt)}': driver ${got(i)} vs spark $terms")
+    def check(): Unit = {
+      val expected = RetrievalQueries.queryTermsAll(
+          texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+            .toDF("doc_id", "text"))
+        .collect().groupBy(_.getLong(0))
+        .view.mapValues(_.map(_.getString(1)).toSet).toMap
+      val got = RetrievalQueries.externalQueryTerms(spark, texts)
+        .collect().groupBy(r => -r.getLong(0) - 1)
+        .view.mapValues(_.map(_.getString(1)).toSet).toMap
+      assert(got.keySet == expected.keySet,
+        s"texts with terms differ: ${got.keySet.diff(expected.keySet)} / " +
+          s"${expected.keySet.diff(got.keySet)}")
+      for ((i, terms) <- expected)
+        assert(got(i) == terms,
+          s"text #$i '${texts(i.toInt)}': driver ${got(i)} vs spark $terms")
+    }
+    check()
+    underTurkishLocale(check())
   }
 
   test("property: driver-side topShingle == the distributed " +
       "shingle+tf-window derivation on 120+ random unicode texts, " +
       "n = 2 and 3 (the r18 localized queryPhrases / trigram gate)") {
+    // also a NULL text, and the whole property again under a Turkish
+    // default locale
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(1702)
@@ -1053,9 +1074,10 @@ class RetrievalSpec extends SparkSpec {
     }
     val crafted = Seq("", " ", "one", "one two",
       // equal-count shingle tie where UTF-16 and UTF-8 orders disagree
-      "￮ x 😀 x ￮ x 😀 x", "a b a b b a")
+      "￮ x 😀 x ￮ x 😀 x", "a b a b b a",
+      null, "I I İ Istanbul I İ")
     val texts = crafted ++ Seq.fill(120)(randText())
-    for (n <- Seq(2, 3)) {
+    def check(n: Int, locale: String): Unit = {
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val wq = Window.partitionBy(col("doc_id"))
@@ -1069,12 +1091,18 @@ class RetrievalSpec extends SparkSpec {
         .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("cnt"))
         .withColumn("rk", row_number().over(wq)).filter(col("rk") === 1)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      // the driver arms' NULL guard: Option(text), as queryPhrases and
+      // the trigram gate read it
       val got = texts.zipWithIndex.flatMap { case (t, i) =>
-        RetrievalQueries.topShingle(t, n).map(i.toLong -> _)
+        Option(t).flatMap(RetrievalQueries.topShingle(_, n)).map(i.toLong -> _)
       }.toMap
       assert(got == expected,
-        s"n=$n: driver-only ${got.toSet.diff(expected.toSet)} / " +
+        s"n=$n $locale: driver-only ${got.toSet.diff(expected.toSet)} / " +
           s"spark-only ${expected.toSet.diff(got.toSet)}")
+    }
+    for (n <- Seq(2, 3)) {
+      check(n, "default locale")
+      underTurkishLocale(check(n, "tr-TR locale"))
     }
   }
 

@@ -61,6 +61,16 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body` with the stored-index serves forced onto their distributed
+    * tier ([[graft.core.Tables.tier]]): a one-task bound of 1 KB, below
+    * every request's leaves on the test corpora. Not 1 byte: the same
+    * conf sets the scans' split size, and a body that collects while
+    * it is built (the hybrid arms, the MMR greedy) would run one task
+    * per byte of input.
+    */
+  def withDistributedServes[T](body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", "1024")(body)
+
   /** `body`'s result and the number of Spark jobs that started while it
     * ran (any thread), counted by a listener once the bus has drained.
     */
