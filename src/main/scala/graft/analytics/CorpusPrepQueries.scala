@@ -80,14 +80,14 @@ object CorpusPrepQueries {
     */
   def dsirWeights(
       docs: DataFrame, isTarget: Column, buckets: Int = 1024): DataFrame =
-    dsirWeightsWith(docs, isTarget, buckets, shaBucket(buckets))
+    dsirWeightsTwoPass(docs, isTarget, buckets, shaBucket(buckets))
 
   /** The CHEAP-HASH library variant of [[dsirWeights]]: xxhash64
     * buckets instead of the sha prefix. The sha term is ~80% of
     * `q_select_dsir`'s sf10 wall (~2 sha256 per token — the price of
     * cross-engine hashability); xxhash64 is one codegen'd 64-bit mix
-    * per feature, measured ~5× less scan CPU (DsirHashProbe,
-    * SCALING.md round 14). Same model, same smoothing, same
+    * per feature, measured ~5× less scan CPU (SCALING.md round 14,
+    * "The DSIR cheap-hash variant"). Same model, same smoothing, same
     * determinism under reruns/retries — but NOT DuckDB-derivable, so
     * it is spec'd for selection OVERLAP against the gated sha form
     * (bucket collisions differ, weights shift at the margin), not
@@ -96,56 +96,20 @@ object CorpusPrepQueries {
     */
   def dsirWeightsFast(
       docs: DataFrame, isTarget: Column, buckets: Int = 1024): DataFrame =
-    dsirWeightsWith(docs, isTarget, buckets,
+    dsirWeightsTwoPass(docs, isTarget, buckets,
       g => pmod(xxhash64(g), lit(buckets.toLong)))
 
-  private def dsirWeightsWith(
-      docs: DataFrame, isTarget: Column, buckets: Int,
-      bucketOf: Column => Column): DataFrame =
-    dsirWeightsTwoPass(docs, isTarget, buckets, bucketOf)
-
-  /** ONE corpus feature pass: the per-doc count frame carries is_t (a
-    * per-doc constant, so adding it to the keys changes no group) and
-    * the model derives from that compact frame by an integer sum —
-    * exact, order-independent, same counts as aggregating the feature
-    * instances directly. With `checkpoint` the frame materializes once
-    * for both consumers; without it the shared (doc_id, is_t, b)
-    * exchange is ReuseExchange-dedupable. MEASURED SLOWER than the
-    * two-pass shape at the bench corpus (DsirAbProbe, same-JVM
-    * interleaved: ckpt 2.97/3.46 s, reuse 3.29/3.57 vs two-pass
-    * 2.39/3.26 min/median) — the materialization/agg machinery costs
-    * more than the tokenize+sha scan it saves at 5 MB. Kept as the
-    * candidate shape for scan-dominated corpora (the builder's sf10
-    * measurement: ~20 s of sha per full pass); NOT the default.
+  /** The TWO-PASS shape: model aggregation and per-doc counts each
+    * execute the feature pass (one tokenize+sha scan per pass, two per
+    * serve). A one-pass shape sharing a per-doc count frame (checkpointed
+    * or exchange-reused) measured slower at the bench corpus
+    * (OPTIMIZATION_r17.md "Change 2", same-JVM interleaved A/B: ckpt
+    * 2.97/3.46 s, reuse 3.29/3.57 vs two-pass 2.39/3.26 min/median).
     */
-  private[graft] def dsirWeightsOnePass(
+  private def dsirWeightsTwoPass(
       docs: DataFrame, isTarget: Column, buckets: Int,
-      bucketOf: Column => Column,
-      checkpoint: Boolean = false): DataFrame = {
+      bucketOf: Column => Column): DataFrame = {
     val hb = dsirBuckets(docs, isTarget, buckets, bucketOf)
-    val dcT0 = hb.groupBy(col("doc_id"), col("is_t"), col("b"))
-      .agg(count(lit(1)).cast(LongType).as("n"))
-    val dcT = if (checkpoint) dcT0.localCheckpoint() else dcT0
-    val counts = dcT.groupBy(col("b")).agg(
-      sum(col("n")).cast(LongType).as("rcnt"),
-      coalesce(sum(when(col("is_t"), col("n"))), lit(0L))
-        .cast(LongType).as("tcnt"))
-    dsirScore(docs, dcT.select(col("doc_id"), col("b"), col("n")),
-      counts, buckets)
-  }
-
-  /** The TWO-PASS shape (model aggregation and per-doc counts each
-    * execute the feature pass; with the r17 merged dsirBuckets that is
-    * one tokenize+sha scan per pass, two per serve — down from four) —
-    * the shipped default, justified by the DsirAbProbe interleaved A/B
-    * above. `unionBuckets` restores the pre-r17 two-scan feature frame
-    * for the probe.
-    */
-  private[graft] def dsirWeightsTwoPass(
-      docs: DataFrame, isTarget: Column, buckets: Int,
-      bucketOf: Column => Column, unionBuckets: Boolean = false): DataFrame = {
-    val hb = if (unionBuckets) dsirBucketsUnion(docs, isTarget, buckets, bucketOf)
-      else dsirBuckets(docs, isTarget, buckets, bucketOf)
     val counts = hb.groupBy(col("b")).agg(
       count(lit(1)).cast(LongType).as("rcnt"),
       count(when(col("is_t"), 1)).cast(LongType).as("tcnt"))
@@ -182,48 +146,6 @@ object CorpusPrepQueries {
     tok.select(col("doc_id"), col("is_t"),
         explode(concat(col("ts"), bigrams)).as("g"))
       .select(col("doc_id"), col("is_t"), bucketOf(col("g")).as("b"))
-  }
-
-  /** The pre-r17 TWO-SCAN feature frame (uni and bigram branches each
-    * scan + tokenize the corpus) — kept private for the A/B probe; not
-    * reachable from the catalog.
-    */
-  private[graft] def dsirBucketsUnion(
-      docs: DataFrame, isTarget: Column, buckets: Int,
-      bucketOf: Column => Column): DataFrame = {
-    val tok = docs.select(col("doc_id"), isTarget.as("is_t"),
-      tokens(lower(col("text"))).as("ts"))
-    val uni = tok.select(col("doc_id"), col("is_t"), explode(col("ts")).as("g"))
-    val bi = tok.filter(size(col("ts")) >= 2)
-      .select(col("doc_id"), col("is_t"),
-        explode(zip_with(
-          slice(col("ts"), lit(1), size(col("ts")) - 1),
-          slice(col("ts"), lit(2), size(col("ts")) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("g"))
-    uni.unionByName(bi).select(col("doc_id"), col("is_t"),
-      bucketOf(col("g")).as("b"))
-  }
-
-  /** A/B harness hook: the q_select_dsir-shaped result under each
-    * internal weights variant (identical rows; different plan shape —
-    * the DsirAbProbe evidence behind keeping the two-pass default).
-    */
-  private[graft] def dsirAbVariants(
-      s: SparkSession, dir: String): Seq[(String, () => DataFrame)] = {
-    val docs = t(s, dir, "documents")
-    val isT = col("source").isin("src0", "src1")
-    val sb = shaBucket(1024)
-    Seq(
-      "onepass_reuse" -> (() =>
-        dsirTopK(dsirWeightsOnePass(docs, isT, 1024, sb), 100)),
-      "onepass_ckpt" -> (() =>
-        dsirTopK(dsirWeightsOnePass(docs, isT, 1024, sb,
-          checkpoint = true), 100)),
-      "twopass_merged" -> (() =>
-        dsirTopK(dsirWeightsTwoPass(docs, isT, 1024, sb), 100)),
-      "twopass_union" -> (() =>
-        dsirTopK(dsirWeightsTwoPass(docs, isT, 1024, sb,
-          unionBuckets = true), 100)))
   }
 
   /** Score every document against a `(b, rcnt, tcnt)` bucket-count

@@ -203,10 +203,7 @@ object DedupQueries {
        |       THEN text || ' $SpanFooter' ELSE text END AS text
        |FROM ($spanDupCorpusSql)""".stripMargin
 
-  /** Distinct 3-gram shingle set of lowercase text (both engines). */
-  private def shingleSet(text: Column): Column =
-    array_distinct(shingles(lower(text), 3))
-
+  /** DuckDB: distinct 3-gram shingle set of a token list `ts`. */
   private val shingleSetSql =
     """list_distinct([ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
       |               FOR i IN range(1, greatest(len(ts) - 1, 1))])""".stripMargin
@@ -367,7 +364,8 @@ object DedupQueries {
     * each, 4 per doc — as the broadcast side, so the CORPUS side is
     * scanned but never exchanged: the right shape at micro-batch
     * cadence, where per-batch corpus shuffles (not scans) are what
-    * accumulate (MaintenanceProbe measures the difference). Leave it
+    * accumulate (SCALING.md round 7, "Measured: per-batch maintenance
+    * cost as the corpus grows behind it"). Leave it
     * off for batch-sized "new" sides too big to broadcast — the join
     * then shuffles both sides as before.
     */
@@ -447,8 +445,8 @@ object DedupQueries {
     * (like Upsert's `_graft_buckets` pin) and never changes it for a
     * live table: the bucket of an id is a function of the count, so
     * mixing counts across a table's lifetime mis-prunes. Engagement is
-    * measured: MaintenanceProbe's `read_files`/`index_files` columns
-    * at 256 buckets vs 16 (SCALING.md round 9).
+    * measured: `read_files`/`index_files` at 256 buckets vs 16
+    * (SCALING.md round 9, "Bucket-count engagement").
     */
   def signatureBuckets(s: SparkSession): Int =
     s.conf.get("graft.dedup.buckets", SignatureBuckets.toString).toInt
@@ -802,7 +800,7 @@ object DedupQueries {
 
   /** The distributed arm of [[batchVerifiedPairs]] (backfill-sized
     * batches, `broadcastBatch = false`, or frames over [[frameCap]]).
-    * Per-trigger stored-table IO (the MaintenanceProbe axis — at
+    * Per-trigger stored-table IO (the maintenance-series axis — at
     * 1000:1 corpus:batch ratios the stored-table SCANS are what
     * dominate a trigger):
     *  - the batch's signature rows are computed, not fetched back (see
@@ -1081,9 +1079,10 @@ object DedupQueries {
   /** Embedding near-dup pairs via banded DENSE sign-hyperplane blocking
     * + exact cosine verify, over a (vec_id, embedding) frame. Public so
     * DedupSemanticsSpec can measure recall on a planted-dup corpus
-    * against the all-pairs exact form, and so ScaleProbe can sweep
-    * (bands, bits) — the 100 TB tuning knob: collision noise is
-    * bands · n²/2^bits, recall 1 − (1 − p_bit^bits)^bands.
+    * against the all-pairs exact form, and so callers can sweep
+    * (bands, bits) (SCALING.md round 2) — the 100 TB tuning knob:
+    * collision noise is bands · n²/2^bits, recall
+    * 1 − (1 − p_bit^bits)^bands.
     */
   def embedNearDupPairs(
       e0: DataFrame,
@@ -1213,7 +1212,8 @@ object DedupQueries {
     * [[embedNearDupPairs]]): the catalog default 4×8 is pinned by the
     * DuckDB oracle arms; a 100 TB deployment sizes `bits` up (the
     * kernel packs up to 64) so the noise term stays bounded as the
-    * corpus grows — the 16-batch embed MaintenanceProbe runs 4×16.
+    * corpus grows — the 16-batch embed maintenance series (SCALING.md
+    * round 8) runs 4×16.
     */
   def bucketedSignBuckets(
       e: DataFrame, bands: Int = 4, bits: Int = 8): DataFrame =
@@ -1898,29 +1898,6 @@ object DedupQueries {
         (size(col("ts")) - size(col("kept"))).cast("long").as("n_removed"),
         array_join(col("kept"), " ").as("text_clean"))
   }
-
-  private val storedSpanIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stored window-fingerprint index of the RAW documents corpus
-    * (lowercased, no planted families) — the train side the streaming
-    * span-contamination gate probes: one row per distinct fingerprint,
-    * derived from the stored window table (one aggregation, no kernel
-    * recompute). 100 TB shape: the distinct-fp table is bounded by
-    * corpus token count and shrinks under dedup; the gate's probe is a
-    * stream-static equi-join against it.
-    */
-  private[graft] def spanIndexPath(s: SparkSession, dir: String): String =
-    graft.core.Tables.memoizedParquet(storedSpanIndex,
-      Tables.derivedStateKey(s, dir, "documents") + "|spanidx",
-      "graft-span-index") { out =>
-      Tables.parquetCachedSchema(s, spanWindowsPath(s, dir, "raw") {
-        t(s, dir, "documents")
-          .select(col("doc_id"), lower(col("text")).as("text"))
-      })
-        .select(col("fp")).distinct()
-        .write.parquet(s"$out/index")
-    } + "/index"
 
   /** Shared span-dedup pipeline (Spark side): the STORED window table
     * (`byFp`, see [[spanWindowsPath]] — `(doc_id, pos, fp)` rows,

@@ -363,14 +363,23 @@ object RetrievalQueries {
       // past the bound keep the distributed frame — same escape hatch
       // as the postings JOIN arm.
       import s.implicits._
-      docs.filter(col("doc_id") < nQueries)
-        .select(col("doc_id"), col("text")).collect().toSeq
-        .sortBy(_.getLong(0))
-        .flatMap(r => Option(r.getString(1)).toSeq.flatMap(salientTerms)
-          .map(t => (r.getLong(0), t)))
+      queryDocTexts(docs, nQueries)
+        .flatMap { case (id, text) => salientTerms(text).map(t => (id, t)) }
         .toDF("q_id", "term")
     } else queryTermsAll(docs.filter(col("doc_id") < nQueries))
   }
+
+  /** The query docs' `(doc_id, text)` rows on the driver, in id order —
+    * the one slim collect behind every driver-side query arm. The id is
+    * read through a cast to long, so a documents table with INT (or any
+    * integral) ids serves like a BIGINT one; NULL texts are dropped.
+    */
+  private def queryDocTexts(
+      docs: DataFrame, nQueries: Int): Seq[(Long, String)] =
+    docs.filter(col("doc_id") < nQueries)
+      .select(col("doc_id").cast("long"), col("text")).collect().toSeq
+      .flatMap(r => Option(r.getString(1)).map(t => (r.getLong(0), t)))
+      .sortBy(_._1)
 
   /** Salient terms of EVERY doc in `qdocs` — the un-filtered body
     * behind [[queryTerms]], shared with the external-text search
@@ -411,7 +420,8 @@ object RetrievalQueries {
     * vocab-bounded, broadcastable) distinct-term frame — no collect,
     * no literal explosion; at that query scale a full index pass is
     * the right plan. Runtime conf so specs and probes force either
-    * arm; default set at the measured crossover (Bm25ArmsProbe,
+    * arm; default set at the measured crossover (SCALING.md round 15,
+    * "Size-aware BM25 serve arms";
     * 200k docs × 100k-term synthetic vocabulary, warm medians:
     * literal/join 1.02/1.84 s at 15 terms, 1.63/2.43 at 1.5k,
     * 2.79/3.77 at 6k, 4.53/4.72 at 18k, 6.55/5.91 at 45k — crossover
@@ -460,12 +470,12 @@ object RetrievalQueries {
     * local relation: no tokenize/window jobs per invocation, and the
     * literal arm's bucket collect reads it without a Spark job (the
     * interactive-serve planning floor is job-count × fixed overhead —
-    * the round-12 ServeProfile lesson). Semantics mirror
-    * [[queryTermsAll]] exactly: whitespace tokens (the same java.util
-    * .regex \\S+ class Spark's regexp_extract_all compiles) of the
-    * text lowercased by Spark's own lower() ([[sparkLower]]), top
-    * [[TermsPerQuery]] by (tf desc, term asc). The
-    * q_bm25_text / q_hybrid_text hash gates pin the identity
+    * SCALING.md round 12, "The ANN serve drift adjudicated").
+    * Semantics mirror [[queryTermsAll]] exactly: whitespace tokens
+    * (the same java.util.regex \\S+ class Spark's regexp_extract_all
+    * compiles) of the text lowercased by Spark's own lower()
+    * ([[sparkLower]]), top [[TermsPerQuery]] by (tf desc, term asc).
+    * The q_bm25_text / q_hybrid_text hash gates pin the identity
     * cross-engine.
     */
   private[graft] def externalQueryTerms(
@@ -810,9 +820,6 @@ object RetrievalQueries {
   private[graft] def docCountDelta(docs: DataFrame): DataFrame =
     docs.agg(count(lit(1)).as("n")).withColumn("bkt", lit(0))
 
-  private val mergeDocCounts: DataFrame => DataFrame =
-    _.groupBy(col("bkt")).agg(sum(col("n")).as("n"))
-
   /** Exactly-once append of one batch's index rows into the three
     * stored tables (postings / doc stats / doc count).
     */
@@ -1120,11 +1127,8 @@ object RetrievalQueries {
     // before; identity with the window form is property-pinned.
     val s = docs.sparkSession
     import s.implicits._
-    docs.filter(col("doc_id") < NQueries)
-      .select(col("doc_id"), col("text")).collect().toSeq
-      .sortBy(_.getLong(0))
-      .flatMap(r => Option(r.getString(1)).flatMap(topShingle(_, 2))
-        .map(p => (r.getLong(0), p)))
+    queryDocTexts(docs, NQueries)
+      .flatMap { case (id, text) => topShingle(text, 2).map(p => (id, p)) }
       .toDF("q_id", "phrase")
   }
 
@@ -2150,7 +2154,8 @@ object RetrievalQueries {
     * costs more than the scan it avoids, and the switch trades recall
     * for scan cost exactly like any ANN-vs-exact choice. Default set
     * at the MEASURED intersection, not an extrapolation (round 17,
-    * [[graft.MmrArmsProbe]], forced-arm warm medians): at 5 MB the
+    * SCALING.md "Round 17: MMR exact/indexed crossover measured where
+    * the scan dominates", forced-arm warm medians): at 5 MB the
     * exact arm wins every batch size (0.45 vs 0.89 s at nq=10); at
     * 52 MB the indexed arm already wins any multi-query batch (1.19
     * vs 1.87 s at nq=10; nq=1 is a 0.71-vs-0.93 near-tie held up only
@@ -2371,7 +2376,8 @@ object RetrievalQueries {
     * 13–15 ran the loop distributed over per-step localCheckpoints:
     * correct, but 8+ scheduler jobs per pick on query-batch-sized
     * local relations — a 46-job floor for a 1-query search
-    * (SearchProfile, round 16). For OFFLINE bulk batches the per-query
+    * (SCALING.md round 16, "External search entries: the planning
+    * floor cut"). For OFFLINE bulk batches the per-query
     * kernel runs distributed instead ([[mmrGreedyDistributed]]); the
     * catalog hash gates pin the shared kernel bit-for-bit at every
     * dial, and the arm-identity spec pins the two arms row-identical.
@@ -2434,7 +2440,8 @@ object RetrievalQueries {
     * candidate ids, both linear in the batch — fine interactive,
     * driver-bound for offline million-query batches. The default is
     * set by the STRUCTURAL bound, not local wall-clock: the round-17
-    * measurement (SCALING.md, MmrBulkProfile at sf1) has the bulk arm
+    * measurement at sf1 (SCALING.md round 17, "Bulk (distributed) arm
+    * for the diversified retrieval family") has the bulk arm
     * winning at EVERY batch size on this box (n=1: 0.78 vs 1.02 s;
     * n=512: 1.60 vs 1.97; n=10k: 9.6 vs 12.3) because a 5 MB local
     * corpus makes the bulk arm's un-pruned embeddings scan free — but
@@ -3079,11 +3086,9 @@ object RetrievalQueries {
         // queryPhrases discipline; r17 collected the result of the
         // distributed shingle+tf-window subtree instead, ~4 AQE stage
         // jobs per serve)
-        val qpPairs = docs.filter(col("doc_id") < NQueries)
-          .select(col("doc_id"), col("text")).collect().toSeq
-          .sortBy(_.getLong(0))
-          .flatMap(r => Option(r.getString(1)).flatMap(topShingle(_, 3))
-            .map(p => (r.getLong(0), p)))
+        val qpPairs = queryDocTexts(docs, NQueries).flatMap {
+          case (id, text) => topShingle(text, 3).map(p => (id, p))
+        }
         val qp = qpPairs.toDF("q_id", "phrase")
         // the phrase set is driver-sized (one trigram per query doc):
         // split each into its two constituent bigrams locally and push

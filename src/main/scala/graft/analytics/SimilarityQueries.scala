@@ -1035,8 +1035,8 @@ object SimilarityQueries {
     // localCheckpoint + distinct-collect + runtime-broadcast shape
     // after decomposing the warm serve wall: 12 jobs summing to
     // 0.27 s under a 0.73 s wall — a job-count × planning floor, not
-    // a data term (ServeProfile; same lesson as the round-11 trigger
-    // work). At scale the query side stays driver-sized by definition
+    // a data term (SCALING.md round 12; same lesson as the round-11
+    // trigger work). At scale the query side stays driver-sized by definition
     // (it IS the query batch); the corpus-side candidate join below is
     // untouched.
     val s = e.sparkSession
@@ -1192,8 +1192,8 @@ object SimilarityQueries {
     * at 16 — the extra cells' candidates crowd a fixed top-8 budget
     * out through ADC quantization noise), while nprobe=8..12 ×
     * topC=24 measures 0.73–0.77, above even the unfiltered horizon
-    * ([[graft.ProbeCurve]] reproduces the sweep; AnnRecallSpec pins
-    * the 0.7 floor at nprobe=⌈4/s⌉, topC=24). Widening costs
+    * (SCALING.md round 13, "Filtered (hybrid) search"; AnnRecallSpec
+    * pins the 0.7 floor at nprobe=⌈4/s⌉, topC=24). Widening costs
     * O(nprobe) driver rows + probed cells scanned and O(topC)
     * re-ranked candidates — never a per-cell term.
     */
@@ -1210,7 +1210,8 @@ object SimilarityQueries {
   /** Corpus-size threshold (bytes) above which [[exactReRankTail]]
     * switches from the fused broadcast-probe fetch to the collected
     * point fetch. Runtime conf so specs and probes can force either
-    * arm; default set at the measured crossover (ReRankProbe, nq=10,
+    * arm; default set at the measured crossover (SCALING.md round 14,
+    * "The stored-serve re-rank tail made size-aware", nq=10,
     * warm medians: fused/point 0.44/0.49 s at sf0.1 (0.8 MB — the
     * job floor still wins), 0.63/0.45 s at sf1 (5.1 MB), 0.62/0.60 s
     * at sf10 (51 MB, where the shared ADC stage dominates both arms) —
@@ -1236,7 +1237,8 @@ object SimilarityQueries {
     *    driver-sized by construction (≤ topC × nQueries), so collect
     *    it, fetch vectors via `vec_id.isin(ids)` — an In predicate
     *    that pushes to the parquet scan and row-group-skips over the
-    *    vec_id-clustered layout (the SkipProbe evidence: read fraction
+    *    vec_id-clustered layout (SCALING.md round 10, "Row-group
+    *    skipping engages as the corpus grows": read fraction
     *    → 0.15 at 160M rows) — and join the now-LOCAL candidate
     *    relation. Turns the one remaining O(corpus) IO term of every
     *    stored-index serve into O(candidates).
@@ -1731,8 +1733,8 @@ object SimilarityQueries {
     // (no post-filter recall cliff — the budget is spent on QUALIFYING
     // vectors only), and the dials run at the coupled widening the
     // recall sweep landed on (nprobe=8 × topC=24; widening nprobe
-    // alone PEAKS THEN FALLS — ProbeCurve). Deterministic end to end —
-    // pinned codebook, tie-broken argmins, dyadic ADC sums — so the
+    // alone PEAKS THEN FALLS — SCALING.md round 13). Deterministic
+    // end to end — pinned codebook, tie-broken argmins, dyadic ADC sums — so the
     // oracle re-derives the whole serve relationally and the hash gate
     // covers the at-scale form a real user runs, not just the exact
     // small-corpus tier.

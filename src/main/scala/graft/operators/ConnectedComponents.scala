@@ -470,8 +470,8 @@ object ConnectedComponents {
       // the contracted graph is batch-bounded; at streaming cadence it
       // is DRIVER-SIZED, and the iterative CC's multi-round job chain
       // (persist/count per round) was the single largest fixed cost of
-      // a maintenance trigger (TriggerProfile: ~2.5 s of a ~7 s tiny
-      // trigger). Union-find on the collected edge list produces the
+      // a maintenance trigger (~2.5 s of a ~7 s tiny trigger, SCALING.md
+      // round 10, "Per-trigger job profile"). Union-find on the collected edge list produces the
       // identical min-label result in one collect + one parallelize;
       // over-cap or non-broadcast (backfill) graphs keep the
       // log-round distributed path.

@@ -658,7 +658,8 @@ object IncrementalParquet {
     * rewrites every fragmented partition wholesale: right as an
     * occasional explicit maintenance job, but fired on a cadence inside
     * a continuous ingest loop its cost grows linearly with the table
-    * (the 16-batch MaintenanceProbe series showed exactly that:
+    * (the 16-batch maintenance series showed exactly that, SCALING.md
+    * round 8:
     * compaction-batch walls climbing 12.9 → 21.9 s while fold-only
     * batches stayed flat). A minor firing absorbs, per partition:
     *

@@ -970,7 +970,8 @@ object StreamingPipeline {
     // their fixed per-write costs (stage shuffle, committer, install
     // renames) overlap instead of stacking; each keeps its own
     // exactly-once recovery, and both complete before the probe reads
-    // either table. Halves the trigger's append slice (TriggerProfile).
+    // either table. Halves the trigger's append slice (SCALING.md
+    // round 11, "Measured: phase walls").
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -1100,9 +1101,9 @@ object StreamingPipeline {
     * run copied verbatim from the stored corpus (the Lee et al. 2022
     * train-vs-incoming form: whole-doc fingerprints miss partial
     * copies; this catches them). `spanIndex` is the stored
-    * distinct-window-fingerprint table
-    * (`DedupQueries.spanIndexPath`, train-once memoized); arriving
-    * docs explode into packed double-base window fingerprints and
+    * distinct-window-fingerprint table (an `fp` column over the train
+    * corpus's [[graft.analytics.DedupQueries.explodedSpanWindows]]);
+    * arriving docs explode into packed double-base window fingerprints and
     * stream-static LEFT-join the index, then fold per doc. Output:
     * (doc_id, n_windows, n_matched, contaminated) — contaminated when
     * any window matched (`minWindows` raises the bar for noisy

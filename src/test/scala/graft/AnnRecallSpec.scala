@@ -179,7 +179,8 @@ class AnnRecallSpec extends SparkSpec {
     // the 2026-08 sweep showed recall PEAKS then falls when nprobe
     // grows alone — extra cells' candidates crowd a fixed top-8 out
     // through quantization noise; nprobe=8..12 × topC=24 measured
-    // 0.73–0.77 vs 0.37 at the unfiltered defaults, ProbeCurve)
+    // 0.73–0.77 vs 0.37 at the unfiltered defaults, SCALING.md round 13
+    // "Filtered (hybrid) search")
     val s = allowed.count().toDouble / e.count().toDouble
     val nprobe = math.min(16, math.ceil(4.0 / s).toInt)
     val served = SimilarityQueries.filteredServeFromCodes(

@@ -32,7 +32,7 @@ class LayoutPinSpec extends SparkSpec {
   test("(a)+(b) bucket pin round-trips; conflicting conf fails loudly") {
     withTempDir { root =>
       val t = root.resolve("sb").toString
-      val vecs = MaintenanceProbe.batchVecs(spark, 0, 64)
+      val vecs = SyntheticBatches.batchVecs(spark, 0, 64)
       withConf("graft.dedup.buckets", "8") {
         DedupQueries.appendToSignBucketsIdempotent(vecs, t, 0L)
       }
@@ -51,13 +51,13 @@ class LayoutPinSpec extends SparkSpec {
         assert(e.getMessage.contains("buckets"))
         intercept[IllegalStateException] {
           DedupQueries.appendToSignBucketsIdempotent(
-            MaintenanceProbe.batchVecs(spark, 1, 64), t, 1L)
+            SyntheticBatches.batchVecs(spark, 1, 64), t, 1L)
         }
       }
       // matching explicit conf still appends fine
       withConf("graft.dedup.buckets", "8") {
         DedupQueries.appendToSignBucketsIdempotent(
-          MaintenanceProbe.batchVecs(spark, 1, 64), t, 1L)
+          SyntheticBatches.batchVecs(spark, 1, 64), t, 1L)
         assert(DedupQueries.tableBuckets(spark, t) == 8)
       }
     }
@@ -68,14 +68,14 @@ class LayoutPinSpec extends SparkSpec {
       val t = root.resolve("tbl").toString
       // pre-existing UNPINNED bytes (written outside the append path)
       DedupQueries.bucketedSignatures(
-        MaintenanceProbe.batchDocs(spark, 0, 50))
+        SyntheticBatches.batchDocs(spark, 0, 50))
         .write.partitionBy("bkt").parquet(t)
       assert(IncrementalParquet.readLayout(spark, t).isEmpty)
       val e = intercept[IllegalStateException] {
         IncrementalParquet.appendIdempotent(spark, t, "bkt", 1L,
           Seq("doc_id"), Map("buckets" -> "16")) {
           DedupQueries.bucketedSignatures(
-            MaintenanceProbe.batchDocs(spark, 1, 50))
+            SyntheticBatches.batchDocs(spark, 1, 50))
         }
       }
       assert(e.getMessage.contains("adoptLayout"))
@@ -85,13 +85,13 @@ class LayoutPinSpec extends SparkSpec {
       IncrementalParquet.appendIdempotent(spark, t, "bkt", 1L,
         Seq("doc_id"), Map("buckets" -> "16")) {
         DedupQueries.bucketedSignatures(
-          MaintenanceProbe.batchDocs(spark, 1, 50))
+          SyntheticBatches.batchDocs(spark, 1, 50))
       }
       assert(spark.read.parquet(t).count() ==
         DedupQueries.bucketedSignatures(
-          MaintenanceProbe.batchDocs(spark, 0, 50)).count() +
+          SyntheticBatches.batchDocs(spark, 0, 50)).count() +
         DedupQueries.bucketedSignatures(
-          MaintenanceProbe.batchDocs(spark, 1, 50)).count())
+          SyntheticBatches.batchDocs(spark, 1, 50)).count())
     }
   }
 
@@ -99,7 +99,7 @@ class LayoutPinSpec extends SparkSpec {
     withTempDir { root =>
       val t = root.resolve("tbl").toString
       def batch(b: Long) = DedupQueries.bucketedSignatures(
-        MaintenanceProbe.batchDocs(spark, b, 40))
+        SyntheticBatches.batchDocs(spark, b, 40))
       // born with only the sort pinned
       IncrementalParquet.appendIdempotent(spark, t, "bkt", 0L,
         Seq("doc_id"))(batch(0))
@@ -126,7 +126,7 @@ class LayoutPinSpec extends SparkSpec {
       // batch files; absorption must re-sort, not concatenate
       for (b <- 0 until 3)
         DedupQueries.appendToSignBucketsIdempotent(
-          MaintenanceProbe.batchVecs(spark, b.toLong, 200), t, b.toLong)
+          SyntheticBatches.batchVecs(spark, b.toLong, 200), t, b.toLong)
       assert(DedupQueries.compactSignaturesMinor(spark, t) > 0)
       import scala.jdk.CollectionConverters._
       val files = Files.walk(java.nio.file.Paths.get(t)).iterator().asScala
@@ -168,8 +168,8 @@ class LayoutPinSpec extends SparkSpec {
     withTempDir { root =>
       val t = root.resolve("sig").toString
       DedupQueries.appendToSignaturesIdempotent(
-        MaintenanceProbe.batchDocs(spark, 0, 300), t, 0L)
-      val batch = MaintenanceProbe.batchDocs(spark, 1, 300)
+        SyntheticBatches.batchDocs(spark, 0, 300), t, 0L)
+      val batch = SyntheticBatches.batchDocs(spark, 1, 300)
       DedupQueries.appendToSignaturesIdempotent(batch, t, 1L)
       val pushed = pairsOf(
         DedupQueries.batchVerifiedPairs(spark, t, batch))
@@ -192,10 +192,10 @@ class LayoutPinSpec extends SparkSpec {
       val sb = root.resolve("sb").toString
       val vecs = root.resolve("vecs").toString
       DedupQueries.appendToSignBucketsIdempotent(
-        MaintenanceProbe.batchVecs(spark, 0, 300), sb, 0L, bands = 4, bits = 16)
+        SyntheticBatches.batchVecs(spark, 0, 300), sb, 0L, bands = 4, bits = 16)
       DedupQueries.appendToVectorsIdempotent(
-        MaintenanceProbe.batchVecs(spark, 0, 300), vecs, 0L)
-      val batch = MaintenanceProbe.batchVecs(spark, 1, 300)
+        SyntheticBatches.batchVecs(spark, 0, 300), vecs, 0L)
+      val batch = SyntheticBatches.batchVecs(spark, 1, 300)
       DedupQueries.appendToSignBucketsIdempotent(batch, sb, 1L,
         bands = 4, bits = 16)
       DedupQueries.appendToVectorsIdempotent(batch, vecs, 1L)

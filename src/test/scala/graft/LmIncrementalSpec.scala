@@ -15,7 +15,7 @@ import graft.streaming.StreamingPipeline
   * exactly-once, minor compaction SUM-MERGES the tiers, and the
   * reconstructed model is bit-identical to a one-shot retrain at every
   * trigger boundary (counts are a semigroup over disjoint batches).
-  * MaintenanceProbe's near-copy corpus gives real cross-batch shared
+  * SyntheticBatches' near-copy corpus gives real cross-batch shared
   * bigrams, so merging genuinely adds counts across tiers.
   */
 class LmIncrementalSpec extends SparkSpec {
@@ -37,8 +37,8 @@ class LmIncrementalSpec extends SparkSpec {
       val bg = root.resolve("bg").toString
       val uni = root.resolve("uni").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 120)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 120)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 120)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 120)
 
       land(b0, incoming, "b0.parquet")
       StreamingPipeline.startLmIngest(

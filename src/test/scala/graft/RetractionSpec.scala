@@ -33,8 +33,8 @@ class RetractionSpec extends SparkSpec {
     withTempDir { root =>
       val dfDir = root.resolve("df").toString
       val cntDir = root.resolve("cnt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 40)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 40)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 40)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 40)
       TextQueries.appendToTermStatsIdempotent(b0, dfDir, cntDir, 0L)
       TextQueries.appendToTermStatsIdempotent(b1, dfDir, cntDir, 1L)
 
@@ -86,8 +86,8 @@ class RetractionSpec extends SparkSpec {
     withTempDir { root =>
       val bgDir = root.resolve("bg").toString
       val uniDir = root.resolve("uni").toString
-      val b0 = MaintenanceProbe.batchZipfDocs(spark, 0, 60)
-      val b1 = MaintenanceProbe.batchZipfDocs(spark, 1, 60)
+      val b0 = SyntheticBatches.batchZipfDocs(spark, 0, 60)
+      val b1 = SyntheticBatches.batchZipfDocs(spark, 1, 60)
       TextQueries.appendToLmModelIdempotent(b0, bgDir, uniDir, 0L)
       TextQueries.appendToLmModelIdempotent(b1, bgDir, uniDir, 1L)
       val deleted = b0.filter(pmod(col("doc_id"), lit(4)) === 1)

@@ -77,8 +77,8 @@ class RetrievalSpec extends SparkSpec {
       val pstDir = root.resolve("pst").toString
       val dlDir = root.resolve("dl").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 80)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 80)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 80)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 80)
 
       land(b0, incoming, "b0.parquet")
       StreamingPipeline.startPostingsIngest(
@@ -124,8 +124,8 @@ class RetrievalSpec extends SparkSpec {
       val pstDir = root.resolve("pst").toString
       val dlDir = root.resolve("dl").toString
       val dirs = (pstDir, dlDir)
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 80)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 80)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 80)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 80)
       land(b0, incoming, "b0.parquet")
       land(b1, incoming, "b1.parquet")
       StreamingPipeline.startPostingsIngest(
@@ -236,7 +236,7 @@ class RetrievalSpec extends SparkSpec {
         root.resolve("bi").toString, root.resolve("cnt").toString,
         root.resolve("skt").toString)
       val ckpt = root.resolve("ck").toString
-      def batch(b: Long) = MaintenanceProbe.batchDocs(spark, b, 60)
+      def batch(b: Long) = SyntheticBatches.batchDocs(spark, b, 60)
         .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(3))))
       land(batch(0), incoming, "b0.parquet")
       land(batch(1), incoming, "b1.parquet")
@@ -555,8 +555,8 @@ class RetrievalSpec extends SparkSpec {
       val incoming = Files.createDirectory(root.resolve("incoming"))
       val bpstDir = root.resolve("bpst").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 80)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 80)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 80)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 80)
       def stored() = spark.read.parquet(bpstDir)
         .select(col("doc_id"), col("bigram"), col("pos")).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
@@ -1217,5 +1217,25 @@ class RetrievalSpec extends SparkSpec {
       assert(mi1 == mi2, "mmrDiversifiedIndexed arms diverge")
       assert(sd1.nonEmpty && mi1.nonEmpty)
     } finally spark.conf.unset(RetrievalQueries.MmrBulkQueriesMinKey)
+  }
+
+  test("driver query arms read INT doc ids: q_bm25_topk, " +
+      "q_phrase_search and q_phrase_trigram over an INT-id copy of the " +
+      "documents give the original rows") {
+    withTempDir { root =>
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .withColumn("doc_id", col("doc_id").cast("int"))
+        .write.parquet(s"$root/documents.parquet")
+      // ids compared as Long: the INT copy may keep INT id columns
+      def rows(q: String, dir: String): Seq[String] =
+        SparkEntry.queries(q)(spark, dir).collect().toSeq
+          .map(_.toSeq.map { case i: Int => i.toLong; case v => v }
+            .mkString("|"))
+      for (q <- Seq("q_bm25_topk", "q_phrase_search", "q_phrase_trigram")) {
+        val want = rows(q, sfDir)
+        assert(want.nonEmpty, q)
+        assert(rows(q, root.toString) == want, q)
+      }
+    }
   }
 }

@@ -13,7 +13,7 @@ import graft.streaming.StreamingPipeline
   * joining the incremental family. The fold is exact under id-monotone
   * arrival because a verdict depends only on LOWER-id same-cell
   * members: when a batch lands, everything below its ids is already in
-  * the stored cell table. MaintenanceProbe's near-copy vector corpus
+  * the stored cell table. SyntheticBatches' near-copy vector corpus
   * (every 7th batch-1 vector is a batch-0 vector with one coordinate
   * nudged, cosine ≈ 0.999) forces real CROSS-BATCH prunes: batch-1
   * copies must be pruned by their batch-0 bases through the stored
@@ -32,8 +32,8 @@ class SemanticIncrementalSpec extends SparkSpec {
       val cells = root.resolve("cells").toString
       val verdicts = root.resolve("verdicts").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchVecs(spark, 0, 400)
-      val b1 = MaintenanceProbe.batchVecs(spark, 1, 400)
+      val b0 = SyntheticBatches.batchVecs(spark, 0, 400)
+      val b1 = SyntheticBatches.batchVecs(spark, 1, 400)
       // the codebook is train-once FIXED state (the stored-codes
       // discipline): trained on the first arrival, held for the run
       val cb = graft.operators.CodebookTrainer.trainSphericalIvf(b0, 16, 64, 2)
@@ -87,8 +87,8 @@ class SemanticIncrementalSpec extends SparkSpec {
   test("out-of-order batch fails loudly instead of silently mis-verdicting") {
     withTempDir { root =>
       val cells = root.resolve("cells").toString
-      val b1 = MaintenanceProbe.batchVecs(spark, 1, 400) // ids 400..799
-      val b0 = MaintenanceProbe.batchVecs(spark, 0, 400) // ids 0..399
+      val b1 = SyntheticBatches.batchVecs(spark, 1, 400) // ids 400..799
+      val b0 = SyntheticBatches.batchVecs(spark, 0, 400) // ids 0..399
       val cb = graft.operators.CodebookTrainer.trainSphericalIvf(b0, 16, 64, 2)
       SimilarityQueries.appendToCellsIdempotent(b1, cells, 0L, cb)
 
@@ -109,7 +109,7 @@ class SemanticIncrementalSpec extends SparkSpec {
       SimilarityQueries.appendToCellsIdempotent(b1, cells, 0L, cb)
 
       // in-order continuation is accepted
-      val b2 = MaintenanceProbe.batchVecs(spark, 2, 400) // ids 800..1199
+      val b2 = SyntheticBatches.batchVecs(spark, 2, 400) // ids 800..1199
       SimilarityQueries.appendToCellsIdempotent(b2, cells, 2L, cb)
       assert(spark.read.parquet(cells).count() == 800)
 

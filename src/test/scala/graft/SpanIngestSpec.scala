@@ -15,7 +15,7 @@ import graft.streaming.StreamingPipeline
   * batch derive from the stored table, and the incremental identity
   * (base self-spans ∪ batch-touching spans == one-shot full spans)
   * holds across streaming delivery, minor compaction, and replay.
-  * MaintenanceProbe's deterministic near-copy corpus supplies real
+  * SyntheticBatches' deterministic near-copy corpus supplies real
   * cross-batch shared substrings (38 of 40 tokens shared ⇒ long spans).
   */
 class SpanIngestSpec extends SparkSpec {
@@ -36,8 +36,8 @@ class SpanIngestSpec extends SparkSpec {
       val incoming = Files.createDirectory(root.resolve("incoming"))
       val win = root.resolve("win").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 120)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 120)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 120)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 120)
 
       land(b0, incoming, "b0.parquet")
       StreamingPipeline.startSpanIngest(
@@ -97,10 +97,11 @@ class SpanIngestSpec extends SparkSpec {
       // distinct fingerprints) pushes its fp set to the stored window
       // scan as a REAL parquet In predicate, with the hive buckets
       // pruned at partition level — the plan shape that makes the
-      // SkipProbe row-group-skip curve reachable for the span probe
+      // row-group-skip curve reachable (SCALING.md round 10, "Row-group
+      // skipping engages as the corpus grows")
       // (ids start at 240 — past b0/b1 — so the probe models fresh
       // arrivals, though the pin is about the scan, not the rows)
-      val small = MaintenanceProbe.batchDocs(spark, 16, 15)
+      val small = SyntheticBatches.batchDocs(spark, 16, 15)
       val plan = DedupQueries.batchSpanPairs(spark, win, small)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

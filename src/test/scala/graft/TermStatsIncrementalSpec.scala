@@ -15,7 +15,7 @@ import graft.streaming.StreamingPipeline
   * additive over batches ONLY because their doc sets are disjoint (a
   * replayed doc would double-count every term it contains), so the
   * exactly-once ack is the CORRECTNESS condition here — the replay test
-  * at the bottom is the load-bearing one. MaintenanceProbe's near-copy
+  * at the bottom is the load-bearing one. SyntheticBatches' near-copy
   * corpus shares most of its vocabulary across batches, so the
   * sum-merge compaction genuinely adds counts across tiers.
   */
@@ -34,8 +34,8 @@ class TermStatsIncrementalSpec extends SparkSpec {
       val dfDir = root.resolve("df").toString
       val cntDir = root.resolve("cnt").toString
       val ckpt = root.resolve("ckpt").toString
-      val b0 = MaintenanceProbe.batchDocs(spark, 0, 120)
-      val b1 = MaintenanceProbe.batchDocs(spark, 1, 120)
+      val b0 = SyntheticBatches.batchDocs(spark, 0, 120)
+      val b1 = SyntheticBatches.batchDocs(spark, 1, 120)
 
       land(b0, incoming, "b0.parquet")
       StreamingPipeline.startTermStatsIngest(
