@@ -1,9 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.{
+  DecimalType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.core.Tables
 import graft.functions.SimilarityFunctions.{dot, l2Norm}
@@ -456,13 +457,38 @@ object RetrievalQueries {
     * retrieve it.
     */
   def bm25SearchText(
-      s: SparkSession, dir: String, queries: Seq[String]): DataFrame = {
-    val ranked = bm25RankedFromIndex(s, dir,
-      externalQueryTerms(s, queries), queries.size.toLong * TermsPerQuery)
-    bm25Project(ranked)
-      .withColumn("q_id", -col("q_id") - 1)
-      .orderBy(col("q_id"), col("rank"))
+      s: SparkSession, dir: String, queries: Seq[String]): DataFrame =
+    bm25Request(s, dir, queries).map("bm25SearchText")(ranked =>
+      bm25Project(ranked)
+        .withColumn("q_id", -col("q_id") - 1)
+        .orderBy(col("q_id"), col("rank")))
+      .prepare(s).run
+
+  /** One external BM25 request over the stored index as a
+    * [[Tables.Request]]: its query-term rows (slot `qt`) and the
+    * bucket and term lists that prune the postings scan (slots `bkt`,
+    * `term`), over the postings and doc-stats tables' generation.
+    */
+  private def bm25Request(
+      s: SparkSession, dir: String, queries: Seq[String]): Tables.Request = {
+    val dirs @ (pstDir, dlDir) = incrementalPostingsDirs(s, dir)
+    val qt = externalTermRows(queries)
+    val (terms, bkts) = Tables.valueBucketsLocal(
+      qt.map(_.getString(1)), DedupQueries.tableBuckets(s, pstDir))
+    val literal = literalArm(s, queries.size.toLong * TermsPerQuery)
+    Tables.Request(s"bm25|$pstDir|$dlDir|$literal",
+      (graft.sinks.IncrementalParquet.generation(s, pstDir),
+        graft.sinks.IncrementalParquet.generation(s, dlDir)),
+      Tables.Bindings(rows = Map("qt" -> (QueryTermSchema, qt)),
+        values = Map("bkt" -> bkts, "term" -> terms)),
+      sl => bm25Served(s, dirs, sl.rows("qt"), literal,
+        sl.isin(col("bkt"), "bkt") && sl.isin(col("term"), "term")))
   }
+
+  /** The (q_id, term) schema of the external query-term relation. */
+  private val QueryTermSchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("term", StringType)))
 
   /** Driver-side salient-term derivation for EXTERNAL query strings —
     * the query texts are driver strings already, so the per-query
@@ -479,12 +505,15 @@ object RetrievalQueries {
     * cross-engine.
     */
   private[graft] def externalQueryTerms(
-      s: SparkSession, queries: Seq[String]): DataFrame = {
-    import s.implicits._
+      s: SparkSession, queries: Seq[String]): DataFrame =
+    s.createDataFrame(
+      java.util.Arrays.asList(externalTermRows(queries): _*), QueryTermSchema)
+
+  /** The (q_id, term) rows behind [[externalQueryTerms]]. */
+  private def externalTermRows(queries: Seq[String]): Seq[Row] =
     queries.zipWithIndex.flatMap { case (text, i) =>
-      Option(text).toSeq.flatMap(salientTerms).map(t => (-(i + 1).toLong, t))
-    }.toDF("q_id", "term")
-  }
+      Option(text).toSeq.flatMap(salientTerms).map(t => Row(-(i + 1).toLong, t))
+    }
 
   /** The driver-side salient-term cut of one text — THE tokenizer +
     * tie-break shared by [[externalQueryTerms]] and the localized
@@ -569,18 +598,29 @@ object RetrievalQueries {
   private[graft] def bm25RankedFromDirs(s: SparkSession,
       dirs: (String, String),
       qt: DataFrame, termBound: Long): DataFrame =
-    bm25Served(s, dirs, qt, termBound).run
+    bm25Served(s, dirs, qt, literalArm(s, termBound), {
+      val nb = DedupQueries.tableBuckets(s, dirs._1)
+      val (terms, bkts) = Tables.valueBuckets(qt.select(col("term")), nb)
+      col("bkt").isin(bkts: _*) && col("term").isin(terms: _*)
+    }).run
 
-  /** [[bm25RankedFromDirs]] as a [[Tables.Served]] body: the pruned
-    * postings, the doc stats and the query terms are its leaves, and
-    * the literal arm's ranking is laid out by the request's tier.
+  /** Whether a request of `termBound` query terms takes the literal
+    * arm ([[PushdownTermsMaxKey]]).
+    */
+  private def literalArm(s: SparkSession, termBound: Long): Boolean =
+    termBound <= s.conf.get(
+      PushdownTermsMaxKey, PushdownTermsMaxDefault.toString).toLong
+
+  /** The stored-index BM25 body as a [[Tables.Served]] body: the
+    * pruned postings, the doc stats and the query terms are its leaves,
+    * and the literal arm's ranking is laid out by the request's tier.
+    * The arm is chosen by the caller and, for the literal arm, so is
+    * the postings scan's pruning predicate `prune` (by name: the join
+    * arm never builds it).
     */
   private def bm25Served(s: SparkSession, dirs: (String, String),
-      qt: DataFrame, termBound: Long): Tables.Served = {
+      qt: DataFrame, literalArm: Boolean, prune: => Column): Tables.Served = {
     val (pstDir, dlDir) = dirs
-    val maxLit = s.conf.get(
-      PushdownTermsMaxKey, PushdownTermsMaxDefault.toString).toLong
-    val literalArm = termBound <= maxLit
     val pst =
       if (literalArm) {
         // LITERAL arm — the query-term set is driver-sized (queries ×
@@ -594,10 +634,8 @@ object RetrievalQueries {
         // O(index) and O(posting lists of the query) IO at 100 TB.
         // This corpus's 31-term vocabulary hits every bucket (worst
         // case by design); the plan shape is pinned regardless.
-        val nb = DedupQueries.tableBuckets(s, pstDir)
-        val (terms, bkts) = Tables.valueBuckets(qt.select(col("term")), nb)
         Tables.parquetCachedSchema(s, pstDir)
-          .filter(col("bkt").isin(bkts: _*) && col("term").isin(terms: _*))
+          .filter(prune)
           .select(col("doc_id"), col("term"), col("tf"))
       } else {
         // JOIN arm — the offline bulk-query shape: one postings pass,
@@ -630,8 +668,9 @@ object RetrievalQueries {
         if (literalArm) tier else Tables.Tier.Planner))
   }
 
-  private val storedGsScalars =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  /** Per doc-stats dir: its generation and its (N, totlen). */
+  private val storedGsScalars = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), (Long, Long))]()
 
   /** The 1-row (N, totlen) corpus scalars of a stored postings
     * generation, aggregated ONCE per doc-stats table and served as a
@@ -642,12 +681,15 @@ object RetrievalQueries {
     * the memo is bit-identical to the aggregation it replaces; the
     * table dirs are themselves fingerprint-memoized per corpus, so a
     * changed corpus changes the key (and the catalog hash gates pin
-    * the round trip), and every public mutation (append, takedown,
-    * purge, compaction) invalidates the key.
+    * the round trip), and the memo holds the table's generation
+    * ([[graft.sinks.IncrementalParquet.generation]]), so any mutation
+    * (append, takedown, purge, compaction — in this JVM, or an append
+    * by another process) recomputes the scalars.
     */
   private def gsLocal(s: SparkSession, dlDir: String): DataFrame = {
-    val (n, totlen) = storedGsScalars.computeIfAbsent(dlDir,
-      _ => survivingScalars(s, dlDir))
+    val gen = graft.sinks.IncrementalParquet.generation(s, dlDir)
+    val (_, (n, totlen)) = storedGsScalars.compute(dlDir, (_, v) =>
+      if (v != null && v._1 == gen) v else (gen, survivingScalars(s, dlDir)))
     import s.implicits._
     Seq((n, totlen)).toDF("n", "totlen")
   }
@@ -833,10 +875,6 @@ object RetrievalQueries {
     graft.sinks.IncrementalParquet.appendIdempotent(
       s, dlDir, "bkt", batchId, Seq("doc_id"),
       Map("buckets" -> nb.toString))(docStatsDeltas(batch, nb))
-    // the (N, totlen) scalar memo (gsLocal) is keyed on the table
-    // dirs; a public append into the same dirs within the JVM must
-    // invalidate it or later serves score with stale idf/avgdl
-    storedGsScalars.remove(dlDir); ()
   }
 
   /** Exactly-once TAKEDOWN of a batch of document ids from the stored
@@ -860,7 +898,6 @@ object RetrievalQueries {
       s, pstDir, "doc_id", batchId)(docIds)
     graft.sinks.IncrementalParquet.appendTombstonesIdempotent(
       s, dlDir, "doc_id", batchId)(docIds)
-    storedGsScalars.remove(dlDir); ()
   }
 
   /** Physical purge of tombstoned rows from the stored BM25 index —
@@ -873,28 +910,20 @@ object RetrievalQueries {
     * rewritten.
     */
   def purgePostingsTombstones(
-      s: SparkSession, pstDir: String, dlDir: String): Int = {
-    val n = graft.sinks.IncrementalParquet.purgeTombstoned(
+      s: SparkSession, pstDir: String, dlDir: String): Int =
+    graft.sinks.IncrementalParquet.purgeTombstoned(
       s, pstDir, "bkt", "doc_id")(v => Int.box(v.toInt)) +
       graft.sinks.IncrementalParquet.purgeTombstoned(
         s, dlDir, "bkt", "doc_id")(v => Int.box(v.toInt))
-    storedGsScalars.remove(dlDir)
-    n
-  }
 
   /** Minor compaction: postings/doc-stats rows are disjoint across
     * batches (document-keyed) so compaction only re-files them; the
     * doc count sum-merges.
     */
   def compactPostingsMinor(
-      s: SparkSession, pstDir: String, dlDir: String): Int = {
-    // compaction never changes the scalar SUMS, but dropping the memo
-    // here keeps the invalidation rule uniform: any public mutation of
-    // the dl table clears its cached (N, totlen)
-    storedGsScalars.remove(dlDir)
+      s: SparkSession, pstDir: String, dlDir: String): Int =
     graft.sinks.IncrementalParquet.compactMinor(s, pstDir, "bkt") +
       graft.sinks.IncrementalParquet.compactMinor(s, dlDir, "bkt")
-  }
 
   private val storedPostings =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -955,8 +984,7 @@ object RetrievalQueries {
       // physical purge of the postings table; the doc-stats table
       // deliberately stays tombstone-served
       graft.sinks.IncrementalParquet.purgeTombstoned(
-        s, pst, "bkt", "doc_id")(v => Int.box(v.toInt))
-      storedGsScalars.remove(dl); ()
+        s, pst, "bkt", "doc_id")(v => Int.box(v.toInt)); ()
     }
     (s"$out/pst", s"$out/dl")
   }
@@ -1162,11 +1190,12 @@ object RetrievalQueries {
     * occurrences), occurrence-ranked like the gated forms. Phrases
     * are lowercased and whitespace-tokenized with the corpus rule. The
     * pruned scan and the triples are the request's leaves
-    * ([[Tables.tier]]).
+    * ([[Tables.tier]]); the triples (slot `triples`) and the scan's
+    * bucket and bigram lists (slots `bkt`, `bigram`) bind into the
+    * entry's template ([[Tables.Request]]).
     */
   def phraseSearchText(
       s: SparkSession, dir: String, phrases: Seq[String]): DataFrame = {
-    import s.implicits._
     val bpstDir = incrementalPhraseDir(s, dir)
     val nb = DedupQueries.tableBuckets(s, bpstDir)
     // (q_id, bigram, off, need) triples — driver-sized by definition
@@ -1175,20 +1204,39 @@ object RetrievalQueries {
       require(ts.length >= 2,
         s"phrase '$p' has ${ts.length} token(s); phrases need n >= 2")
       ts.sliding(2).zipWithIndex.map { case (bg, k) =>
-        (i.toLong, bg.mkString(" "), k, ts.length - 1)
+        Row(i.toLong, bg.mkString(" "), k, ts.length - 1)
       }.toSeq
     }
-    val need = triples.map(_._2).distinct
+    val need = triples.map(_.getString(1)).distinct
     val needBkts = Tables.valueBucketsLocal(need, nb)._2
-    val pruned = storedPhraseLive(s, bpstDir)
-      .filter(col("bkt").isin(needBkts: _*) && col("bigram").isin(need: _*))
-      .select(col("doc_id"), col("bigram"), col("pos"))
-    val tripleDf = triples.toDF("q_id", "bigram", "off", "need")
-    val tier = Tables.tier(pruned, tripleDf)
-    // every (constituent bigram, stored position) pair votes for base
-    // offset pos − off; a base with all n−1 distinct offsets is one
-    // phrase occurrence
-    val hits = tier.leaf(pruned).join(tier.small(tripleDf), Seq("bigram"))
+    Tables.Request(s"phraseSearchText|$bpstDir",
+      graft.sinks.IncrementalParquet.generation(s, bpstDir),
+      Tables.Bindings(rows = Map("triples" -> (PhraseTripleSchema, triples)),
+        values = Map("bkt" -> needBkts, "bigram" -> need)),
+      sl => {
+        val pruned = storedPhraseLive(s, bpstDir)
+          .filter(sl.isin(col("bkt"), "bkt") && sl.isin(col("bigram"), "bigram"))
+          .select(col("doc_id"), col("bigram"), col("pos"))
+        val tripleDf = sl.rows("triples")
+        Tables.Served(Seq(pruned, tripleDf), tier =>
+          phraseHitsRanked(tier.leaf(pruned).join(tier.small(tripleDf), Seq("bigram"))))
+      }).prepare(s).run
+  }
+
+  /** The (q_id, bigram, off, need) schema of the phrase triples. */
+  private val PhraseTripleSchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("bigram", StringType),
+    StructField("off", IntegerType, nullable = false),
+    StructField("need", IntegerType, nullable = false)))
+
+  /** The phrase ranking over `joined` — each (constituent bigram,
+    * stored position) pair joined to its triple: every pair votes for
+    * base offset pos − off, and a base with all n−1 distinct offsets is
+    * one phrase occurrence.
+    */
+  private def phraseHitsRanked(joined: DataFrame): DataFrame = {
+    val hits = joined
       .select(col("q_id"), col("doc_id"), col("need"),
         (col("pos") - col("off")).as("base"), col("off"))
       .groupBy(col("q_id"), col("doc_id"), col("need"), col("base"))
@@ -1880,16 +1928,30 @@ object RetrievalQueries {
     * back-fill each other's gaps). The interactive hybrid walls are
     * job-count × per-job driver gap (planning + AQE stage submission;
     * JobProfile r17/r18), and the two arms share NO subtree, so one
-    * arm's driver gaps overlap the other's jobs. Cached daemon
-    * threads: sized by concurrent serves, never by data.
+    * arm's driver gaps overlap the other's jobs. Bounded: at most
+    * [[ArmPoolSize]] daemon threads, none queued — an arm that finds
+    * every thread busy runs on its caller's thread instead
+    * ([[inParallel]]), so a saturated pool degrades to sequential
+    * arms and never waits behind itself. Idle threads expire.
     */
-  private lazy val armPool = java.util.concurrent.Executors.newCachedThreadPool(
-    (r: Runnable) => {
-      val th = new Thread(r, "graft-fusion-arm"); th.setDaemon(true); th
-    })
+  private lazy val armPool = {
+    val p = new java.util.concurrent.ThreadPoolExecutor(
+      ArmPoolSize, ArmPoolSize, 30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.SynchronousQueue[Runnable](),
+      (r: Runnable) => {
+        val th = new Thread(r, "graft-fusion-arm"); th.setDaemon(true); th
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** Threads of the fusion-arm pool: one per core. */
+  private[graft] val ArmPoolSize: Int =
+    math.max(2, Runtime.getRuntime.availableProcessors)
 
   /** Evaluate `fa` on the arm pool while `fb` runs on the calling
-    * thread; rethrows `fa`'s failure unwrapped. A pool thread keeps the
+    * thread, or both in turn on the calling thread when the pool is
+    * full; rethrows `fa`'s failure unwrapped. A pool thread keeps the
     * Spark local properties of whichever thread created it, so the arm
     * runs under the caller's job group and description (copied in,
     * cleared after): its jobs belong to the caller's request. If `fb`
@@ -1901,7 +1963,7 @@ object RetrievalQueries {
     val props = Seq("spark.jobGroup.id", "spark.job.description",
       "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
     val tag = s"graft-fusion-arm-${java.util.UUID.randomUUID}"
-    val f = armPool.submit(new java.util.concurrent.Callable[A] {
+    val f = try armPool.submit(new java.util.concurrent.Callable[A] {
       def call(): A = {
         props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
         sc.addJobTag(tag)
@@ -1911,7 +1973,11 @@ object RetrievalQueries {
           props.foreach { case (k, _) => sc.setLocalProperty(k, null) }
         }
       }
-    })
+    }) catch {
+      case _: java.util.concurrent.RejectedExecutionException =>
+        val a = fa
+        return (a, fb)
+    }
     val b = try fb catch {
       case e: Throwable =>
         while (!f.isDone) {
@@ -2182,26 +2248,54 @@ object RetrievalQueries {
   def mmrSearchVectors(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], pool: Int = FuseDepth,
       picks: Int = MmrPicks, lam: Double = 0.5): DataFrame = {
-    import s.implicits._
-    val q = vectors.zipWithIndex
-      .map { case (v, i) => (-(i + 1).toLong, v) }
-      .toDF("q_id", "qv")
-      .select(col("q_id"), col("qv"), l2Norm(col("qv")).as("qn"))
-    val threshold = s.conf.get(
-      MmrExactMaxBytesKey, MmrExactMaxBytesDefault.toString).toLong
-    val corpusBytes = t(s, dir, "embeddings")
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    val nq = vectors.size.toLong
-    val picked =
-      if (corpusBytes <= threshold)
-        mmrForQueries(s, dir, q, pool, picks, lam, nq)
-      else mmrSelect(
-        mmrIndexedCandidates(s, dir, q, pool, bulk = mmrBulk(s, nq)),
-        picks, lam, nq)
-    picked
+    val rows = vectors.zipWithIndex
+      .map { case (v, i) => Row(-(i + 1).toLong, v) }
+    def query(q: DataFrame) =
+      q.select(col("q_id"), col("qv"), l2Norm(col("qv")).as("qn"))
+    def external(picked: DataFrame) = picked
       .withColumn("q_id", -col("q_id") - 1)
       .orderBy(col("q_id"), col("pick"))
+    val threshold = s.conf.get(
+      MmrExactMaxBytesKey, MmrExactMaxBytesDefault.toString).toLong
+    val embKey = Tables.derivedStateKey(s, dir, "embeddings")
+    val nq = vectors.size.toLong
+    if (embeddingsBytes(s, dir, embKey) <= threshold) {
+      // the exact pool, bound into the entry's template: in the
+      // one-partition tier the template is the whole request
+      val p = Tables.Request(s"mmrSearchVectors|$embKey|$pool|$picks|$lam",
+        embKey, Tables.Bindings(rows = Map("q" -> (MmrQuerySchema, rows))),
+        sl => {
+          val sv = mmrExactServed(s, dir, query(sl.rows("q")), pool, picks, lam)
+          Tables.Served(sv.leaves, tier =>
+            if (tier.onePartition) external(sv.plan(tier)) else sv.plan(tier))
+        }).prepare(s)
+      val tier = if (mmrBulk(s, nq)) Tables.Tier.Planner else p.tier
+      if (tier.onePartition) p.plan(tier)
+      else external(mmrSelect(p.plan(tier), picks, lam, nq))
+    } else external(mmrSelect(
+      mmrIndexedCandidates(s, dir,
+        query(s.createDataFrame(java.util.Arrays.asList(rows: _*), MmrQuerySchema)),
+        pool, bulk = mmrBulk(s, nq)),
+      picks, lam, nq))
   }
+
+  /** The (q_id, qv) schema of an external MMR query batch. */
+  private val MmrQuerySchema = StructType(Seq(
+    StructField("q_id", LongType, nullable = false),
+    StructField("qv", org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.FloatType, containsNull = false))))
+
+  /** Per corpus dir: the embeddings fingerprint key and the table's
+    * size estimate, which picks [[mmrSearchVectors]]'s pool.
+    */
+  private val storedEmbeddingsBytes =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, BigInt)]()
+
+  private def embeddingsBytes(s: SparkSession, dir: String, embKey: String): BigInt =
+    storedEmbeddingsBytes.compute(dir, (_, v) =>
+      if (v != null && v._1 == embKey) v
+      else (embKey, t(s, dir, "embeddings").queryExecution.optimizedPlan.stats.sizeInBytes)
+    )._2
 
   /** The corpus-query frame (q_id, qv, qn) for doc_id < nQueries —
     * shared by both gated MMR families.
@@ -2221,26 +2315,41 @@ object RetrievalQueries {
     */
   private def mmrForQueries(s: SparkSession, dir: String, q: DataFrame,
       pool: Int, picks: Int, lam: Double, numQueries: Long): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val c = e.select(col("vec_id").as("n_id"), col("embedding").as("cv"),
-      l2Norm(col("embedding")).as("cn"))
-    val wrel = Window.partitionBy(col("q_id"))
-      .orderBy(col("rel").desc, col("n_id"))
+    val served = mmrExactServed(s, dir, q, pool, picks, lam)
     // interactive batches broadcast the query frame; a bulk batch's
     // query frame may exceed driver-broadcast size, so the hint drops
     // and AQE decides (the BM25 JOIN-arm discipline) — the theta-join
     // pool is then a shuffle join, still never all-pairs materialized
     // past the rank cut
     val tier =
-      if (mmrBulk(s, numQueries)) Tables.Tier.Planner else Tables.tier(c, q)
-    val cand = tier.single(tier.single(c).join(tier.cross(q),
-        col("n_id") =!= col("q_id")))
-      .withColumn("rel", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(wrel))
-      .filter(col("rk") <= pool)
-      .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
-    if (tier.onePartition) mmrGreedyDistributed(cand, picks, lam)
-    else mmrSelect(cand, picks, lam, numQueries)
+      if (mmrBulk(s, numQueries)) Tables.Tier.Planner
+      else Tables.tier(served.leaves: _*)
+    if (tier.onePartition) served.plan(tier)
+    else mmrSelect(served.plan(tier), picks, lam, numQueries)
+  }
+
+  /** The exact-pool body of [[mmrForQueries]]: the embeddings and the
+    * query frame are its leaves. In the one-partition tier its plan is
+    * the whole selection (the grouped greedy kernel in the pool's one
+    * partition); in the distributed tiers it is the candidate pool
+    * (q_id, n_id, rel, cv, cn), which [[mmrSelect]] finishes.
+    */
+  private def mmrExactServed(s: SparkSession, dir: String, q: DataFrame,
+      pool: Int, picks: Int, lam: Double): Tables.Served = {
+    val e = t(s, dir, "embeddings")
+    val c = e.select(col("vec_id").as("n_id"), col("embedding").as("cv"),
+      l2Norm(col("embedding")).as("cn"))
+    val wrel = Window.partitionBy(col("q_id"))
+      .orderBy(col("rel").desc, col("n_id"))
+    Tables.Served(Seq(c, q), tier => {
+      val cand = tier.single(tier.single(c).join(tier.cross(q),
+          col("n_id") =!= col("q_id")))
+        .withColumn("rel", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+        .withColumn("rk", row_number().over(wrel))
+        .filter(col("rk") <= pool)
+        .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
+      if (tier.onePartition) mmrGreedyDistributed(cand, picks, lam) else cand
+    })
   }
 
   /** Exact-cosine re-rank depth of the ADC candidate stage feeding the
@@ -2614,38 +2723,43 @@ object RetrievalQueries {
     * BM25 from the maintained postings tables
     * ([[bm25SearchText]]'s chain) and the vector arm from the stored
     * IVF-PQ codes table at the fusion dials
-    * ([[SimilarityQueries.annRankedForVectors]]). The user-facing
+    * ([[SimilarityQueries.annRequest]]). The user-facing
     * sibling of the gated q_hybrid_rrf_indexed: a search batch
     * arrives as raw text + raw vectors, never staged into the corpus.
     * Query ids are input positions; both arms ride negative internal
     * ids so corpus self-exclusion never fires for external queries.
     * One tier for the whole request, from both arms' leaves
     * ([[Tables.tier]]): within one task's bound the two arms and the
-    * fusion run in one partition as ONE job; above it the arms are
-    * collected concurrently and fused driver-side ([[rrfFuseSized]]).
+    * fusion run in one partition as ONE job, from one template; above
+    * it each arm binds its own template, and the two are collected
+    * concurrently and fused driver-side ([[rrfFuseSized]]).
     */
   def hybridSearch(s: SparkSession, dir: String,
       queries: Seq[(String, Array[Float])]): DataFrame = {
-    val n = queries.size.toLong
-    // the arms share no subtree, so their driver-side construction
-    // (index lookups, pruned-scan listing, query-side derivation)
-    // overlaps on the arm pool
-    val (bm, ann) = inParallel(
-      bm25Served(s, incrementalPostingsDirs(s, dir),
-        externalQueryTerms(s, queries.map(_._1)), n * TermsPerQuery),
-      SimilarityQueries.annServedForVectors(
-        s, dir, queries.map(_._2), nprobe = 2, topC = 24, depth = FuseDepth))
-    def bt(tier: Tables.Tier) = bm.plan(tier)
-      .filter(col("rank") <= FuseDepth)
-      .select(col("q_id"), col("n_id"), col("rank").as("bm_rank"))
-    def ct(tier: Tables.Tier) = ann.plan(tier)
-      .select(col("q_id"), col("n_id"), col("rank").as("cos_rank"))
-    val tier = Tables.tier(bm.leaves ++ ann.leaves: _*)
-    (if (tier.onePartition) rrfFuse(bt(tier), ct(tier), tier)
-     else rrfFuseSized(s, n, bt(tier), ct(tier)))
+    val (bm, ann) = hybridArms(s, dir, queries)
+    def external(fused: DataFrame) = fused
       .withColumn("q_id", -col("q_id") - 1)
       .orderBy(col("q_id"), col("rank"))
+    val one = bm.zip(ann, "hybridSearch")((bt, ct, tier) =>
+      external(rrfFuse(bt, ct, tier))).prepare(s)
+    val tier = one.tier
+    if (tier.onePartition) one.plan(tier)
+    else external(rrfFuseSized(s, queries.size.toLong,
+      bm.prepare(s).plan(tier), ann.prepare(s).plan(tier)))
   }
+
+  /** The two arms of an external hybrid request as [[Tables.Request]]s:
+    * BM25 (q_id, n_id, bm_rank) and ANN (q_id, n_id, cos_rank) at the
+    * fusion dials, both on negative internal query ids.
+    */
+  private def hybridArms(s: SparkSession, dir: String,
+      queries: Seq[(String, Array[Float])]): (Tables.Request, Tables.Request) = (
+    bm25Request(s, dir, queries.map(_._1)).map("bt")(_
+      .filter(col("rank") <= FuseDepth)
+      .select(col("q_id"), col("n_id"), col("rank").as("bm_rank"))),
+    SimilarityQueries.annRequest(s, dir, queries.map(_._2),
+        nprobe = 2, topC = 24, depth = FuseDepth).map("ct")(_
+      .select(col("q_id"), col("n_id"), col("rank").as("cos_rank"))))
 
   /** Diversified hybrid retrieval — MMR over the RRF-fused candidate
     * list: rel is the RAW fused rrf (IEEE-exact, a sum of at most two
@@ -2735,19 +2849,13 @@ object RetrievalQueries {
     */
   def searchDiversified(s: SparkSession, dir: String,
       queries: Seq[(String, Array[Float])], picks: Int = MmrPicks,
-      lam: Double = 0.5): DataFrame =
+      lam: Double = 0.5): DataFrame = {
+    val (bm, ann) = hybridArms(s, dir, queries)
     diversifiedSized(s, dir, queries.size.toLong, picks, lam,
-      bm25RankedFromIndex(s, dir,
-          externalQueryTerms(s, queries.map(_._1)),
-          queries.size.toLong * TermsPerQuery)
-        .filter(col("rank") <= FuseDepth)
-        .select(col("q_id"), col("n_id"), col("rank").as("bm_rank")),
-      SimilarityQueries.annRankedForVectors(
-          s, dir, queries.map(_._2), nprobe = 2, topC = 24,
-          depth = FuseDepth)
-        .select(col("q_id"), col("n_id"), col("rank").as("cos_rank")))
+      bm.prepare(s).run, ann.prepare(s).run)
       .withColumn("q_id", -col("q_id") - 1)
       .orderBy(col("q_id"), col("pick"))
+  }
 
   /** The BULK MMR candidate frame (q_id, n_id, rel, cv, cn) over a
     * fused ranking: the triples stay distributed and the vectors

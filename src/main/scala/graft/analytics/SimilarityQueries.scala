@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -622,8 +622,9 @@ object SimilarityQueries {
   def appendToCodes(
       batch: DataFrame, codesDir: String, cbIvf: Array[Double],
       cbPq: Array[Double]): Unit =
-    codesTable(batch, cbIvf, cbPq)
+    try codesTable(batch, cbIvf, cbPq)
       .write.mode("append").partitionBy("cell").parquet(codesDir)
+    finally graft.sinks.IncrementalParquet.advanceGeneration(codesDir)
 
   /** Exactly-once streaming form of [[appendToCodes]]: delegates the
     * ack-marker + batch-scoped-deterministic-name protocol to
@@ -967,107 +968,130 @@ object SimilarityQueries {
   def annSearchVectors(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], nprobe: Int = 2, topC: Int = 8,
       depth: Int = 3): DataFrame =
-    annRankedForVectors(s, dir, vectors, nprobe, topC, depth)
-      .withColumn("q_id", -col("q_id") - 1)
-      .orderBy(col("q_id"), col("rank"))
+    annRequest(s, dir, vectors, nprobe, topC, depth)
+      .map("annSearchVectors")(_
+        .withColumn("q_id", -col("q_id") - 1)
+        .orderBy(col("q_id"), col("rank")))
+      .prepare(s).run
 
-  /** The external-vector serve as a RANKED relation that KEEPS the
-    * negative internal query ids — the vector arm of
-    * [[graft.analytics.RetrievalQueries.hybridSearch]] (the fusion
-    * joins both arms on the internal ids before mapping back).
+  /** The external-vector serve as a [[Tables.Request]] whose RANKED
+    * relation KEEPS the negative internal query ids — the vector arm of
+    * [[graft.analytics.RetrievalQueries.hybridSearch]] too (the fusion
+    * joins both arms on the internal ids before mapping back). The
+    * query side — probe cells, ADC lookup tables, norms — is derived
+    * per request through a prepared projection of the query vectors
+    * (no job: a local relation), and binds as the `probes` and `qn`
+    * relations and the `cell` list that prunes the codes scan.
     */
-  private[analytics] def annRankedForVectors(s: SparkSession, dir: String,
+  private[analytics] def annRequest(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], nprobe: Int, topC: Int,
-      depth: Int): DataFrame =
-    annServedForVectors(s, dir, vectors, nprobe, topC, depth).run
-
-  /** [[annRankedForVectors]] as a [[Tables.Served]] body — hybrid
-    * search picks one tier from its leaves and the BM25 arm's.
-    */
-  private[analytics] def annServedForVectors(s: SparkSession, dir: String,
-      vectors: Seq[Array[Float]], nprobe: Int, topC: Int,
-      depth: Int): Tables.Served = {
-    import s.implicits._
-    val qdf = vectors.zipWithIndex
-      .map { case (v, i) => (-(i + 1).toLong, v) }
-      .toDF("vec_id", "embedding")
-    servedForQueryFrame(s, dir, qdf, nprobe, topC, depth)
+      depth: Int): Tables.Request = {
+    val cb = pinnedCodebook(s, dir)
+    val codesDir = incrementalCodesPath(s, dir, cb, cb)
+    val qrows = vectors.zipWithIndex.map { case (v, i) => Row(-(i + 1).toLong, v) }
+    val qside = Tables.Request(s"annQuery|$codesDir|$nprobe", (),
+      Tables.Bindings(rows = Map("q" -> (QueryVectorSchema, qrows))),
+      sl => Tables.Served(Nil, _ => querySide(sl.rows("q"), cb, cb, nprobe)))
+      .prepare(s).plan(Tables.Tier.Planner)
+    Tables.Request(s"ann|$codesDir|$nprobe|$topC|$depth",
+      graft.sinks.IncrementalParquet.generation(s, codesDir),
+      queryBindings(qside),
+      sl => ivfPqServedOver(t(s, dir, "embeddings"),
+        storedCodesLive(s, codesDir), sl, topC, depth))
   }
+
+  /** The (vec_id, embedding) schema of an external query-vector batch. */
+  private val QueryVectorSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false))))
 
   /** The pinned-codebook stored-codes serve over an ARBITRARY query
     * frame (vec_id, embedding) at caller-chosen dials — the shared
-    * body behind the external-vector entry above and the indexed MMR
-    * tier's candidate pool ([[graft.analytics.RetrievalQueries]]
-    * q_mmr_diversify_indexed / mmrSearchVectors): same codes table and
-    * serve chain as q_ann_codes_served.
+    * body behind the indexed MMR tier's candidate pool
+    * ([[graft.analytics.RetrievalQueries]] q_mmr_diversify_indexed /
+    * mmrSearchVectors): same codes table and serve chain as
+    * q_ann_codes_served.
     */
   private[analytics] def servedRankedForQueryFrame(s: SparkSession,
       dir: String, queryVecs: DataFrame, nprobe: Int, topC: Int,
-      depth: Int): DataFrame =
-    servedForQueryFrame(s, dir, queryVecs, nprobe, topC, depth).run
-
-  private def servedForQueryFrame(s: SparkSession, dir: String,
-      queryVecs: DataFrame, nprobe: Int, topC: Int,
-      depth: Int): Tables.Served = {
+      depth: Int): DataFrame = {
     val cb = pinnedCodebook(s, dir)
     val codes = storedCodesLive(s, incrementalCodesPath(s, dir, cb, cb))
     ivfPqServed(t(s, dir, "embeddings"), codes, cb, cb, queryVecs, nprobe,
-      topC, depth)
+      topC, depth).run
   }
 
   /** The stored-codes serve body over an arbitrary query-vector frame
-    * (vec_id, embedding) — shared by the corpus-query form above and
-    * the external-vector entry [[annSearchVectors]] — as a
-    * [[Tables.Served]] body: the codes pruned to the probed cells, the
-    * embeddings the re-rank fetches from, and the two local query
-    * relations are its leaves.
+    * (vec_id, embedding) as a [[Tables.Served]] body — the query side
+    * collected once ([[queryBindings]]) and the body built over it
+    * fresh ([[ivfPqServedOver]]).
     */
   private def ivfPqServed(
       e: DataFrame, codes: DataFrame, cbIvf: Array[Double],
       cbPq: Array[Double], queryVecs: DataFrame, nprobe: Int,
-      topC: Int, depth: Int): Tables.Served = {
-    // ONE tiny collect covers the whole query side: nQueries vectors
-    // with their probe cells, subspace distance lookups, raw vector
-    // and norm — ≤ nQueries rows of driver metadata. The probe table,
-    // the probed-cell list AND the exact-re-rank query side all derive
-    // from it as LOCAL relations, whose broadcasts materialize
-    // driver-side with no job. Round 12 replaced the previous
-    // localCheckpoint + distinct-collect + runtime-broadcast shape
-    // after decomposing the warm serve wall: 12 jobs summing to
-    // 0.27 s under a 0.73 s wall — a job-count × planning floor, not
-    // a data term (SCALING.md round 12; same lesson as the round-11
-    // trigger work). At scale the query side stays driver-sized by definition
-    // (it IS the query batch); the corpus-side candidate join below is
-    // untouched.
-    val s = e.sparkSession
-    val qside = queryVecs.select(
+      topC: Int, depth: Int): Tables.Served =
+    ivfPqServedOver(e, codes, new Tables.Slots(e.sparkSession,
+      queryBindings(querySide(queryVecs, cbIvf, cbPq, nprobe))), topC, depth)
+
+  /** The query side of a stored-codes serve: per query vector its probe
+    * cells, its subspace distance lookups, the raw vector and its norm.
+    */
+  private def querySide(queryVecs: DataFrame, cbIvf: Array[Double],
+      cbPq: Array[Double], nprobe: Int): DataFrame =
+    queryVecs.select(
       col("vec_id"),
       PqExpressions.nearestCells(embNN, cbIvf, 64, nprobe).as("pcells"),
       PqExpressions.pqSubDists(embNN, cbPq, 8, 8).as("dl"),
       col("embedding").as("qv"),
       l2Norm(col("embedding")).as("qn"))
-    val qRows = qside.collect()
-    val dlT = qside.schema("dl").dataType
-    val qvT = qside.schema("qv").dataType
+
+  /** The slot values of a stored-codes serve from its [[querySide]]:
+    * ONE tiny collect covers the whole query side — ≤ nQueries rows of
+    * driver metadata, evaluated on the driver with no job when the
+    * query vectors are driver rows ([[Tables.collectLocal]]). The probe table (`probes`), the exact-re-rank
+    * query side (`qn`) AND the probed-cell list (`cell`) all derive
+    * from it, and the two relations are LOCAL relations, whose
+    * broadcasts materialize driver-side with no job. Round 12 replaced
+    * the previous localCheckpoint + distinct-collect + runtime-broadcast
+    * shape after decomposing the warm serve wall: 12 jobs summing to
+    * 0.27 s under a 0.73 s wall — a job-count × planning floor, not a
+    * data term (SCALING.md round 12; same lesson as the round-11
+    * trigger work). At scale the query side stays driver-sized by
+    * definition (it IS the query batch); the corpus-side candidate join
+    * is untouched.
+    */
+  private def queryBindings(qside: DataFrame): Tables.Bindings = {
+    val qRows = Tables.collectLocal(qside)
     val probeSchema = StructType(Seq(
       StructField("q_id", LongType), StructField("pcell", IntegerType),
-      StructField("dl", dlT)))
-    val probes = localDf(s, probeSchema, qRows.toSeq.flatMap { r =>
+      StructField("dl", qside.schema("dl").dataType)))
+    val qnSchema = StructType(Seq(
+      StructField("q_id2", LongType), StructField("qv", qside.schema("qv").dataType),
+      StructField("qn", DoubleType)))
+    val probes = qRows.toSeq.flatMap { r =>
       r.getAs[scala.collection.Seq[Int]]("pcells").map(c =>
-        org.apache.spark.sql.Row(r.getLong(0), c, r.getAs[Any]("dl")))
-    })
+        Row(r.getLong(0), c, r.getAs[Any]("dl")))
+    }
+    val qn = qRows.toSeq.map(r => Row(r.getLong(0), r.getAs[Any]("qv"), r.getDouble(4)))
     val cells = qRows.flatMap(
       _.getAs[scala.collection.Seq[Int]]("pcells")).distinct.toSeq
-    val qnSchema = StructType(Seq(
-      StructField("q_id2", LongType), StructField("qv", qvT),
-      StructField("qn", DoubleType)))
-    val qn = localDf(s, qnSchema, qRows.toSeq.map(r =>
-      org.apache.spark.sql.Row(r.getLong(0), r.getAs[Any]("qv"),
-        r.getDouble(4))))
-    val pruned = codes.filter(col("cell").isin(cells: _*))
+    Tables.Bindings(
+      rows = Map("probes" -> (probeSchema, probes), "qn" -> (qnSchema, qn)),
+      values = Map("cell" -> cells))
+  }
+
+  /** The stored-codes serve body over its slots: the codes pruned to
+    * the probed cells, the embeddings the re-rank fetches from, and the
+    * two local query relations are its leaves.
+    */
+  private def ivfPqServedOver(e: DataFrame, codes: DataFrame,
+      sl: Tables.Slots, topC: Int, depth: Int): Tables.Served = {
+    val probes = sl.rows("probes")
+    val qn = sl.rows("qn")
+    val pruned = codes.filter(sl.isin(col("cell"), "cell"))
     Tables.Served(Seq(pruned, e, probes, qn), tier =>
       exactReRankTail(e, adcCandidates(pruned, probes, topC, tier), qn,
-        depth, tier))
+        depth, tier, sl.collect))
   }
 
   /** The pinned-codebook stored-index serve as a RANKED relation at an
@@ -1107,7 +1131,7 @@ object SimilarityQueries {
 
   /** The stored-codes serve for ONE EXTERNAL query vector equal to
     * corpus vector `src`, riding internal id −1 — the negative-id
-    * discipline of [[annRankedForVectors]]: self-exclusion never
+    * discipline of [[annRequest]]: self-exclusion never
     * fires, so an exact-match external query retrieves its stored
     * twin at rank 1. Emits `annr(q_id = −1, n_id, rank)`; expects CTE
     * `e` upstream; composes with [[RetrievalQueries]]' BM25 text CTEs
@@ -1245,7 +1269,8 @@ object SimilarityQueries {
     */
   private def exactReRankTail(
       e: DataFrame, cand: DataFrame, qn: DataFrame,
-      depth: Int, tier: Tables.Tier): DataFrame = {
+      depth: Int, tier: Tables.Tier,
+      collect: DataFrame => Array[Row] = _.collect()): DataFrame = {
     val s = e.sparkSession
     val threshold = s.conf.get(
       ReRankFetchBytesKey, ReRankFetchBytesDefault.toString).toLong
@@ -1253,7 +1278,7 @@ object SimilarityQueries {
     val (probe, candDf) =
       if (corpusBytes <= threshold) (e, cand)
       else {
-        val rows = cand.collect().toSeq
+        val rows = collect(cand).toSeq
         val nIdAt = cand.schema.fieldIndex("n_id")
         val ids = rows.map(_.getLong(nIdAt)).distinct
         (e.filter(col("vec_id").isin(ids: _*)),

@@ -1,8 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{
+  BindReferences, Expression, In, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.trees.{TreeNode, TreeNodeTag}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Loader for the analytics corpus (repo:TESTDATA.md): one parquet file
   * per table under a scale-factor directory.
@@ -143,6 +150,26 @@ object Tables {
       case _ => None
     }
 
+  /** The rows of `df`. A projection of a local relation (a bound query
+    * side) is evaluated on the driver by its analyzed expressions, as
+    * the optimizer's `ConvertToLocalRelation` would evaluate it, with
+    * no optimizer, physical plan or job; any other frame is collected.
+    */
+  def collectLocal(df: DataFrame): Array[Row] = {
+    val local = df.queryExecution.analyzed match {
+      case Project(list, r: LocalRelation) if list.forall(_.deterministic) =>
+        Some((list.map(BindReferences.bindReference(_: Expression, r.output)), r))
+      case _ => None
+    }
+    local.filterNot(_._1.exists(_.exists(_.isInstanceOf[Unevaluable]))) match {
+      case Some((exprs, r)) =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        r.data.map(in => toRow(InternalRow.fromSeq(exprs.map(_.eval(in))))
+          .asInstanceOf[Row]).toArray
+      case None => df.collect()
+    }
+  }
+
   /** The execution shape of one request's plan. Every Spark job costs a
     * scheduler round trip, and AQE runs each exchange and broadcast of
     * a plan as a job of its own, so an interactive request over a few
@@ -208,10 +235,15 @@ object Tables {
     * [[Tier.OnePartition]]; one above it keeps the distributed
     * [[Tier.Broadcast]] shape.
     */
-  def tier(leaves: DataFrame*): Tier = {
+  def tier(leaves: DataFrame*): Tier =
+    tierOf(leaves.head.sparkSession, leaves.map(leafBytes).sum)
+
+  private def leafBytes(leaf: DataFrame): BigInt =
+    leaf.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  private def tierOf(spark: SparkSession, bytes: BigInt): Tier = {
     val bound = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      leaves.head.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"))
-    val bytes = leaves.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
     if (bytes <= bound) Tier.OnePartition else Tier.Broadcast
   }
 
@@ -222,6 +254,218 @@ object Tables {
     */
   final case class Served(leaves: Seq[DataFrame], plan: Tier => DataFrame) {
     def run: DataFrame = plan(tier(leaves: _*))
+  }
+
+  // ------------------------------------------------------------------
+  // Prepared serves. Building a request's DataFrame step by step costs
+  // tens of milliseconds of driver time per request: every step
+  // re-analyzes the growing plan, and every parquet read resolves its
+  // data source and lists its files again. A served entry's plan has
+  // the same shape for every request over one index generation; only
+  // the query's values differ. So the body is built once per (entry,
+  // tier, generation) with its query values in marked SLOTS, its
+  // analyzed plan is kept as the template, and each later request
+  // binds its own values into the template's slots. The optimizer and
+  // the physical planner still run per request, over the bound plan.
+  // ------------------------------------------------------------------
+
+  /** One request's values for the slots of a body ([[Request]]): the
+    * driver rows of its query relations, with their schemas, and the
+    * literal lists of its pruned scans, each by slot name.
+    */
+  final case class Bindings(
+      rows: Map[String, (StructType, Seq[Row])] = Map.empty,
+      values: Map[String, Seq[Any]] = Map.empty) {
+    def ++(o: Bindings): Bindings = Bindings(rows ++ o.rows, values ++ o.values)
+  }
+
+  /** The mark of a slot node: a query relation or a literal `In`. */
+  private val SlotTag = TreeNodeTag[String]("graft.slot")
+
+  private def slotOf(n: TreeNode[_]): Option[String] = n.getTagValue(SlotTag)
+
+  /** The slots of a body over one request's [[Bindings]]: each builds
+    * the request's value as a plan node marked with the slot's name, so
+    * a later request's values bind into the same node of the analyzed
+    * plan by that mark (the analyzer renames and wraps, but keeps
+    * marks). A body built over `Slots` directly, outside a
+    * [[Prepared]] request, is an ordinary fresh build.
+    */
+  final class Slots(spark: SparkSession, b: Bindings) {
+    private[Tables] val used = scala.collection.mutable.Set.empty[String]
+    private[Tables] var reusable = true
+
+    /** `df`'s rows, collected while the body is built. The body's plan
+      * then holds request rows outside any slot, so it is never kept
+      * as a template.
+      */
+    def collect(df: DataFrame): Array[Row] = {
+      reusable = false
+      df.collect()
+    }
+
+    /** The query relation `name`: this request's rows. */
+    def rows(name: String): DataFrame = {
+      val (schema, rs) = b.rows(name)
+      val rel = LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(schema), rs)
+      rel.setTagValue(SlotTag, name)
+      used += name
+      graftbridge.ofRows(spark, rel)
+    }
+
+    /** `c IN (this request's values of slot `name`)` — a pruning
+      * predicate of a stored-index scan.
+      */
+    def isin(c: Column, name: String): Column = {
+      val in = In(graftbridge.expression(c), b.values(name).map(Literal(_)))
+      in.setTagValue(SlotTag, name)
+      used += name
+      graftbridge.column(in)
+    }
+  }
+
+  /** A kept template: per tier, the analyzed plan of the body; and the
+    * profile of its leaves, valid while `token` equals the request's.
+    */
+  private final class Template(val token: AnyRef) {
+    @volatile var profile: LeafProfile = _
+    val plans = new java.util.concurrent.ConcurrentHashMap[Tier, LogicalPlan]()
+  }
+
+  /** The leaf bytes of a body per request, without the optimizer: the
+    * stored leaves' size estimate is fixed within a generation (a
+    * literal `In` does not change the estimate of a path-based scan),
+    * and a query relation's grows with its rows by its row width — the
+    * two numbers [[tier]] sums from the optimized leaves.
+    */
+  private final case class LeafProfile(fixed: BigInt, perRow: Seq[(String, BigInt)])
+
+  /** One template per key: a changed token replaces it, so the map
+    * holds no stale generation.
+    */
+  private val templates = new java.util.concurrent.ConcurrentHashMap[String, Template]()
+
+  /** Forget every template: each entry's next request builds fresh. */
+  private[graft] def dropTemplates(): Unit = templates.clear()
+
+  /** A served body prepared for one request: its tier and its plan in
+    * any tier, from the template when one is kept, else built fresh
+    * (and kept, when every slot the body used survived analysis).
+    * Made by [[Request.prepare]].
+    */
+  final class Prepared private[Tables] (spark: SparkSession, key: String,
+      token: AnyRef, b: Bindings, body: Slots => Served) {
+    private lazy val template = templates.compute(key, (_, t) =>
+      if (t != null && t.token == token) t else new Template(token))
+    private lazy val fresh: (Slots, Served) = {
+      val sl = new Slots(spark, b)
+      (sl, body(sl))
+    }
+
+    /** The request's tier: the template's leaf profile over this
+      * request's row counts (the profile is taken once per template,
+      * from the first request's optimized leaves).
+      */
+    lazy val tier: Tier = {
+      val t = template
+      if (t.profile == null) t.profile = profileOf(fresh._2.leaves)
+      tierOf(spark, t.profile.fixed +
+        t.profile.perRow.map { case (n, w) => w * b.rows(n)._2.size }.sum)
+    }
+
+    /** The request's plan in `tier`. */
+    def plan(tier: Tier): DataFrame = template.plans.get(tier) match {
+      case null =>
+        val (sl, served) = fresh
+        val df = served.plan(tier)
+        val analyzed = df.queryExecution.analyzed
+        if (sl.reusable && bindable(analyzed, sl.used.toSet))
+          template.plans.putIfAbsent(tier, analyzed)
+        df
+      case p => graftbridge.ofRows(spark, bind(p))
+    }
+
+    def run: DataFrame = plan(tier)
+
+    /** `p` with this request's rows and values in its slots. */
+    private def bind(p: LogicalPlan): LogicalPlan =
+      p.transformUp {
+        case r: LocalRelation if slotOf(r).isDefined =>
+          LocalRelation.fromExternalRows(r.output, b.rows(slotOf(r).get)._2)
+      }.transformAllExpressions {
+        case in: In if slotOf(in).isDefined =>
+          in.copy(list = b.values(slotOf(in).get)
+            .map(v => Literal.create(v, in.value.dataType)))
+      }
+  }
+
+  /** A served request before preparation: its `body` over slots, the
+    * `bindings` of this request, the `key` naming the entry and
+    * whatever fixes its plan's shape (stored dirs, dials), and the
+    * `generation` of the stored state its plan reads
+    * ([[graft.sinks.IncrementalParquet.generation]], a corpus
+    * fingerprint).
+    */
+  final case class Request(key: String, generation: Any, bindings: Bindings,
+      body: Slots => Served) {
+    /** This request over its entry's template. The template also
+      * follows the session and its conf (the analyzer folds conf, such
+      * as ANSI mode, into the plan).
+      */
+    def prepare(spark: SparkSession): Prepared = new Prepared(spark, key,
+      (spark, generation, spark.conf.getAll), bindings, body)
+
+    /** The body's plan followed by `f` in every tier; `name` tells the
+      * templates apart.
+      */
+    def map(name: String)(f: DataFrame => DataFrame): Request =
+      Request(s"$key|$name", generation, bindings, sl => {
+        val b = body(sl)
+        Served(b.leaves, t => f(b.plan(t)))
+      })
+
+    /** Two requests served as one: both bodies' leaves, and `f` over
+      * both plans in the one tier they pick together. Their slot names
+      * must differ.
+      */
+    def zip(o: Request, name: String)(
+        f: (DataFrame, DataFrame, Tier) => DataFrame): Request =
+      Request(s"$key+${o.key}|$name", (generation, o.generation),
+        bindings ++ o.bindings, sl => {
+          val (a, b) = (body(sl), o.body(sl))
+          Served(a.leaves ++ b.leaves, t => f(a.plan(t), b.plan(t), t))
+        })
+  }
+
+  /** Whether a fresh plan can serve as a template: every slot the body
+    * used is still marked in it, outside subqueries (where binding
+    * reaches), and every marked `In` lists literals of its column's
+    * type (binding replaces exactly those).
+    */
+  private def bindable(p: LogicalPlan, used: Set[String]): Boolean = {
+    val rels = p.collect { case r: LocalRelation => slotOf(r) }.flatten
+    val ins = p.flatMap(_.expressions)
+      .flatMap(_.collect { case in: In if slotOf(in).isDefined => in })
+    ins.forall(in => in.list.forall(l =>
+      l.isInstanceOf[Literal] && l.dataType == in.value.dataType)) &&
+      used.subsetOf((rels ++ ins.flatMap(slotOf)).toSet)
+  }
+
+  /** The [[LeafProfile]] of a body's freshly built leaves: a leaf over
+    * one query relation is that slot's rows times the leaf's row width
+    * (Spark's estimate for a local relation and the projections over
+    * it); any other leaf is fixed at its optimized size estimate.
+    */
+  private def profileOf(leaves: Seq[DataFrame]): LeafProfile = {
+    val bySlot = leaves.map(l => l -> l.queryExecution.analyzed
+      .collect { case r: LocalRelation => slotOf(r) }.flatten)
+    val (local, stored) = bySlot.partition(_._2.nonEmpty)
+    LeafProfile(stored.map(l => leafBytes(l._1)).sum, local.map {
+      case (l, Seq(slot)) =>
+        slot -> EstimationUtils.getSizePerRow(l.queryExecution.analyzed.output)
+      case (_, slots) => throw new IllegalArgumentException(
+        s"a leaf over several query relations (${slots.mkString(", ")})")
+    })
   }
 
   /** Eagerly local-checkpoint `df` with the aggregate `metric`

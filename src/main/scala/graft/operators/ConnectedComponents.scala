@@ -270,15 +270,23 @@ object ConnectedComponents {
         .select(ext("id"),
           coalesce(col("acomp"), ext("component")).as("component"))
     foldPieces(labels, newEdges, aCol, bCol, broadcastNew) match {
-      // the driver fold's pieces are local relations: nothing
-      // downstream depends on persisted inputs, so an eager checkpoint
-      // would only add a materialization job (r17 JobProfile: 64
-      // near-empty tasks protecting nothing)
+      // the driver fold's pieces are driver data, so its relabel output
+      // is collected and returned as a local relation: a caller folding
+      // repeatedly in memory gets a constant plan depth instead of one
+      // more relabel join over the whole chain per fold (an eager
+      // checkpoint would truncate it too, with a materialization job
+      // per fold — r17 JobProfile: 64 near-empty tasks). Labels
+      // already on the driver relabel with no job at all.
       case LocalFold(lab, fresh, alt) =>
         val spark = lab.sparkSession
         import spark.implicits._
-        relabel(lab.unionByName(fresh.map(n => (n, n)).toDF("id", "component")),
-          alt.toSeq.toDF("aid", "acomp"))
+        val old = graft.core.Tables.localRows(lab) match {
+          case Some(rows) => rows.map(r => (r.getLong(0), r.getLong(1)))
+          case None => lab.as[(Long, Long)].collect().toSeq
+        }
+        (old ++ fresh.map(n => (n, n)))
+          .map { case (id, c) => (id, alt.getOrElse(c, c)) }
+          .toDF("id", "component")
       case DistFold(lab, newNodes, altMap, release) =>
         // localCheckpoint is eager: materialized before release fires
         try relabel(lab.unionByName(newNodes), altMap).localCheckpoint()

@@ -51,6 +51,42 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   */
 object IncrementalParquet {
 
+  /** In-JVM mutation count per table dir (normalized path), advanced
+    * by every public mutator below once it ends, failed or not.
+    */
+  private val mutations =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private def dirKey(dirStr: String): String = new Path(dirStr).toUri.getPath
+
+  /** Record that the table at `dirStr` changed (or may have, when the
+    * mutator failed part-way). Writers outside this object that change
+    * a table's files call it too.
+    */
+  def advanceGeneration(dirStr: String): Unit =
+    mutations.merge(dirKey(dirStr), 1L, (a, b) => a + b)
+
+  /** The generation of a stored table: changes whenever its files do.
+    * Two parts: the in-JVM mutation count ([[advanceGeneration]]),
+    * which covers every mutator (append, takedown, purge, compaction,
+    * rebuild swap), and the mtime of the ack dir `_ingested`, which
+    * every append through [[appendIdempotent]] touches when it creates
+    * its marker — so an append by another process shows too, at one
+    * file-status call per table. What derives from a table's listing
+    * or contents (a prepared serve plan, a corpus-scalar memo) keys on
+    * this value. Residual risk: another process's takedown, purge or
+    * compaction does not touch `_ingested`, and two appends within
+    * one mtime tick look like one.
+    */
+  def generation(spark: SparkSession, dirStr: String): (Long, Long) = {
+    val dir = new Path(dirStr)
+    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    val acks =
+      try fs.getFileStatus(new Path(dir, "_ingested")).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    (Option(mutations.get(dirKey(dirStr))).fold(0L)(_.longValue), acks)
+  }
+
   /** Layout pin file name — a `_`-prefixed sibling of the partition
     * dirs (parquet readers ignore it) holding the table's BIRTH layout
     * as `k=v` lines: the sort-cluster columns (`sort=bucket,band`) and
@@ -301,7 +337,7 @@ object IncrementalParquet {
       batchId: Long, sortCols: Seq[String] = Nil,
       pinExtra: Map[String, String] = Map.empty,
       markerNote: => String = "")(
-      batchRows: => DataFrame): Unit = {
+      batchRows: => DataFrame): Unit = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     recover(spark, dirStr, partCol)
@@ -344,7 +380,7 @@ object IncrementalParquet {
     // without it, which ackedNoteWatermark treats as unparsed
     if (note.nonEmpty) ack.write((note + "\n").getBytes("UTF-8"))
     ack.close()
-  }
+  } finally advanceGeneration(dirStr)
 
   /** Heal a table's compaction crash state — [[appendIdempotent]] runs
     * this FIRST, every trigger: a crashed full compact's retired
@@ -360,7 +396,7 @@ object IncrementalParquet {
     * O(partitions) orphan walk runs only behind the crashed-firing
     * sentinel (see recoverMinorState).
     */
-  def recover(spark: SparkSession, dirStr: String, partCol: String): Unit = {
+  def recover(spark: SparkSession, dirStr: String, partCol: String): Unit = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir)) {
@@ -370,7 +406,7 @@ object IncrementalParquet {
       // is visible from the _compact listing alone
       recoverMinorState(fs, dir, partCol)
     }
-  }
+  } finally advanceGeneration(dirStr)
 
   /** Whether `batchId` is already acked into `dirStr` — callers use
     * this to skip pre-append guards on replays (the replay itself
@@ -720,7 +756,7 @@ object IncrementalParquet {
     */
   def compactMinor(spark: SparkSession, dirStr: String, partCol: String,
       minBatchFiles: Int = 2, maxBaseFiles: Int = 8,
-      merge: DataFrame => DataFrame = identity): Int = {
+      merge: DataFrame => DataFrame = identity): Int = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return 0
@@ -814,7 +850,7 @@ object IncrementalParquet {
     fs.create(marker, true).close() // truncate: committed + cleaned
     fs.delete(new Path(markerDir, InflightFlag), false) // healthy exit
     toAbsorb.size
-  }
+  } finally advanceGeneration(dirStr)
 
   /** In-flight sentinel under `_compact/`: present exactly while a
     * minor firing may have installed uncommitted `c<g>-*` outputs.
@@ -972,7 +1008,7 @@ object IncrementalParquet {
   def compact(spark: SparkSession, dirStr: String, partCol: String,
       maxFilesPerPart: Int = 1,
       merge: DataFrame => DataFrame = identity)(
-      partValue: String => Any): Int = {
+      partValue: String => Any): Int = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     val stage = new Path(dir.getParent, s".${dir.getName}.compact")
@@ -1005,7 +1041,7 @@ object IncrementalParquet {
       .sorted
     if (fragmented.isEmpty) return 0
     rewriteWholePartitions(spark, dirStr, partCol, fragmented, merge)(partValue)
-  }
+  } finally advanceGeneration(dirStr)
 
   /** The whole-partition rewrite core shared by [[compact]] and
     * [[purgeTombstoned]]: partition-pruned read of ONLY the selected
@@ -1105,7 +1141,7 @@ object IncrementalParquet {
     * that may deliberately differ.
     */
   def rebuildSwap(spark: SparkSession, dirStr: String, partCol: String)(
-      build: String => Unit): Unit = {
+      build: String => Unit): Unit = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     recoverRebuildSwap(spark, dirStr)
@@ -1142,7 +1178,7 @@ object IncrementalParquet {
       throw new IllegalStateException(s"rename $stage -> $dir failed")
     fs.delete(new Path(dir, SwapReady), false)
     fs.delete(parked, true)
-  }
+  } finally advanceGeneration(dirStr)
 
   /** SERVE-SAFE crash recovery for [[rebuildSwap]] — idempotent, cheap
     * (existence checks on the healthy path), and callable from a serve
@@ -1161,7 +1197,7 @@ object IncrementalParquet {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     val (stage, parked) = rebuildPaths(dir)
-    if (!fs.exists(dir)) {
+    if (!fs.exists(dir)) try {
       if (fs.exists(new Path(stage, SwapReady))) {
         // crashed between the two renames: the new generation is
         // complete (markers carried, ready-marked) — finish the swap
@@ -1175,7 +1211,8 @@ object IncrementalParquet {
         if (!fs.rename(parked, dir))
           throw new IllegalStateException(s"rename $parked -> $dir failed")
       }
-    } else {
+    } finally advanceGeneration(dirStr)
+    else {
       fs.delete(new Path(dir, SwapReady), false) // settle a rolled-forward dir
       // live + parked together only ever means "crashed after install":
       // a healthy in-flight swap holds the two states disjointly
@@ -1257,9 +1294,9 @@ object IncrementalParquet {
     */
   def appendTombstonesIdempotent(spark: SparkSession, dirStr: String,
       keyCol: String, batchId: Long)(keys: => DataFrame): Unit =
-    appendIdempotent(spark, tombstoneDir(dirStr), "tb", batchId) {
+    try appendIdempotent(spark, tombstoneDir(dirStr), "tb", batchId) {
       keys.select(col(keyCol)).distinct().withColumn("tb", lit(0))
-    }
+    } finally advanceGeneration(dirStr)
 
   /** Whether a replayed takedown batch is already acked. */
   def tombstoneAcked(
@@ -1310,7 +1347,7 @@ object IncrementalParquet {
     * the number of partitions rewritten.
     */
   def purgeTombstoned(spark: SparkSession, dirStr: String, partCol: String,
-      keyCol: String)(partValue: String => Any): Int = {
+      keyCol: String)(partValue: String => Any): Int = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     val tombOpt = tombstoneKeys(spark, dirStr, keyCol)
@@ -1346,7 +1383,7 @@ object IncrementalParquet {
     // replayed delete batch can never re-append
     if (skipped.isEmpty) clearTombstoneRows(fs, new Path(tombstoneDir(dirStr)))
     purged
-  }
+  } finally advanceGeneration(dirStr)
 
   /** Crash-safe REPLACEMENT of every row carrying one of `keys` with
     * `fresh` — the deletion lifecycle's third arm, for SET-UNION state
@@ -1367,7 +1404,7 @@ object IncrementalParquet {
     */
   def replaceKeyRows(spark: SparkSession, dirStr: String, partCol: String,
       keyCol: String, keys: Seq[String], fresh: DataFrame)(
-      partValue: String => Any): Int = {
+      partValue: String => Any): Int = try {
     val dir = new Path(dirStr)
     val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir) || keys.isEmpty) return 0
@@ -1382,7 +1419,7 @@ object IncrementalParquet {
     rewriteWholePartitions(spark, dirStr, partCol, selected,
       old => old.filter(!col(keyCol).isin(keys: _*))
         .unionByName(fresh))(partValue)
-  }
+  } finally advanceGeneration(dirStr)
 
   private def clearTombstoneRows(fs: FileSystem, tdir: Path): Unit = {
     if (!fs.exists(tdir)) return

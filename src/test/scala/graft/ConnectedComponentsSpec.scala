@@ -195,6 +195,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("a 50-fold in-memory chain of driver folds keeps a constant plan " +
+      "depth and ends at the full recompute") {
+    import spark.implicits._
+    def depth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      1 + (p.children.map(depth) :+ 0).max
+    val rnd = new scala.util.Random(50)
+    val batches = Seq.fill(50)(Seq.fill(3)(
+      (rnd.nextInt(120).toLong + 1, rnd.nextInt(120).toLong + 1)))
+    val old = Seq((1L, 2L), (3L, 4L))
+    var labels = ConnectedComponents.runAdaptive(old.toDF("a", "b"), "a", "b")._1
+    val depths = batches.map { b =>
+      labels = ConnectedComponents.incremental(labels, b.toDF("a", "b"), "a", "b")
+      depth(labels.queryExecution.analyzed)
+    }
+    assert(depths.distinct.size == 1, depths)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      unionFind(old ++ batches.flatten))
+  }
+
   test("incremental fold handles merges, new nodes, and repeated batches") {
     import spark.implicits._
     // batch 1 bridges two existing components AND brings an entirely

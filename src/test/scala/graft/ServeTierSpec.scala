@@ -108,6 +108,29 @@ class ServeTierSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e9 < 8)
   }
 
+  test("fusion arms: more concurrent distributed hybrid requests than the " +
+      "arm pool has threads return the serial rows and leave no job running") {
+    val n = RetrievalQueries.ArmPoolSize + 2
+    val reqs = (0 until n).map(i => Seq(texts(i % 2) -> vectors(i % 2)))
+    def hybrid(r: Seq[(String, Array[Float])]) =
+      served(() => RetrievalQueries.hybridSearch(spark, dir, r))
+    withDistributedServes {
+      val serial = reqs.map(hybrid)
+      val threads = java.util.concurrent.Executors.newFixedThreadPool(n)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val fs = reqs.map(r => threads.submit(
+          new java.util.concurrent.Callable[Seq[Row]] {
+            def call(): Seq[Row] = { start.await(); hybrid(r) }
+          }))
+        start.countDown()
+        assert(fs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)) == serial)
+      } finally threads.shutdownNow()
+    }
+    org.apache.spark.graftspec.Bus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
   test("an exact-match query vector retrieves its stored twin at rank 1") {
     val ann = served(entries(2)._2).filter(_.getLong(0) == 0L)
     assert(ann.head.getLong(1) == 3L && ann.head.getInt(2) == 1, ann)
