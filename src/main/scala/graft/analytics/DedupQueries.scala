@@ -601,16 +601,6 @@ object DedupQueries {
       Murmur3Hash(Seq(Literal(id)), 42).eval(null).asInstanceOf[Int], n)
   }
 
-  /** Cap on rows a batch-bounded frame may hold to be collected as a
-    * driver-local relation (1M rows ≈ the same size class as the
-    * broadcast the plan would otherwise build from it — collecting is
-    * never worse than broadcasting, which also stages through the
-    * driver). Conf-readable as a test seam (`graft.dedup.driverFrameCap`
-    * = 0 forces every fallback arm) and a deployment knob.
-    */
-  private[graft] def frameCap(s: SparkSession): Int =
-    s.conf.get("graft.dedup.driverFrameCap", (1 << 20).toString).toInt
-
   /** Max probe-key values pushed into a parquet scan as an `In`
     * predicate. See [[keyPruned]] for the (512, 4096] band rationale.
     */
@@ -691,7 +681,7 @@ object DedupQueries {
     * into the labels table by earlier triggers) are not re-derived.
     *
     * At streaming cadence (`broadcastBatch`, every batch-bounded frame
-    * under [[frameCap]]) the pairs derive on the driver
+    * under [[Tables.driverRowCap]]) the pairs derive on the driver
     * ([[batchVerifiedPairsLocal]]); otherwise, or over the cap, the
     * distributed shape runs ([[batchVerifiedPairsDistributed]]). Both
     * return the same rows.
@@ -735,13 +725,13 @@ object DedupQueries {
     * caller must have healed compaction crash state first
     * ([[graft.sinks.IncrementalParquet.recover]]).
     *
-    * None when a batch-bounded frame exceeds [[frameCap]].
+    * None when a batch-bounded frame exceeds [[Tables.driverRowCap]].
     */
   private[graft] def batchVerifiedPairsLocal(
       s: SparkSession, sigDir: String, batch: DataFrame,
       threshold: Double): Option[DataFrame] = {
     val nBuckets = tableBuckets(s, sigDir)
-    val cap = frameCap(s)
+    val cap = Tables.driverRowCap(s)
     // wide rows (shingle sets): the tighter cap the fetch uses too
     val wideCap = math.min(cap, 1 << 16)
     collectLocal(rawSignatures(batch), wideCap).flatMap { case (mine, mineDf) =>
@@ -799,7 +789,8 @@ object DedupQueries {
   }
 
   /** The distributed arm of [[batchVerifiedPairs]] (backfill-sized
-    * batches, `broadcastBatch = false`, or frames over [[frameCap]]).
+    * batches, `broadcastBatch = false`, or frames over
+    * [[Tables.driverRowCap]]).
     * Per-trigger stored-table IO (the maintenance-series axis — at
     * 1000:1 corpus:batch ratios the stored-table SCANS are what
     * dominate a trigger):
@@ -1303,7 +1294,7 @@ object DedupQueries {
     // build is free. Over-cap (backfill misuse of broadcastBatch)
     // falls back to the checkpointed shape, re-paying the kernel once.
     val bbPlan = bucketedSignBuckets(batch, bands, bits, nBuckets)
-    val bbLocal = if (broadcastBatch) collectLocal(bbPlan, frameCap(s)) else None
+    val bbLocal = if (broadcastBatch) collectLocal(bbPlan, Tables.driverRowCap(s)) else None
     val bb = bbLocal.map(_._2).getOrElse(bbPlan.localCheckpoint())
     // broadcast the batch side by default, for the same reason as the
     // lexical mirror: corpus bucket rows are scanned, never exchanged
@@ -1343,7 +1334,7 @@ object DedupQueries {
     // (ids, hash buckets and the pushed key set then derive
     // driver-side with zero further jobs); over-cap → checkpoint.
     val candLocal =
-      if (broadcastBatch) collectLocal(candPlan, frameCap(s)) else None
+      if (broadcastBatch) collectLocal(candPlan, Tables.driverRowCap(s)) else None
     val cand = candLocal.map(_._2).getOrElse(candPlan.localCheckpoint())
     // ONE bucket-pruned pass over the loop-owned vector table:
     // candidate ids alone determine which bkt= partitions can hold
@@ -1387,7 +1378,7 @@ object DedupQueries {
     // relations: same kernel, same float order as the batch build.
     val vecsLocal =
       if (candIdsLocal.isDefined)
-        collectLocal(vecsPlan, math.min(frameCap(s), 1 << 16))
+        collectLocal(vecsPlan, math.min(Tables.driverRowCap(s), 1 << 16))
       else None
     // The guard, either way: the vector store is the verify's source
     // of truth (unlike the lexical loop, whose shingle sets live
@@ -1797,7 +1788,7 @@ object DedupQueries {
     val n = tableBuckets(s, winDir)
     val bwPlan = explodedSpanWindows(batch)
     val bwLocal =
-      if (broadcastBatch) collectLocal(bwPlan, frameCap(s)) else None
+      if (broadcastBatch) collectLocal(bwPlan, Tables.driverRowCap(s)) else None
     val bw = bwLocal.map(_._2).getOrElse(bwPlan.localCheckpoint())
     val a0 = bw.select(col("doc_id").as("id_n"), col("pos").as("pn"),
       col("fp"))

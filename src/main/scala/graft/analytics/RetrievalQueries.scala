@@ -348,21 +348,15 @@ object RetrievalQueries {
     */
   private def queryTerms(docs: DataFrame, nQueries: Int = NQueries): DataFrame = {
     val s = docs.sparkSession
-    val maxLit = s.conf.get(
-      PushdownTermsMaxKey, PushdownTermsMaxDefault.toString).toLong
-    if (nQueries.toLong * TermsPerQuery <= maxLit) {
+    if (nQueries.toLong * TermsPerQuery <= PushdownTermsMax) {
       // Driver-sized by the same bound that picks the literal fetch
-      // arm: ONE slim collect (the query docs' ids + texts behind the
-      // pushed doc_id filter) and the DRIVER-SIDE salient-term cut —
-      // the [[externalQueryTerms]] tokenizer/tie-break, whose identity
-      // with [[queryTermsAll]] is property-pinned (RetrievalSpec) and
-      // hash-gated (q_bm25_text). r17 localized the RESULT of the
-      // distributed tokenize+tf-window subtree (one collect job over a
-      // 3-exchange chain ≈ 4 AQE stage jobs per serve); deriving the
-      // cut on the driver makes it ONE scan job (r18 — the interactive
-      // walls are job-count × driver gap, JobProfile). Bulk batches
-      // past the bound keep the distributed frame — same escape hatch
-      // as the postings JOIN arm.
+      // arm: ONE slim collect of the query docs' texts and the
+      // DRIVER-SIDE salient-term cut ([[externalQueryTerms]]'s
+      // tokenizer and tie-break, property-pinned against
+      // [[queryTermsAll]] in RetrievalSpec and hash-gated by
+      // q_bm25_text): one scan job where the distributed frame runs a
+      // 3-exchange chain. Bulk batches past the bound keep that frame,
+      // like the postings JOIN arm.
       import s.implicits._
       queryDocTexts(docs, nQueries)
         .flatMap { case (id, text) => salientTerms(text).map(t => (id, t)) }
@@ -400,10 +394,7 @@ object RetrievalQueries {
 
   /** The stored-index BM25 serve at an arbitrary query-batch size —
     * the library form behind q_bm25_served (which fixes nQueries to
-    * the gated catalog value). Used by the batch-amortization probe:
-    * the per-query cost of a stored-index serve falls with batch size
-    * because the posting-list scan and the scalar aggregation are paid
-    * once per BATCH, not per query.
+    * the gated catalog value).
     */
   def bm25ServedTopK(s: SparkSession, dir: String, nQueries: Int): DataFrame =
     bm25Project(bm25ServedRanked(s, dir, nQueries))
@@ -420,9 +411,8 @@ object RetrievalQueries {
     * reads the postings table once and semi-joins the (still
     * vocab-bounded, broadcastable) distinct-term frame — no collect,
     * no literal explosion; at that query scale a full index pass is
-    * the right plan. Runtime conf so specs and probes force either
-    * arm; default set at the measured crossover (SCALING.md round 15,
-    * "Size-aware BM25 serve arms";
+    * the right plan. Set at the measured crossover (SCALING.md round
+    * 15, "Size-aware BM25 serve arms";
     * 200k docs × 100k-term synthetic vocabulary, warm medians:
     * literal/join 1.02/1.84 s at 15 terms, 1.63/2.43 at 1.5k,
     * 2.79/3.77 at 6k, 4.53/4.72 at 18k, 6.55/5.91 at 45k — crossover
@@ -431,8 +421,7 @@ object RetrievalQueries {
     * collect+planning cost is corpus-independent — see SCALING.md
     * round 15).
     */
-  private[graft] val PushdownTermsMaxKey = "graft.bm25.pushdownTermsMax"
-  private[graft] val PushdownTermsMaxDefault = 16384
+  private val PushdownTermsMax = 16384L
 
   /** The stored-index serve as a RANKED relation (q_id, n_id, matched,
     * score, rank) — the BM25 arm of the indexed hybrid fusion and the
@@ -475,7 +464,7 @@ object RetrievalQueries {
     val qt = externalTermRows(queries)
     val (terms, bkts) = Tables.valueBucketsLocal(
       qt.map(_.getString(1)), DedupQueries.tableBuckets(s, pstDir))
-    val literal = literalArm(s, queries.size.toLong * TermsPerQuery)
+    val literal = queries.size.toLong * TermsPerQuery <= PushdownTermsMax
     Tables.Request(s"bm25|$pstDir|$dlDir|$literal",
       (graft.sinks.IncrementalParquet.generation(s, pstDir),
         graft.sinks.IncrementalParquet.generation(s, dlDir)),
@@ -584,7 +573,7 @@ object RetrievalQueries {
   }
 
   /** The stored-index serve body over an arbitrary query-term frame:
-    * arm choice (see [[PushdownTermsMaxKey]]), pruned postings fetch,
+    * arm choice (see [[PushdownTermsMax]]), pruned postings fetch,
     * corpus scalars, ranking.
     */
   private def bm25RankedFromIndex(s: SparkSession, dir: String,
@@ -598,18 +587,11 @@ object RetrievalQueries {
   private[graft] def bm25RankedFromDirs(s: SparkSession,
       dirs: (String, String),
       qt: DataFrame, termBound: Long): DataFrame =
-    bm25Served(s, dirs, qt, literalArm(s, termBound), {
+    bm25Served(s, dirs, qt, termBound <= PushdownTermsMax, {
       val nb = DedupQueries.tableBuckets(s, dirs._1)
       val (terms, bkts) = Tables.valueBuckets(qt.select(col("term")), nb)
       col("bkt").isin(bkts: _*) && col("term").isin(terms: _*)
     }).run
-
-  /** Whether a request of `termBound` query terms takes the literal
-    * arm ([[PushdownTermsMaxKey]]).
-    */
-  private def literalArm(s: SparkSession, termBound: Long): Boolean =
-    termBound <= s.conf.get(
-      PushdownTermsMaxKey, PushdownTermsMaxDefault.toString).toLong
 
   /** The stored-index BM25 body as a [[Tables.Served]] body: the
     * pruned postings, the doc stats and the query terms are its leaves,
@@ -2058,7 +2040,7 @@ object RetrievalQueries {
     */
   private def rrfFuseSized(s: SparkSession, numQueries: Long,
       mkBt: => DataFrame, mkCt: => DataFrame): DataFrame =
-    if (!mmrBulk(s, numQueries)) {
+    if (!mmrBulk(numQueries)) {
       val (btRows, ctRows) = inParallel(collectArm(mkBt), collectArm(mkCt))
       rrfFuseDfLocal(s, rrfFuseLocal(btRows.toSeq, ctRows.toSeq))
     } else rrfFuse(mkBt, mkCt)
@@ -2209,17 +2191,17 @@ object RetrievalQueries {
       pool: Int, picks: Int, lam: Double): DataFrame =
     mmrSelect(
       mmrIndexedCandidates(s, dir, mmrCorpusQueryFrame(s, dir, nQueries),
-        pool, bulk = mmrBulk(s, nQueries.toLong)),
+        pool, bulk = mmrBulk(nQueries.toLong)),
       picks, lam, nQueries.toLong)
 
   /** Corpus-size threshold (bytes, embeddings-table stats) above which
     * [[mmrSearchVectors]] pools candidates from the stored-codes ANN
     * serve instead of the exact full-corpus cosine scan — the
-    * [[HybridExactMaxBytesKey]] recipe: the exact pool is the right
+    * [[HybridExactMaxBytes]] recipe: the exact pool is the right
     * plan only while the corpus is small enough that index plumbing
     * costs more than the scan it avoids, and the switch trades recall
-    * for scan cost exactly like any ANN-vs-exact choice. Default set
-    * at the MEASURED intersection, not an extrapolation (round 17,
+    * for scan cost exactly like any ANN-vs-exact choice. Set at the
+    * MEASURED intersection, not an extrapolation (round 17,
     * SCALING.md "Round 17: MMR exact/indexed crossover measured where
     * the scan dominates", forced-arm warm medians): at 5 MB the
     * exact arm wins every batch size (0.45 vs 0.89 s at nq=10); at
@@ -2233,51 +2215,69 @@ object RetrievalQueries {
     * real cluster moves it, since the scan term grows with IO while
     * the indexed serve stays candidate-bounded.
     */
-  private[graft] val MmrExactMaxBytesKey = "graft.mmr.exactMaxBytes"
-  private[graft] val MmrExactMaxBytesDefault = 16L * 1024 * 1024
+  private val MmrExactMaxBytes = 16L * 1024 * 1024
 
   /** MMR-diversified top-k for EXTERNAL query vectors — the
     * diversified sibling of [[SimilarityQueries.annSearchVectors]]:
     * raw vectors in, (q_id = input position, n_id, pick, mmr_score)
     * out, negative internal ids so corpus self-exclusion never fires.
     * Size-aware: the candidate pool is exact below
-    * [[MmrExactMaxBytesKey]] and the stored-codes ANN serve above it,
+    * [[MmrExactMaxBytes]] and the stored-codes ANN serve above it,
     * so an interactive user gets the near-flat indexed tier at scale
     * without choosing.
     */
   def mmrSearchVectors(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], pool: Int = FuseDepth,
       picks: Int = MmrPicks, lam: Double = 0.5): DataFrame = {
-    val rows = vectors.zipWithIndex
-      .map { case (v, i) => Row(-(i + 1).toLong, v) }
-    def query(q: DataFrame) =
-      q.select(col("q_id"), col("qv"), l2Norm(col("qv")).as("qn"))
-    def external(picked: DataFrame) = picked
-      .withColumn("q_id", -col("q_id") - 1)
-      .orderBy(col("q_id"), col("pick"))
-    val threshold = s.conf.get(
-      MmrExactMaxBytesKey, MmrExactMaxBytesDefault.toString).toLong
     val embKey = Tables.derivedStateKey(s, dir, "embeddings")
-    val nq = vectors.size.toLong
-    if (embeddingsBytes(s, dir, embKey) <= threshold) {
-      // the exact pool, bound into the entry's template: in the
-      // one-partition tier the template is the whole request
-      val p = Tables.Request(s"mmrSearchVectors|$embKey|$pool|$picks|$lam",
-        embKey, Tables.Bindings(rows = Map("q" -> (MmrQuerySchema, rows))),
-        sl => {
-          val sv = mmrExactServed(s, dir, query(sl.rows("q")), pool, picks, lam)
-          Tables.Served(sv.leaves, tier =>
-            if (tier.onePartition) external(sv.plan(tier)) else sv.plan(tier))
-        }).prepare(s)
-      val tier = if (mmrBulk(s, nq)) Tables.Tier.Planner else p.tier
-      if (tier.onePartition) p.plan(tier)
-      else external(mmrSelect(p.plan(tier), picks, lam, nq))
-    } else external(mmrSelect(
-      mmrIndexedCandidates(s, dir,
-        query(s.createDataFrame(java.util.Arrays.asList(rows: _*), MmrQuerySchema)),
-        pool, bulk = mmrBulk(s, nq)),
-      picks, lam, nq))
+    if (embeddingsBytes(s, dir, embKey) <= MmrExactMaxBytes)
+      mmrVectorsExact(s, dir, embKey, vectors, pool, picks, lam)
+    else mmrVectorsIndexed(s, dir, vectors, pool, picks, lam)
   }
+
+  /** The exact-pool arm of [[mmrSearchVectors]] at embeddings
+    * generation `embKey`; in the one-partition tier the entry's
+    * template is the whole request.
+    */
+  private[graft] def mmrVectorsExact(s: SparkSession, dir: String,
+      embKey: String, vectors: Seq[Array[Float]], pool: Int, picks: Int,
+      lam: Double): DataFrame = {
+    val nq = vectors.size.toLong
+    val rows = mmrQueryRows(vectors)
+    val p = Tables.Request(s"mmrSearchVectors|$embKey|$pool|$picks|$lam",
+      embKey, Tables.Bindings(rows = Map("q" -> (MmrQuerySchema, rows))),
+      sl => {
+        val sv = mmrExactServed(s, dir, mmrQuery(sl.rows("q")), pool, picks, lam)
+        Tables.Served(sv.leaves, tier =>
+          if (tier.onePartition) mmrExternal(sv.plan(tier)) else sv.plan(tier))
+      }).prepare(s)
+    val tier = if (mmrBulk(nq)) Tables.Tier.Planner else p.tier
+    if (tier.onePartition) p.plan(tier)
+    else mmrExternal(mmrSelect(p.plan(tier), picks, lam, nq))
+  }
+
+  /** The indexed-pool arm of [[mmrSearchVectors]]. */
+  private[graft] def mmrVectorsIndexed(s: SparkSession, dir: String,
+      vectors: Seq[Array[Float]], pool: Int, picks: Int,
+      lam: Double): DataFrame = {
+    val nq = vectors.size.toLong
+    val q = mmrQuery(s.createDataFrame(
+      java.util.Arrays.asList(mmrQueryRows(vectors): _*), MmrQuerySchema))
+    mmrExternal(mmrSelect(
+      mmrIndexedCandidates(s, dir, q, pool, bulk = mmrBulk(nq)), picks, lam, nq))
+  }
+
+  /** An external MMR batch as (q_id, qv) rows on negative ids. */
+  private def mmrQueryRows(vectors: Seq[Array[Float]]): Seq[Row] =
+    vectors.zipWithIndex.map { case (v, i) => Row(-(i + 1).toLong, v) }
+
+  private def mmrQuery(q: DataFrame): DataFrame =
+    q.select(col("q_id"), col("qv"), l2Norm(col("qv")).as("qn"))
+
+  /** Picks back on input positions, in (q_id, pick) order. */
+  private def mmrExternal(picked: DataFrame): DataFrame = picked
+    .withColumn("q_id", -col("q_id") - 1)
+    .orderBy(col("q_id"), col("pick"))
 
   /** The (q_id, qv) schema of an external MMR query batch. */
   private val MmrQuerySchema = StructType(Seq(
@@ -2322,7 +2322,7 @@ object RetrievalQueries {
     // pool is then a shuffle join, still never all-pairs materialized
     // past the rank cut
     val tier =
-      if (mmrBulk(s, numQueries)) Tables.Tier.Planner
+      if (mmrBulk(numQueries)) Tables.Tier.Planner
       else Tables.tier(served.leaves: _*)
     if (tier.onePartition) served.plan(tier)
     else mmrSelect(served.plan(tier), picks, lam, numQueries)
@@ -2539,7 +2539,7 @@ object RetrievalQueries {
   }
 
   /** Query-batch-size bound (count of queries — known on the driver
-    * before any job, the [[PushdownTermsMaxKey]] discipline) above
+    * before any job, the [[PushdownTermsMax]] discipline) above
     * which the diversified family's greedy and candidate-fetch stages
     * switch from the interactive driver arm (collect + literal-pruned
     * point fetch + driver arithmetic) to the distributed bulk arm
@@ -2558,23 +2558,20 @@ object RetrievalQueries {
     * arm's id-pruned point fetch (O(candidates) IO) is the right plan
     * exactly while the candidate-id set fits the literal-pushdown
     * discipline: 512 queries × pool 20 = 10,240 ids, just under the
-    * [[PushdownTermsMaxDefault]] 16,384-literal line. Above it the
+    * [[PushdownTermsMax]] 16,384-literal line. Above it the
     * literal stops pruning anyway and the measured-everywhere-faster
     * bulk arm takes over.
     */
-  private[graft] val MmrBulkQueriesMinKey = "graft.mmr.bulkQueriesMin"
-  private[graft] val MmrBulkQueriesMinDefault = 512L
+  private val MmrBulkQueriesMin = 512L
 
-  private def mmrBulk(s: SparkSession, numQueries: Long): Boolean =
-    numQueries > s.conf.get(
-      MmrBulkQueriesMinKey, MmrBulkQueriesMinDefault.toString).toLong
+  private def mmrBulk(numQueries: Long): Boolean = numQueries > MmrBulkQueriesMin
 
   /** Size-aware greedy dispatch — driver arm at interactive batch
-    * sizes, distributed arm above [[MmrBulkQueriesMinKey]].
+    * sizes, distributed arm above [[MmrBulkQueriesMin]].
     */
   private def mmrSelect(cand: DataFrame, picks: Int, lam: Double,
       numQueries: Long): DataFrame =
-    if (mmrBulk(cand.sparkSession, numQueries))
+    if (mmrBulk(numQueries))
       mmrGreedyDistributed(cand, picks, lam)
     else mmrGreedy(cand, picks, lam)
 
@@ -2773,7 +2770,7 @@ object RetrievalQueries {
     * two index serves. Size-aware like every retrieval entry: at
     * interactive batch sizes the vectors arrive by id-pruned point
     * fetch and the greedy runs driver-side; above
-    * [[MmrBulkQueriesMinKey]] the fetch is an un-hinted join and the
+    * [[MmrBulkQueriesMin]] the fetch is an un-hinted join and the
     * per-query greedy runs distributed (same kernel — arm-identity
     * pinned).
     */
@@ -2795,7 +2792,7 @@ object RetrievalQueries {
   private def diversifiedSized(s: SparkSession, dir: String,
       numQueries: Long, picks: Int, lam: Double,
       mkBt: => DataFrame, mkCt: => DataFrame): DataFrame =
-    if (mmrBulk(s, numQueries))
+    if (mmrBulk(numQueries))
       mmrSelect(fusedCandidates(s, dir, rrfFusedRanked(mkBt, mkCt)),
         picks, lam, numQueries)
     else {
@@ -2895,8 +2892,8 @@ object RetrievalQueries {
     * The exact tier's vector arm is a brute-force cosine scan — the
     * right plan only while the corpus is small enough that index
     * plumbing costs more than the scan it avoids (tiny-input walls are
-    * job-count × planning floors — the re-rank fetch lesson). Default
-    * set at the measured crossover, re-measured in round 16 after the
+    * job-count × planning floors — the re-rank fetch lesson). Set at
+    * the measured crossover, re-measured in round 16 after the
     * serve-floor cuts (memoized codebook + corpus scalars) moved it
     * DOWN: exact/indexed 1.79/1.60 s at sf0.01 = 80 KB (near-tie),
     * 2.74/2.13 at sf0.1 = 0.80 MB, 2.58/2.31 at sf1 = 5.2 MB — the
@@ -2905,12 +2902,11 @@ object RetrievalQueries {
     * the exact tier's exact vector ranking is worth keeping) and the
     * first clear indexed win.
     */
-  private[graft] val HybridExactMaxBytesKey = "graft.hybrid.exactMaxBytes"
-  private[graft] val HybridExactMaxBytesDefault = 512L * 1024
+  private val HybridExactMaxBytes = 512L * 1024
 
   /** Size-aware hybrid retrieval — the single library entry point: the
     * arm is picked from the embeddings table's optimizer stats against
-    * [[HybridExactMaxBytesKey]], so a user gets the oracle-exact tier
+    * [[HybridExactMaxBytes]], so a user gets the oracle-exact tier
     * on a small corpus and the near-flat indexed tier at scale without
     * choosing (the exactReRankTail precedent). Both tiers stay
     * available directly ([[hybridRrfExact]]/[[hybridRrfIndexed]], each
@@ -2920,11 +2916,8 @@ object RetrievalQueries {
     * like any ANN-vs-exact choice.
     */
   def hybridRrf(s: SparkSession, dir: String, nQueries: Int): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val threshold = s.conf.get(
-      HybridExactMaxBytesKey, HybridExactMaxBytesDefault.toString).toLong
-    val corpusBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (corpusBytes <= threshold) hybridRrfExact(s, dir, nQueries)
+    if (t(s, dir, "embeddings").queryExecution.optimizedPlan.stats.sizeInBytes <=
+        HybridExactMaxBytes) hybridRrfExact(s, dir, nQueries)
     else hybridRrfIndexed(s, dir, nQueries)
   }
 

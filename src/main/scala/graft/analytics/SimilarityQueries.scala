@@ -1233,16 +1233,14 @@ object SimilarityQueries {
 
   /** Corpus-size threshold (bytes) above which [[exactReRankTail]]
     * switches from the fused broadcast-probe fetch to the collected
-    * point fetch. Runtime conf so specs and probes can force either
-    * arm; default set at the measured crossover (SCALING.md round 14,
-    * "The stored-serve re-rank tail made size-aware", nq=10,
-    * warm medians: fused/point 0.44/0.49 s at sf0.1 (0.8 MB — the
-    * job floor still wins), 0.63/0.45 s at sf1 (5.1 MB), 0.62/0.60 s
-    * at sf10 (51 MB, where the shared ADC stage dominates both arms) —
-    * see SCALING.md round 14).
+    * point fetch ([[pointFetch]]). Set at the measured crossover
+    * (SCALING.md round 14, "The stored-serve re-rank tail made
+    * size-aware", nq=10, warm medians: fused/point 0.44/0.49 s at
+    * sf0.1 (0.8 MB — the job floor still wins), 0.63/0.45 s at sf1
+    * (5.1 MB), 0.62/0.60 s at sf10 (51 MB, where the shared ADC stage
+    * dominates both arms).
     */
-  private[graft] val ReRankFetchBytesKey = "graft.ann.rerankFetchBytes"
-  private[graft] val ReRankFetchBytesDefault = 4L * 1024 * 1024
+  private val ReRankFetchBytes = 4L * 1024 * 1024
 
   /** Exact-cosine re-rank tail shared by every stored-codes serve:
     * fetch full vectors ONLY for the candidate set (≤ topC × nQueries
@@ -1271,19 +1269,9 @@ object SimilarityQueries {
       e: DataFrame, cand: DataFrame, qn: DataFrame,
       depth: Int, tier: Tables.Tier,
       collect: DataFrame => Array[Row] = _.collect()): DataFrame = {
-    val s = e.sparkSession
-    val threshold = s.conf.get(
-      ReRankFetchBytesKey, ReRankFetchBytesDefault.toString).toLong
-    val corpusBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
     val (probe, candDf) =
-      if (corpusBytes <= threshold) (e, cand)
-      else {
-        val rows = collect(cand).toSeq
-        val nIdAt = cand.schema.fieldIndex("n_id")
-        val ids = rows.map(_.getLong(nIdAt)).distinct
-        (e.filter(col("vec_id").isin(ids: _*)),
-          localDf(s, cand.schema, rows))
-      }
+      if (e.queryExecution.optimizedPlan.stats.sizeInBytes <= ReRankFetchBytes) (e, cand)
+      else pointFetch(e, cand, collect)
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
     val fetched = tier.single(tier.leaf(probe)
@@ -1298,6 +1286,19 @@ object SimilarityQueries {
         round(col("ad2"), 4).as("approx_d2"),
         round(col("cos"), 4).as("cosine"))
       .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** The POINT FETCH arm of [[exactReRankTail]]: the re-rank's probe
+    * side (`e` cut to the candidates' ids by an `In` predicate that
+    * pushes to the parquet scan) and its candidate side (`cand`
+    * collected by `collect` into a local relation).
+    */
+  private[graft] def pointFetch(e: DataFrame, cand: DataFrame,
+      collect: DataFrame => Array[Row]): (DataFrame, DataFrame) = {
+    val rows = collect(cand).toSeq
+    val ids = rows.map(_.getLong(cand.schema.fieldIndex("n_id"))).distinct
+    (e.filter(col("vec_id").isin(ids: _*)),
+      localDf(e.sparkSession, cand.schema, rows))
   }
 
   /** Stored-index serve for the residual family — the analog of

@@ -170,6 +170,17 @@ object Tables {
     }
   }
 
+  /** Rows a driver-side collect may hold before its caller takes the
+    * distributed arm (the dedup maintainer's batch-bounded frames, the
+    * connected-components edge lists): 1M rows, ≈ 16 MB of long pairs,
+    * the size class of the broadcast the caller would otherwise build
+    * from them. `0` sends every capped collect to its distributed arm.
+    */
+  private[graft] def driverRowCap(spark: SparkSession): Int =
+    spark.conf.get(DriverRowCapKey, (1 << 20).toString).toInt
+
+  private[graft] val DriverRowCapKey = "graft.driver.rowCap"
+
   /** The execution shape of one request's plan. Every Spark job costs a
     * scheduler round trip, and AQE runs each exchange and broadcast of
     * a plan as a job of its own, so an interactive request over a few
@@ -280,7 +291,7 @@ object Tables {
   }
 
   /** The mark of a slot node: a query relation or a literal `In`. */
-  private val SlotTag = TreeNodeTag[String]("graft.slot")
+  private val SlotTag = TreeNodeTag[String]("graftSlot")
 
   private def slotOf(n: TreeNode[_]): Option[String] = n.getTagValue(SlotTag)
 
@@ -345,8 +356,17 @@ object Tables {
     */
   private val templates = new java.util.concurrent.ConcurrentHashMap[String, Template]()
 
+  /** Templates kept at most: keys carry caller dials (MMR's λ, ANN's
+    * nprobe), so a dial sweep would grow the map without bound. A new
+    * key past the cap drops them all. One pass over the five search
+    * entries keeps 6 keys per corpus.
+    */
+  private[graft] val MaxTemplates = 64
+
   /** Forget every template: each entry's next request builds fresh. */
   private[graft] def dropTemplates(): Unit = templates.clear()
+
+  private[graft] def templateCount: Int = templates.size
 
   /** A served body prepared for one request: its tier and its plan in
     * any tier, from the template when one is kept, else built fresh
@@ -355,8 +375,11 @@ object Tables {
     */
   final class Prepared private[Tables] (spark: SparkSession, key: String,
       token: AnyRef, b: Bindings, body: Slots => Served) {
-    private lazy val template = templates.compute(key, (_, t) =>
-      if (t != null && t.token == token) t else new Template(token))
+    private lazy val template = {
+      if (templates.size >= MaxTemplates && !templates.containsKey(key)) dropTemplates()
+      templates.compute(key, (_, t) =>
+        if (t != null && t.token == token) t else new Template(token))
+    }
     private lazy val fresh: (Slots, Served) = {
       val sl = new Slots(spark, b)
       (sl, body(sl))

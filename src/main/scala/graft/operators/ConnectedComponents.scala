@@ -93,9 +93,9 @@ object ConnectedComponents {
     // a LocalRelation with changed = 0, so both [[run]] and
     // [[runAdaptive]] exit before any distributed round. Over-cap
     // graphs — the 100 TB shape — keep the distributed loop unchanged;
-    // `graft.cc.driverEdgeCap = 0` forces it (ConnectedComponentsSpec
-    // pins output equality across both arms).
-    if (edgeCount <= driverEdgeCap(edges.sparkSession) &&
+    // a driver cap of 0 forces it (ConnectedComponentsSpec pins
+    // output equality across both arms).
+    if (edgeCount <= graft.core.Tables.driverRowCap(edges.sparkSession) &&
         e.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType)) {
       val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -403,7 +403,7 @@ object ConnectedComponents {
     val pairs = newEdges.select(col(aCol).as("src"), col(bCol).as("dst"))
     val longOnly = (pairs.schema.fields ++ labels.schema.fields).forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    val cap = driverEdgeCap(labels.sparkSession)
+    val cap = graft.core.Tables.driverRowCap(labels.sparkSession)
     // Streaming-cadence fast path: when the caller asserted
     // batch-bounded edges, the WHOLE fold preamble (batch nodes, seen
     // labels, contraction, min-label components) runs on driver-local
@@ -495,18 +495,6 @@ object ConnectedComponents {
     } catch { case t: Throwable => release(); throw t }
   }
 
-  /** Edge cap for the driver-side collects ([[driverAltMap]],
-    * [[foldPiecesDriver]]): 1M (u, w) long pairs ≈ 16 MB on the driver
-    * — the same size class as the broadcast the caller already builds
-    * from the result. Streaming-cadence batch graphs are orders of
-    * magnitude below this. Conf-readable (`graft.cc.driverEdgeCap`) as
-    * a test seam for forcing the distributed arms.
-    */
-  private val DriverCcEdgeCap = 1 << 20
-
-  private def driverEdgeCap(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get("graft.cc.driverEdgeCap", DriverCcEdgeCap.toString).toInt
-
   /** Union-find min-label over a driver-local edge list — the shared
     * core of [[driverAltMap]] and [[foldPiecesDriver]]: returns a
     * find() whose fixed point labels every node the minimum id
@@ -534,10 +522,11 @@ object ConnectedComponents {
   }
 
   /** The driver-side fast path of [[foldPieces]]: over the batch's
-    * distinct driver-held edges (the caller gated on [[driverEdgeCap]]
-    * and on Long id columns), fetch the labels of exactly the
-    * batch-incident nodes with one pushed-`In` scan, then run
-    * contraction + min-label union-find on plain driver data. The
+    * distinct driver-held edges (the caller gated on
+    * [[graft.core.Tables.driverRowCap]] and on Long id columns), fetch
+    * the labels of exactly the batch-incident nodes with one
+    * pushed-`In` scan, then run contraction + min-label union-find on
+    * plain driver data. The
     * pieces are row-identical to the distributed preamble's —
     * `ConnectedComponentsSpec`/`ClusterMaintenanceSpec` pin
     * fold == full-recompute across both arms.
@@ -580,8 +569,8 @@ object ConnectedComponents {
     * the collected edges, each node labeled the minimum id reachable
     * from it. Engaged only when the caller asserted broadcast-sized
     * batches (`enabled`), both columns are LongType, and the edge list
-    * is under [[DriverCcEdgeCap]]; `None` otherwise (the distributed
-    * path recomputes `contracted` from its persisted inputs — two
+    * is under [[graft.core.Tables.driverRowCap]]; `None` otherwise (the
+    * distributed path recomputes `contracted` from its persisted inputs — two
     * broadcast joins, no corpus work).
     */
   private def driverAltMap(
@@ -589,7 +578,7 @@ object ConnectedComponents {
     if (!enabled) return None
     if (!contracted.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType)) return None
-    val cap = driverEdgeCap(contracted.sparkSession)
+    val cap = graft.core.Tables.driverRowCap(contracted.sparkSession)
     val rows = contracted.limit(cap + 1).collect()
     if (rows.length > cap) return None
     val edges = rows.map(r => (r.getLong(0), r.getLong(1)))

@@ -310,11 +310,9 @@ class ClusterMaintenanceSpec extends SparkSpec {
       labelMap(labels)
     }
     val local = withTempDir(fold)
-    // the test seams force every distributed arm: pair probe, shingle
-    // fetch, verify joins, fold preamble and delta joins
-    val distributed = withConf("graft.dedup.driverFrameCap", "0") {
-      withConf("graft.cc.driverEdgeCap", "0")(withTempDir(fold))
-    }
+    // the driver cap at 0 forces every distributed arm: pair probe,
+    // shingle fetch, verify joins, fold preamble and delta joins
+    val distributed = withoutDriverCollects(withTempDir(fold))
     assert(local.nonEmpty)
     assert(local == distributed)
     assert(local == fullRecompute(docs))

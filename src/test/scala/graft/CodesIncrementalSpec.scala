@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.SimilarityQueries
@@ -211,22 +212,25 @@ class CodesIncrementalSpec extends SparkSpec {
     val e = Tables.load(spark, sf, "embeddings")
     val cb = CodebookTrainer.initCodebook(e, 16, normalize = false)
     val codes = SimilarityQueries.codesTable(e, cb, cb).localCheckpoint()
-    val key = SimilarityQueries.ReRankFetchBytesKey
-    def servedAt(threshold: String) = {
-      spark.conf.set(key, threshold)
-      try SimilarityQueries.ivfPqServeFromCodes(e, codes, cb, cb, 10)
-      finally spark.conf.unset(key)
-    }
-    // identity: the two arms fetch the same ≤ topC×nQueries candidate
-    // vectors, so the exact-cosine ranking cannot differ
-    val fused = servedAt(Long.MaxValue.toString).collect().toSeq
-    val point = servedAt("0")
-    assert(point.collect().toSeq == fused)
-    assert(fused.nonEmpty)
+    // the re-rank candidates of 10 corpus queries; below the 4 MB line
+    // the serve fetches their vectors by the fused arm (the whole
+    // embeddings table probes the candidates)
+    val cand = SimilarityQueries.ivfPqServeFromCodes(e, codes, cb, cb, 10)
+      .select(col("q_id"), col("n_id"), col("approx_d2").as("ad2"))
+    def fetched(probe: DataFrame, c: DataFrame) =
+      probe.join(c, col("vec_id") === col("n_id"))
+        .select(col("q_id"), col("n_id"), col("ad2"), col("embedding")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getSeq[Float](3)))
+        .toSeq.sortBy(t => (t._1, t._2))
+    // identity: both arms fetch the same ≤ topC×nQueries candidate
+    // vectors, so the exact-cosine ranking over them cannot differ
+    val fused = fetched(e, cand)
+    val (probe, local) = SimilarityQueries.pointFetch(e, cand, _.collect())
+    assert(fused.nonEmpty && fetched(probe, local) == fused)
     // the point arm's corpus fetch is an In predicate at the parquet
     // scan (row-group skip over the vec_id-clustered layout), not a
     // full-corpus BHJ probe side
-    val plan = point.queryExecution.executedPlan.toString
+    val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(vec_id"),
       s"no pushed In(vec_id) in point-arm plan:\n$plan")
   }

@@ -5,7 +5,10 @@ import graft.operators.ConnectedComponents
 /** Min-label propagation vs a driver-side union-find oracle on graph
   * shapes that stress it: long chains (diameter = rounds), rings,
   * stars, multi-component mixes, and the near-clique shape LSH dup
-  * groups actually produce.
+  * groups actually produce. Tests that pin round counts or loop
+  * internals run with the driver union-find arm off
+  * ([[SparkSpec.withoutDriverCollects]]), so they cannot silently move
+  * to it.
   */
 class ConnectedComponentsSpec extends SparkSpec {
 
@@ -22,16 +25,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Run `body` with the driver fast path DISABLED (cap 0), so the
-    * distributed min-label loop is what executes — the tests that pin
-    * round counts or loop internals must not silently move to the
-    * round-11 driver union-find arm.
-    */
-  private def withDistributedCc[T](body: => T): T = {
-    spark.conf.set("graft.cc.driverEdgeCap", "0")
-    try body finally spark.conf.unset("graft.cc.driverEdgeCap")
-  }
-
   private def check(edges: Seq[(Long, Long)]): Unit = {
     import spark.implicits._
     // BOTH arms: the default (small Long graphs take the round-11
@@ -39,7 +32,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val got = ConnectedComponents.run(edges.toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(got == unionFind(edges), s"edges=$edges (driver arm)")
-    val dist = withDistributedCc {
+    val dist = withoutDriverCollects {
       ConnectedComponents.run(edges.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
     }
@@ -126,7 +119,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
         (10L, 12L), (3L, 10L)))
     shapes.foreach { edges =>
-      val (labels, rounds) = withDistributedCc {
+      val (labels, rounds) = withoutDriverCollects {
         ConnectedComponents.runAdaptive(edges.toDF("a", "b"), "a", "b")
       }
       val got = labels.as[(Long, Long)].collect().toMap
@@ -147,7 +140,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val chain = (100L until 159L).map(i => (i + 1, i))
     val cliques = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L))
     val edges = chain ++ cliques
-    val (labels, rounds) = withDistributedCc {
+    val (labels, rounds) = withoutDriverCollects {
       ConnectedComponents.runAdaptive(edges.toDF("a", "b"), "a", "b",
         switchAfter = 4)
     }
@@ -161,7 +154,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     import spark.implicits._
     val n = 10000L
     val path = (1L until n).map(i => (i + 1, i))
-    val (labels, rounds) = withDistributedCc {
+    val (labels, rounds) = withoutDriverCollects {
       ConnectedComponents.runAdaptive(path.toDF("a", "b"), "a", "b")
     }
     // switchAfter (6) min-label rounds + the SoCC'14 logarithmic bound

@@ -176,7 +176,7 @@ class LayoutPinSpec extends SparkSpec {
       assert(pushed.nonEmpty, "vacuous: no verified pairs")
       // over-cap: every collectLocal falls to its distributed arm while
       // broadcast hints stay on (the backfill-misuse guard path)
-      val overCap = withConf("graft.dedup.driverFrameCap", "0") {
+      val overCap = withoutDriverCollects {
         pairsOf(DedupQueries.batchVerifiedPairs(spark, t, batch))
       }
       assert(overCap == pushed, "over-cap arm diverged from pushed probe")
@@ -205,7 +205,7 @@ class LayoutPinSpec extends SparkSpec {
           bands = 4, bits = 16))
       val pushed = arms(broadcastBatch = true)
       assert(pushed.nonEmpty, "vacuous: no verified embed pairs")
-      val overCap = withConf("graft.dedup.driverFrameCap", "0") {
+      val overCap = withoutDriverCollects {
         arms(broadcastBatch = true)
       }
       assert(overCap == pushed, "over-cap arm diverged from pushed probe")
@@ -227,7 +227,7 @@ class LayoutPinSpec extends SparkSpec {
     val driver = deltaMap(graft.operators.ConnectedComponents
       .incrementalDelta(labels, edges, "id_a", "id_b", broadcastNew = true))
     // seam: cap 0 forces the distributed preamble even with the hint on
-    val dist = withConf("graft.cc.driverEdgeCap", "0") {
+    val dist = withoutDriverCollects {
       deltaMap(graft.operators.ConnectedComponents
         .incrementalDelta(labels, edges, "id_a", "id_b", broadcastNew = true))
     }

@@ -651,46 +651,32 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"),
       p.take(3000))
     // the candidate STAGE carries the scale claim and is checkpointed
-    // away from the final plan — pin it directly. Force the
-    // point-fetch re-rank arm (the at-scale shape) so EVERY embeddings
-    // scan must be id- or query-pruned; the serve stage itself must
+    // away from the final plan — pin it directly. The serve stage must
     // source from the stored codes, never a corpus-side encode or an
     // exact-cosine corpus join (the exact tier's
-    // BroadcastNestedLoopJoin on n_id ≠ q_id).
-    spark.conf.set("graft.ann.rerankFetchBytes", "0")
-    try {
-      val pool = graft.analytics.RetrievalQueries.mmrIndexedPool(
-        spark, dir,
-        graft.analytics.RetrievalQueries.mmrCorpusQueryFrame(spark, dir, 5),
-        20)
-      val pp = pool.queryExecution.executedPlan.toString
-      assert(!pp.contains("pq_encode"),
-        "corpus-side PQ encode in the serve stage:\n" + pp.take(3000))
-      assert(!pp.contains("BroadcastNestedLoopJoin") &&
-        !pp.contains("CartesianProduct"), pp.take(3000))
-      val cand = graft.analytics.RetrievalQueries.mmrIndexedCandidates(
-        spark, dir,
-        graft.analytics.RetrievalQueries.mmrCorpusQueryFrame(spark, dir, 5),
-        20)
-      val cp = cand.queryExecution.executedPlan.toString
-      assert(!cp.contains("BroadcastNestedLoopJoin") &&
-        !cp.contains("CartesianProduct"),
-        "full-corpus cosine join in candidate plan:\n" + cp.take(3000))
-      val eScans = cp.linesIterator
-        .filter(_.contains("embeddings.parquet")).toSeq
-      assert(eScans.nonEmpty && eScans.forall(l =>
-        l.contains("In(vec_id") || l.contains("LessThan(vec_id")),
-        eScans.mkString("\n").take(2000))
-      // …and the candidates COME from the stored codes table: under
-      // the fused re-rank arm the ADC stage stays in-plan — pin it
-      spark.conf.set("graft.ann.rerankFetchBytes", Long.MaxValue.toString)
-      val fused = graft.analytics.RetrievalQueries.mmrIndexedPool(
-        spark, dir,
-        graft.analytics.RetrievalQueries.mmrCorpusQueryFrame(spark, dir, 5),
-        20)
-      val fp = fused.queryExecution.executedPlan.toString
-      assert(fp.contains("graft-codes-inc"), fp.take(3000))
-    } finally spark.conf.unset("graft.ann.rerankFetchBytes")
+    // BroadcastNestedLoopJoin on n_id ≠ q_id). Below the 4 MB line its
+    // re-rank is the fused arm, so the ADC stage stays in-plan; the
+    // point-fetch arm's pruned scan is pinned in CodesIncrementalSpec.
+    val q = graft.analytics.RetrievalQueries.mmrCorpusQueryFrame(spark, dir, 5)
+    val pool = graft.analytics.RetrievalQueries.mmrIndexedPool(spark, dir, q, 20)
+    val pp = pool.queryExecution.executedPlan.toString
+    assert(!pp.contains("pq_encode"),
+      "corpus-side PQ encode in the serve stage:\n" + pp.take(3000))
+    assert(!pp.contains("BroadcastNestedLoopJoin") &&
+      !pp.contains("CartesianProduct"), pp.take(3000))
+    assert(pp.contains("graft-codes-inc"), pp.take(3000))
+    // the candidates' own vector fetch and query frame: every
+    // embeddings scan id- or query-pruned
+    val cand = graft.analytics.RetrievalQueries.mmrIndexedCandidates(spark, dir, q, 20)
+    val cp = cand.queryExecution.executedPlan.toString
+    assert(!cp.contains("BroadcastNestedLoopJoin") &&
+      !cp.contains("CartesianProduct"),
+      "full-corpus cosine join in candidate plan:\n" + cp.take(3000))
+    val eScans = cp.linesIterator
+      .filter(_.contains("embeddings.parquet")).toSeq
+    assert(eScans.nonEmpty && eScans.forall(l =>
+      l.contains("In(vec_id") || l.contains("LessThan(vec_id")),
+      eScans.mkString("\n").take(2000))
   }
 
   test("q_search_diversified: the greedy output is a local relation " +

@@ -117,8 +117,45 @@ class PreparedServeSpec extends SparkSpec {
   test("bm25SearchText: bound requests equal fresh builds in the postings " +
       "semi-join arm, whose plan reads the query relation twice") {
     val (name, serve) = entries(dir).head
-    withConf(RetrievalQueries.PushdownTermsMaxKey, "0")(
-      boundEqualsFresh(name, serve, requests(phrase = false).take(3), "join arm"))
+    // 5,462 queries × 3 terms bound 16,386 terms: past the 16,384-term
+    // line of the literal arm, so each request takes the join arm. All
+    // but a few are out-of-vocabulary, so the ranking stays small.
+    val rnd = new scala.util.Random(5462)
+    val reqs = Seq.fill(2)(Seq.tabulate(5462) { i =>
+      val ts = docs(rnd.nextInt(docs.size)).split(" ")
+      val text = if (i % 1000 == 0) ts.slice(rnd.nextInt(ts.length - 1), ts.length).take(2).toSeq
+        else Seq(s"zq$i", s"zq${rnd.nextInt(99)}")
+      text.mkString(" ") -> vecs(0)
+    })
+    val plan = serve(reqs.head).queryExecution.executedPlan.toString
+    assert(plan.contains("LeftSemi") && !plan.contains("In(term"), plan.take(3000))
+    boundEqualsFresh(name, serve, reqs, "join arm")
+  }
+
+  test("one pass over the five entries keeps 6 templates, far below the cap") {
+    Tables.dropTemplates()
+    for ((_, serve) <- entries(dir)) rows(serve(requests(phrase = true).head))
+    info(s"${Tables.templateCount} templates, cap ${Tables.MaxTemplates}")
+    assert(Tables.templateCount == 6)
+  }
+
+  test("a dial sweep past the template cap keeps the map within it, and " +
+      "every swept request equals its fresh build") {
+    val v = Seq(vecs(3))
+    val lams = (1 to 2 * Tables.MaxTemplates).map(_.toDouble / (2 * Tables.MaxTemplates))
+    def serve(lam: Double) = {
+      val got = rows(RetrievalQueries.mmrSearchVectors(spark, dir, v, lam = lam))
+      assert(Tables.templateCount <= Tables.MaxTemplates)
+      got
+    }
+    Tables.dropTemplates()
+    // forward: every λ is a new key, built fresh; back: the last cap
+    // keys are still kept, so those requests bind into their templates
+    val fresh = lams.map(serve)
+    assert(fresh.forall(_.nonEmpty))
+    lams.zip(fresh).reverse.foreach { case (lam, want) =>
+      assert(serve(lam) == want, s"λ = $lam: bound != fresh")
+    }
   }
 
   test("bound requests equal fresh builds over an INT-id corpus") {

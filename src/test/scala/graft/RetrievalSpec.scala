@@ -527,17 +527,21 @@ class RetrievalSpec extends SparkSpec {
   test("BM25 serve arms: join arm == literal arm row-identical; the " +
       "join arm plans a postings semi-join, the literal arm pushes " +
       "In(term) literals") {
-    def servedAt(conf: String) = {
-      spark.conf.set(RetrievalQueries.PushdownTermsMaxKey, conf)
-      try SparkEntry.queries("q_bm25_served")(spark, sfDir)
-      finally spark.conf.unset(RetrievalQueries.PushdownTermsMaxKey)
-    }
+    // the arm follows the request's term bound: the catalog's 5 query
+    // docs × 3 terms take the literal arm, a bound past the 16,384-term
+    // line the join arm; the query terms are the distributed frame the
+    // catalog derives past that line
+    val dirs = RetrievalQueries.incrementalPostingsDirs(spark, sfDir)
+    val qt = RetrievalQueries.queryTermsAll(
+      spark.read.parquet(s"$sfDir/documents.parquet").filter(col("doc_id") < 5))
+    def servedAt(termBound: Long) =
+      RetrievalQueries.bm25RankedFromDirs(spark, dirs, qt, termBound)
     // identity: both arms restrict the postings to the same distinct
     // query-term set, so the scored relation cannot differ
-    val litArm = servedAt(Long.MaxValue.toString)
-    val joinArm = servedAt("0")
-    val a = litArm.collect().toSeq
-    val b = joinArm.collect().toSeq
+    val litArm = servedAt(15L)
+    val joinArm = servedAt(Long.MaxValue)
+    val a = litArm.collect().toSeq.map(_.toString).sorted
+    val b = joinArm.collect().toSeq.map(_.toString).sorted
     assert(a.nonEmpty && a == b)
     // arm identity is a PLAN property: the literal arm's postings scan
     // carries the collected In(term) pushdown; the join arm has no
@@ -712,22 +716,18 @@ class RetrievalSpec extends SparkSpec {
     val v7 = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 7).select(col("embedding"))
       .head.getSeq[Float](0).toArray
-    def run() = RetrievalQueries.mmrSearchVectors(spark, sfDir, Seq(v7))
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    val dflt = run()
-    spark.conf.set(RetrievalQueries.MmrExactMaxBytesKey,
-      Long.MaxValue.toString)
-    val exact =
-      try run()
-      finally spark.conf.unset(RetrievalQueries.MmrExactMaxBytesKey)
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+    // the entry's default dials: pool 20, 5 picks, λ 0.5
+    val dflt = rows(RetrievalQueries.mmrSearchVectors(spark, sfDir, Seq(v7)))
+    val embKey = graft.core.Tables.derivedStateKey(spark, sfDir, "embeddings")
+    val exact = rows(RetrievalQueries.mmrVectorsExact(
+      spark, sfDir, embKey, Seq(v7), 20, 5, 0.5))
     assert(dflt == exact,
-      s"below the threshold the default must pick the exact arm:\n" +
+      s"below the 16 MB line the default must pick the exact arm:\n" +
         s"$dflt\nvs\n$exact")
-    spark.conf.set(RetrievalQueries.MmrExactMaxBytesKey, "0")
-    val indexed =
-      try run()
-      finally spark.conf.unset(RetrievalQueries.MmrExactMaxBytesKey)
+    val indexed = rows(RetrievalQueries.mmrVectorsIndexed(
+      spark, sfDir, Seq(v7), 20, 5, 0.5))
     // pick 1 maximizes λ·rel: BOTH arms must seed with the stored twin
     // (cos 1.0 → mmr = λ = 0.5) — external ids never self-exclude, and
     // the indexed pool must surface the twin through the codes serve
@@ -767,12 +767,9 @@ class RetrievalSpec extends SparkSpec {
     val v7 = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .filter(col("vec_id") === 7).select(col("embedding"))
       .head.getSeq[Float](0).toArray
-    spark.conf.set(RetrievalQueries.MmrExactMaxBytesKey, "0")
-    val out =
-      try RetrievalQueries.mmrSearchVectors(
-          spark, sfDir, Seq(v7), pool = 30, picks = 25)
-        .collect().map(r => (r.getInt(2), r.getLong(1))).toSeq
-      finally spark.conf.unset(RetrievalQueries.MmrExactMaxBytesKey)
+    val out = RetrievalQueries.mmrVectorsIndexed(
+        spark, sfDir, Seq(v7), pool = 30, picks = 25, lam = 0.5)
+      .collect().map(r => (r.getInt(2), r.getLong(1))).toSeq
     assert(out.map(_._1) == (1 to 25),
       s"picks must fill past the 24-candidate ADC default: " +
         s"${out.map(_._1)}")
@@ -903,33 +900,28 @@ class RetrievalSpec extends SparkSpec {
       "threshold and the indexed tier above it, each row-identical to " +
       "its gated catalog form") {
     import graft.analytics.RetrievalQueries
-    def armAt(conf: String) = {
-      spark.conf.set(RetrievalQueries.HybridExactMaxBytesKey, conf)
-      try RetrievalQueries.hybridRrf(spark, sfDir, 5)
-      finally spark.conf.unset(RetrievalQueries.HybridExactMaxBytesKey)
-    }
+    def rows(q: String, dir: String) =
+      SparkEntry.queries(q)(spark, dir).collect().toSeq
     // the fused output is a driver-side local relation for either tier
     // (rrfFuseSized), so its plan cannot tell the tiers apart; the rows
     // can, because the indexed vector arm is IVF-PQ approximate and the
-    // gated tiers differ at sfDir
-    val gatedExact =
-      SparkEntry.queries("q_hybrid_rrf")(spark, sfDir).collect().toSeq
-    assert(gatedExact != SparkEntry.queries("q_hybrid_rrf_indexed")(
-        spark, sfDir).collect().toSeq,
-      "the gated tiers agree at this scale, so rows cannot show the tier")
-    // forced-exact arm == the gated exact query
-    val exact = armAt(Long.MaxValue.toString)
-    assert(exact.collect().toSeq ==
-      SparkEntry.queries("q_hybrid_rrf")(spark, sfDir).collect().toSeq)
-    // forced-indexed arm == the gated indexed query
-    val indexed = armAt("0")
-    assert(indexed.collect().toSeq ==
-      SparkEntry.queries("q_hybrid_rrf_indexed")(spark, sfDir)
-        .collect().toSeq)
-    // the default threshold keeps sf0.001 (and sf0.1 — 0.80 MB) on
-    // the exact tier
-    assert(RetrievalQueries.hybridRrf(spark, sfDir, 5).collect().toSeq ==
-      gatedExact, "the default threshold must pick the exact tier")
+    // gated tiers differ on both corpora. Against the 512 KB line the
+    // embeddings' optimizer estimates are 193,646 B at sf0.001 (exact)
+    // and 798,695 B at sf0.1 (indexed).
+    for ((dir, tier, other) <- Seq(
+        (sfDir, "q_hybrid_rrf", "q_hybrid_rrf_indexed"),
+        (java.nio.file.Paths.get(sfDir).resolveSibling("sf0.1").toString,
+          "q_hybrid_rrf_indexed", "q_hybrid_rrf"))) {
+      val bytes = spark.read.parquet(s"$dir/embeddings.parquet")
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      assert((bytes > 512 * 1024) == (tier == "q_hybrid_rrf_indexed"),
+        s"$dir: embeddings estimate $bytes B")
+      val want = rows(tier, dir)
+      assert(want != rows(other, dir),
+        s"$dir: the gated tiers agree, so rows cannot show the tier")
+      assert(RetrievalQueries.hybridRrf(spark, dir, 5).collect().toSeq == want,
+        s"$dir: hybridRrf must serve $tier")
+    }
     // only the indexed tier's vector arm serves from the stored codes
     // table
     assert(RetrievalQueries.hybridIndexedCosArm(spark, sfDir, 5)
@@ -1202,21 +1194,37 @@ class RetrievalSpec extends SparkSpec {
   test("bulk arm end-to-end: searchDiversified and " +
       "mmrDiversifiedIndexed forced through the distributed path are " +
       "row-identical to the interactive driver path") {
-    val qtext = "stream filter window merge"
-    val qvec = Array.tabulate(64)(i => (i % 7).toFloat / 7f)
-    def run(): (Seq[Row], Seq[Row]) = (
-      RetrievalQueries.searchDiversified(
-        spark, sfDir, Seq((qtext, qvec))).collect().toSeq,
-      RetrievalQueries.mmrDiversifiedIndexed(
-        spark, sfDir, 3, 20, 5, 0.5).collect().toSeq)
-    val (sd1, mi1) = run()
-    spark.conf.set(RetrievalQueries.MmrBulkQueriesMinKey, "0")
-    try {
-      val (sd2, mi2) = run()
-      assert(sd1 == sd2, "searchDiversified arms diverge")
-      assert(mi1 == mi2, "mmrDiversifiedIndexed arms diverge")
-      assert(sd1.nonEmpty && mi1.nonEmpty)
-    } finally spark.conf.unset(RetrievalQueries.MmrBulkQueriesMinKey)
+    def key(rows: Array[Row], shift: Long = 0L) = rows.map(r =>
+      (r.getLong(0) + shift, r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+    // 513 external queries take the bulk arm (distributed fuse,
+    // join-fetched vectors, grouped greedy); the same queries split
+    // into batches of 512 and 1 take the interactive one
+    val texts = spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("text").isNotNull).orderBy(col("doc_id"))
+      .select(col("text")).collect().map(_.getString(0))
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .orderBy(col("vec_id")).select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toArray)
+    val rnd = new scala.util.Random(513)
+    val queries = Seq.fill(513)(
+      texts(rnd.nextInt(texts.length)).split(" ").take(4).mkString(" ") ->
+        vecs(rnd.nextInt(vecs.length)))
+    def search(qs: Seq[(String, Array[Float])]) =
+      RetrievalQueries.searchDiversified(spark, sfDir, qs).collect()
+    val bulk = key(search(queries))
+    val interactive =
+      key(search(queries.take(512))) ++ key(search(queries.drop(512)), 512L)
+    assert(bulk.map(_._1).distinct.size == 513, "queries served no rows")
+    assert(bulk == interactive, "searchDiversified arms diverge")
+    // the corpus has too few documents for a bulk batch of corpus
+    // queries: compare mmrDiversifiedIndexed with its bulk arms
+    val q = RetrievalQueries.mmrCorpusQueryFrame(spark, sfDir, 3)
+    val mi = key(RetrievalQueries.mmrDiversifiedIndexed(
+      spark, sfDir, 3, 20, 5, 0.5).collect())
+    val miBulk = key(RetrievalQueries.mmrGreedyDistributed(
+      RetrievalQueries.mmrIndexedCandidates(spark, sfDir, q, 20, bulk = true),
+      5, 0.5).collect())
+    assert(mi.nonEmpty && mi == miBulk, "mmrDiversifiedIndexed arms diverge")
   }
 
   test("driver query arms read INT doc ids: q_bm25_topk, " +

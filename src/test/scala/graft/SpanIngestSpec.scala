@@ -80,12 +80,10 @@ class SpanIngestSpec extends SparkSpec {
         broadcastBatch = false)) == batchSpans,
         "span probe join-fallback arm diverged")
       // ... and the over-cap arm (collectLocal declines, localCheckpoint
-      // + broadcast join, no key pruning) — the graft.dedup.driverFrameCap
-      // seam LayoutPinSpec uses on the lexical/embed probes
-      spark.conf.set("graft.dedup.driverFrameCap", "0")
-      try assert(spanSet(DedupQueries.batchSpanPairs(spark, win, b1)) ==
-        batchSpans, "span probe over-cap arm diverged")
-      finally spark.conf.unset("graft.dedup.driverFrameCap")
+      // + broadcast join, no key pruning) — the driver-cap seam
+      // LayoutPinSpec uses on the lexical/embed probes
+      withoutDriverCollects(assert(spanSet(DedupQueries.batchSpanPairs(
+        spark, win, b1)) == batchSpans, "span probe over-cap arm diverged"))
 
       // replay of an absorbed batch is a no-op (ack outlives absorption)
       val before = winSet(DedupQueries.windowsFromStored(spark, win))

@@ -66,10 +66,19 @@ trait SparkSpec extends AnyFunSuite {
     * every request's leaves on the test corpora. Not 1 byte: the same
     * conf sets the scans' split size, and a body that collects while
     * it is built (the hybrid arms, the MMR greedy) would run one task
-    * per byte of input.
+    * per byte of input. The other size decisions are constants, reached
+    * through their real inputs or by calling their arms; the one other
+    * seam is the driver-collect cap, [[withoutDriverCollects]].
     */
   def withDistributedServes[T](body: => T): T =
     withConf("spark.sql.files.maxPartitionBytes", "1024")(body)
+
+  /** `body` with the driver-collect cap ([[graft.core.Tables.driverRowCap]])
+    * at 0: every dedup frame and connected-components edge list that
+    * would be collected to the driver takes its distributed arm.
+    */
+  def withoutDriverCollects[T](body: => T): T =
+    withConf(graft.core.Tables.DriverRowCapKey, "0")(body)
 
   /** `body`'s result and the number of Spark jobs that started while it
     * ran (any thread), counted by a listener once the bus has drained.
