@@ -198,21 +198,29 @@ object Bench {
       // is the artifact and must stay last.
       val prevFile = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(prevFile)) {
-        val prev = parseFullQueries(
-          new String(java.nio.file.Files.readAllBytes(prevFile), "UTF-8"))
-        val regs = regressions(prev, results)
-        regs.foreach { case (q, p, v) =>
-          System.err.println(
-            f"[bench] REGRESSION $q: $p%.2f -> $v%.2f s (x${v / p}%.2f)")
+        val prevDoc =
+          new String(java.nio.file.Files.readAllBytes(prevFile), "UTF-8")
+        incomparable(prevDoc, GraftSession.cpus, calib) match {
+          case Some(why) =>
+            System.err.println(
+              s"[bench] baseline not comparable ($why): no per-query diff vs $path")
+          case None =>
+            val prev = parseFullQueries(prevDoc)
+            val regs = regressions(prev, results)
+            regs.foreach { case (q, p, v) =>
+              System.err.println(
+                f"[bench] REGRESSION $q: $p%.2f -> $v%.2f s (x${v / p}%.2f)")
+            }
+            if (regs.isEmpty && prev.nonEmpty)
+              System.err.println(
+                s"[bench] no per-query regressions >= x$RegressionRatio vs $path")
         }
-        if (regs.isEmpty && prev.nonEmpty)
-          System.err.println(
-            s"[bench] no per-query regressions >= x$RegressionRatio vs $path")
       }
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         renderFull(results, sfDir, errors = errors, flaky = flaky,
           calib = calib, noise = noise.filter(_ >= NoiseRatio &&
-            stillDirty.nonEmpty)).getBytes("UTF-8"))
+            stillDirty.nonEmpty), cpus = Some(GraftSession.cpus))
+          .getBytes("UTF-8"))
       System.err.println(s"[bench] full per-query map written to $path")
     } catch {
       case e: Throwable => // never let the sidecar break the artifact
@@ -232,6 +240,33 @@ object Bench {
     */
   val RegressionRatio = 1.2
   val RegressionFloor = 0.15
+
+  /** A previous sidecar is a baseline for the per-query diff only when
+    * it ran on the same core count and its `calib` is within this
+    * factor of the current run's, either way: walls from another host
+    * class differ by more than the regression ratio on every query.
+    */
+  val CalibBand = 1.25
+
+  /** Why a previous sidecar document is no baseline for a run on
+    * `cpus` cores at `calib`, or None when it is one. A sidecar written
+    * before `cpus` was recorded is never a baseline. Pure, so BenchSpec
+    * feeds synthetic documents.
+    */
+  def incomparable(prevDoc: String, cpus: Int,
+      calib: Option[Double]): Option[String] = {
+    def meta(key: String): Option[Double] =
+      raw""""$key"\s*:\s*([0-9.]+)""".r.findFirstMatchIn(prevDoc)
+        .map(_.group(1).toDouble)
+    (meta("cpus").map(_.toInt), meta("calib"), calib) match {
+      case (None, _, _) => Some("the previous sidecar records no cpus")
+      case (Some(p), _, _) if p != cpus => Some(s"cpus $p -> $cpus")
+      case (_, Some(p), Some(c)) if p > 0 && c > 0 =>
+        if (math.max(p, c) / math.min(p, c) <= CalibBand) None
+        else Some(s"calib $p -> $c, outside x$CalibBand")
+      case _ => Some("calib missing or zero")
+    }
+  }
 
   /** Per-query walls parsed out of a previous sidecar document. The
     * sidecar's meta fields (`value`, `calib`, …) also match the
@@ -266,7 +301,8 @@ object Bench {
   def renderFull(results: Map[String, Double], sfDir: String,
                  passes: Int = Passes, errors: Seq[String] = Nil,
                  flaky: Seq[String] = Nil, calib: Option[Double] = None,
-                 noise: Option[Double] = None): String = {
+                 noise: Option[Double] = None,
+                 cpus: Option[Int] = None): String = {
     def f(decimals: Int)(v: Double): String =
       s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v)
     def strArr(xs: Seq[String]): String =
@@ -276,7 +312,8 @@ object Bench {
     val qs = results.toSeq.sortBy { case (k, v) => (-v, k) }
       .map { case (k, v) => s"""    "$k": ${f(3)(v)}""" }
       .mkString("{\n", ",\n", "\n  }")
-    val opt = calib.map(c => s""",\n  "calib": ${f(3)(c)}""").getOrElse("") +
+    val opt = cpus.map(n => s""",\n  "cpus": $n""").getOrElse("") +
+      calib.map(c => s""",\n  "calib": ${f(3)(c)}""").getOrElse("") +
       noise.map(r => s""",\n  "noisy": ${f(1)(r)}""").getOrElse("") +
       (if (errors.nonEmpty) s""",\n  "errors": ${strArr(errors)}""" else "") +
       (if (flaky.nonEmpty) s""",\n  "flaky": ${strArr(flaky)}""" else "")

@@ -358,29 +358,18 @@ object DedupQueries {
     *   full-corpus candidates = corpus-self ∪ cross-batch ∪ batch-self
     * exactly (SignatureMaterializeSpec proves the identity) — the
     * incremental re-run cost is |batch|·|corpus colliders|, not
-    * |corpus|².
-    *
-    * `broadcastNew` hints the batch's (band, bsig, id) rows — ~50 B
-    * each, 4 per doc — as the broadcast side, so the CORPUS side is
-    * scanned but never exchanged: the right shape at micro-batch
-    * cadence, where per-batch corpus shuffles (not scans) are what
-    * accumulate (SCALING.md round 7, "Measured: per-batch maintenance
-    * cost as the corpus grows behind it"). Leave it
-    * off for batch-sized "new" sides too big to broadcast — the join
-    * then shuffles both sides as before.
+    * |corpus|². The join is left to the planner; the maintenance
+    * probe ([[batchVerifiedPairsDistributed]]) broadcasts its batch
+    * side instead.
     */
   def crossBatchCandidatePairs(
-      newSig: DataFrame, corpusSig: DataFrame,
-      broadcastNew: Boolean = false): DataFrame = {
-    val bn0 = bandKeys(newSig, Seq.empty)
-      .select(col("b"), col("bsig"), col("doc_id").as("id_n"))
-    crossBatchCandidatePairsFrom(
-      if (broadcastNew) broadcast(bn0) else bn0, corpusSig)
-  }
+      newSig: DataFrame, corpusSig: DataFrame): DataFrame =
+    crossBatchCandidatePairsFrom(bandKeys(newSig, Seq.empty)
+      .select(col("b"), col("bsig"), col("doc_id").as("id_n")), corpusSig)
 
   /** [[crossBatchCandidatePairs]] from an already-shaped batch band-key
     * frame `(b, bsig, id_n)` — split out so the maintenance probe can
-    * supply a driver-collected LocalRelation as the batch side.
+    * supply a broadcast batch side.
     */
   private def crossBatchCandidatePairsFrom(
       bn: DataFrame, corpusSig: DataFrame): DataFrame = {
@@ -574,15 +563,6 @@ object DedupQueries {
     * to only the buckets a batch or its candidates touch. The collect
     * is metadata-sized by construction: ≤ [[SignatureBuckets]] ints.
     */
-  /** Broadcast hint honoring the caller's `broadcastBatch` escape
-    * hatch: batch/candidate id sets are broadcast-sized at streaming
-    * cadence, but a backfill-sized batch's ids share the band keys'
-    * scale — forcing the hint there would OOM the driver exactly where
-    * the flag promises a shuffled plan.
-    */
-  private def hinted(df: DataFrame, broadcastBatch: Boolean): DataFrame =
-    if (broadcastBatch) broadcast(df) else df
-
   private def bucketsOf(ids: DataFrame, idCol: String, n: Int): Seq[Integer] =
     ids.select(pmod(hash(col(idCol)), lit(n)).as("bkt"))
       .distinct().collect().map(r => Int.box(r.getInt(0))).toSeq
@@ -611,9 +591,8 @@ object DedupQueries {
     * no job) and its rows feed probe-key derivation without further
     * Spark jobs. `None` when the frame exceeds `cap` — callers fall back to
     * their distributed shape, re-evaluating the frame's lineage once
-    * (the documented broadcastBatch contract: `true` asserts
-    * batch-bounded inputs, so the over-cap arm is a backfill-misuse
-    * guard, not a hot path).
+    * (streaming batches stay under the cap, so the over-cap arm is the
+    * backfill shape, not the hot path).
     */
   private def collectLocal(df: DataFrame, cap: Int):
       Option[(Array[org.apache.spark.sql.Row], DataFrame)] = {
@@ -631,8 +610,8 @@ object DedupQueries {
     // bound (parquet-scan lineage) still pays the full collect before
     // the over-cap check — `spark.driver.maxResultSize` is the
     // explicit backstop there (the collect fails loudly, same failure
-    // class as the equally-misused broadcast the caller would build
-    // from the same frame); callers own the broadcastBatch contract.
+    // class as the broadcast the caller would build from the same
+    // frame).
     if (df.queryExecution.optimizedPlan.maxRows.exists(_ > cap)) return None
     val rows = df.collect()
     if (rows.length > cap) None
@@ -680,19 +659,17 @@ object DedupQueries {
     * re-self-joined, and pairs among pre-existing docs (already folded
     * into the labels table by earlier triggers) are not re-derived.
     *
-    * At streaming cadence (`broadcastBatch`, every batch-bounded frame
-    * under [[Tables.driverRowCap]]) the pairs derive on the driver
-    * ([[batchVerifiedPairsLocal]]); otherwise, or over the cap, the
-    * distributed shape runs ([[batchVerifiedPairsDistributed]]). Both
-    * return the same rows.
+    * When every batch-bounded frame fits [[Tables.driverRowCap]]
+    * (streaming cadence) the pairs derive on the driver
+    * ([[batchVerifiedPairsLocal]]); over the cap the distributed shape
+    * runs ([[batchVerifiedPairsDistributed]]). Both return the same
+    * rows.
     */
   def batchVerifiedPairs(
       s: SparkSession, sigDir: String, batch: DataFrame,
-      threshold: Double = 0.5, broadcastBatch: Boolean = true): DataFrame =
-    (if (broadcastBatch) batchVerifiedPairsLocal(s, sigDir, batch, threshold)
-     else None)
-      .getOrElse(batchVerifiedPairsDistributed(
-        s, sigDir, batch, threshold, broadcastBatch))
+      threshold: Double = 0.5): DataFrame =
+    batchVerifiedPairsLocal(s, sigDir, batch, threshold)
+      .getOrElse(batchVerifiedPairsDistributed(s, sigDir, batch, threshold))
 
   /** The streaming-cadence arm of [[batchVerifiedPairs]]: three Spark
     * jobs, each a scan, with every batch-sized step between them on
@@ -789,18 +766,17 @@ object DedupQueries {
   }
 
   /** The distributed arm of [[batchVerifiedPairs]] (backfill-sized
-    * batches, `broadcastBatch = false`, or frames over
-    * [[Tables.driverRowCap]]).
+    * batches: frames over [[Tables.driverRowCap]]).
     * Per-trigger stored-table IO (the maintenance-series axis — at
     * 1000:1 corpus:batch ratios the stored-table SCANS are what
     * dominate a trigger):
     *  - the batch's signature rows are computed, not fetched back (see
     *    [[batchVerifiedPairsLocal]]), and only their band keys drive
-    *    the candidate probe, hinted broadcast under `broadcastBatch` so
-    *    the stored table is scanned, never exchanged — at micro-batch
-    *    cadence the per-batch corpus SHUFFLE is what would accumulate,
-    *    not the scan. With `broadcastBatch = false` the join shuffles
-    *    both sides;
+    *    the candidate probe as the broadcast side, so the stored table
+    *    is scanned, never exchanged — per-batch corpus SHUFFLES, not
+    *    scans, are what accumulate as the corpus grows (SCALING.md
+    *    "Backfill path": against the shuffled shape, the same labels
+    *    with 182 vs 469 MB of shuffle on a 160k-doc batch);
     *  - the candidate probe reads only (doc_id, sg) of the stored
     *    table (columnar pruning; `shs` never crosses the reader);
     *  - shingle sets for the verify are fetched ONCE (not once per
@@ -811,11 +787,11 @@ object DedupQueries {
     */
   private[graft] def batchVerifiedPairsDistributed(
       s: SparkSession, sigDir: String, batch: DataFrame,
-      threshold: Double, broadcastBatch: Boolean): DataFrame = {
+      threshold: Double): DataFrame = {
     val stored = storedSignaturesLive(s, sigDir)
     val nBuckets = tableBuckets(s, sigDir)
-    val bn = hinted(bandKeys(bucketedSignatures(batch, nBuckets), Seq.empty)
-      .select(col("b"), col("bsig"), col("doc_id").as("id_n")), broadcastBatch)
+    val bn = broadcast(bandKeys(bucketedSignatures(batch, nBuckets), Seq.empty)
+      .select(col("b"), col("bsig"), col("doc_id").as("id_n")))
     // the batch-bounded pair list feeds the candidate-id derivation AND
     // the verify joins — one probe evaluation
     val pairs = crossBatchCandidatePairsFrom(bn, stored).localCheckpoint()
@@ -827,7 +803,7 @@ object DedupQueries {
     // stored table per side
     val fetched = stored
       .filter(col("bkt").isin(bucketsOf(candIds, "doc_id", nBuckets): _*))
-      .join(hinted(candIds, broadcastBatch), Seq("doc_id"), "left_semi")
+      .join(broadcast(candIds), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("shs"))
       .localCheckpoint()
     pairs
@@ -1278,7 +1254,6 @@ object DedupQueries {
   def batchVerifiedEmbedPairs(
       s: SparkSession, bucketsDir: String, batch: DataFrame,
       vecsDir: String, threshold: Double,
-      broadcastBatch: Boolean = true,
       bands: Int = 4, bits: Int = 8): DataFrame = {
     val stored = Tables.parquetCachedSchema(s, bucketsDir)
     val nBuckets = tableBuckets(s, bucketsDir)
@@ -1291,18 +1266,16 @@ object DedupQueries {
     // driver-sized: COLLECTED once (the kernel runs distributed inside
     // the collect), they become a LocalRelation — the probe's pushed
     // key set derives with no further job and the join's broadcast
-    // build is free. Over-cap (backfill misuse of broadcastBatch)
-    // falls back to the checkpointed shape, re-paying the kernel once.
+    // build is free. Over-cap (a backfill-sized batch) falls back to
+    // the checkpointed shape, re-paying the kernel once.
     val bbPlan = bucketedSignBuckets(batch, bands, bits, nBuckets)
-    val bbLocal = if (broadcastBatch) collectLocal(bbPlan, Tables.driverRowCap(s)) else None
+    val bbLocal = collectLocal(bbPlan, Tables.driverRowCap(s))
     val bb = bbLocal.map(_._2).getOrElse(bbPlan.localCheckpoint())
-    // broadcast the batch side by default, for the same reason as the
-    // lexical mirror: corpus bucket rows are scanned, never exchanged
-    // (broadcastBatch = false for backfill-sized batches). Stored
+    // the batch side is broadcast, for the same reason as the lexical
+    // mirror: corpus bucket rows are scanned, never exchanged. Stored
     // norms ride along so the verify never recomputes a norm fold.
-    val a0 = bb.select(col("band"), col("bucket"),
-      col("vec_id").as("id_l"), col("nrm").as("nrm_l"))
-    val a = if (broadcastBatch) broadcast(a0) else a0
+    val a = broadcast(bb.select(col("band"), col("bucket"),
+      col("vec_id").as("id_l"), col("nrm").as("nrm_l")))
     // the batch's DISTINCT bucket keys pushed into the stored scan: a
     // strict superset of the join's (band, bucket) matches, so the
     // result is unchanged — but the pushed `In` engages page min/max
@@ -1333,8 +1306,7 @@ object DedupQueries {
     // joins — one probe evaluation, collected at streaming cadence
     // (ids, hash buckets and the pushed key set then derive
     // driver-side with zero further jobs); over-cap → checkpoint.
-    val candLocal =
-      if (broadcastBatch) collectLocal(candPlan, Tables.driverRowCap(s)) else None
+    val candLocal = collectLocal(candPlan, Tables.driverRowCap(s))
     val cand = candLocal.map(_._2).getOrElse(candPlan.localCheckpoint())
     // ONE bucket-pruned pass over the loop-owned vector table:
     // candidate ids alone determine which bkt= partitions can hold
@@ -1367,7 +1339,7 @@ object DedupQueries {
     val vecsPlan = keyPruned(
       Tables.parquetCachedSchema(s, vecsDir).filter(col("bkt").isin(candBkts: _*)),
       "vec_id", idKeys)(
-      _.join(hinted(candIds, broadcastBatch), Seq("vec_id"), "left_semi"))
+      _.join(broadcast(candIds), Seq("vec_id"), "left_semi"))
       .select(col("vec_id"), col("embedding"))
     // the fetched vectors are CANDIDATE-bounded: at streaming cadence
     // they collect too (tighter row cap — embeddings are wide), so the
@@ -1782,17 +1754,14 @@ object DedupQueries {
     * ([[collectLocal]] / [[keyPruned]] contracts).
     */
   def batchSpanPairs(
-      s: SparkSession, winDir: String, batch: DataFrame,
-      broadcastBatch: Boolean = true): DataFrame = {
+      s: SparkSession, winDir: String, batch: DataFrame): DataFrame = {
     val stored = Tables.parquetCachedSchema(s, winDir)
     val n = tableBuckets(s, winDir)
     val bwPlan = explodedSpanWindows(batch)
-    val bwLocal =
-      if (broadcastBatch) collectLocal(bwPlan, Tables.driverRowCap(s)) else None
+    val bwLocal = collectLocal(bwPlan, Tables.driverRowCap(s))
     val bw = bwLocal.map(_._2).getOrElse(bwPlan.localCheckpoint())
-    val a0 = bw.select(col("doc_id").as("id_n"), col("pos").as("pn"),
-      col("fp"))
-    val a = if (broadcastBatch) broadcast(a0) else a0
+    val a = broadcast(bw.select(col("doc_id").as("id_n"), col("pos").as("pn"),
+      col("fp")))
     val fpIdx = bwPlan.schema.fieldIndex("fp")
     val fpLocal: Option[Seq[Long]] = bwLocal.map { case (rows, _) =>
       rows.map(_.getLong(fpIdx)).distinct.toSeq

@@ -2358,15 +2358,6 @@ object RetrievalQueries {
     */
   private[graft] val MmrIndexedTopC = 24
 
-  /** The INDEXED candidate pool (q_id, n_id, rel, cv, cn) over an
-    * arbitrary query frame (q_id, qv, qn): candidate ids from the
-    * stored-codes ANN serve (never a corpus-side encode or exact-scan
-    * — the index work was paid at build time), then a point fetch of
-    * the ≤ queries × pool candidate vectors for the greedy stage's
-    * exact rel/sim math. Both stages are bounded by the query batch:
-    * the candidate-pair collect is ≤ queries × pool driver rows, and
-    * the fetch prunes the embeddings scan to the candidate ids.
-    */
   /** The stored-codes ANN ranking that seeds the indexed pool —
     * exposed separately so the plan spec can pin the serve stage
     * (stored codes in, no corpus-side encode, no exact-cosine corpus
@@ -2384,6 +2375,15 @@ object RetrievalQueries {
       q.select(col("q_id").as("vec_id"), col("qv").as("embedding")),
       nprobe = 2, topC = math.max(MmrIndexedTopC, pool), depth = pool)
 
+  /** The INDEXED candidate pool (q_id, n_id, rel, cv, cn) over an
+    * arbitrary query frame (q_id, qv, qn): candidate ids from the
+    * stored-codes ANN serve (never a corpus-side encode or exact-scan
+    * — the index work was paid at build time), then a point fetch of
+    * the ≤ queries × pool candidate vectors for the greedy stage's
+    * exact rel/sim math. Both stages are bounded by the query batch:
+    * the candidate-pair collect is ≤ queries × pool driver rows, and
+    * the fetch prunes the embeddings scan to the candidate ids.
+    */
   private[graft] def mmrIndexedCandidates(s: SparkSession, dir: String,
       q: DataFrame, pool: Int, bulk: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

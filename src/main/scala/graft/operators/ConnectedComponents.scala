@@ -262,14 +262,12 @@ object ConnectedComponents {
       labels: DataFrame,
       newEdges: DataFrame,
       aCol: String,
-      bCol: String,
-      broadcastNew: Boolean = true): DataFrame = {
+      bCol: String): DataFrame = {
     def relabel(ext: DataFrame, altMap: DataFrame): DataFrame =
-      ext.join(hinted(altMap, broadcastNew),
-          ext("component") === altMap("aid"), "left")
+      ext.join(broadcast(altMap), ext("component") === altMap("aid"), "left")
         .select(ext("id"),
           coalesce(col("acomp"), ext("component")).as("component"))
-    foldPieces(labels, newEdges, aCol, bCol, broadcastNew) match {
+    foldPieces(labels, newEdges, aCol, bCol) match {
       // the driver fold's pieces are driver data, so its relabel output
       // is collected and returned as a local relation: a caller folding
       // repeatedly in memory gets a constant plan depth instead of one
@@ -311,18 +309,17 @@ object ConnectedComponents {
       labels: DataFrame,
       newEdges: DataFrame,
       aCol: String,
-      bCol: String,
-      broadcastNew: Boolean = true): DataFrame =
-    foldPieces(labels, newEdges, aCol, bCol, broadcastNew) match {
+      bCol: String): DataFrame =
+    foldPieces(labels, newEdges, aCol, bCol) match {
       case f: LocalFold => localDelta(f)
       case DistFold(lab, newNodes, altMap, release) =>
         try {
-          val changedOld = lab.join(hinted(altMap, broadcastNew),
+          val changedOld = lab.join(broadcast(altMap),
               lab("component") === altMap("aid"))
             .filter(col("acomp") =!= lab("component"))
             .select(lab("id"), col("acomp").as("component"))
           val fresh = newNodes
-            .join(hinted(altMap, broadcastNew),
+            .join(broadcast(altMap),
               newNodes("component") === altMap("aid"), "left")
             .select(newNodes("id"),
               coalesce(col("acomp"), newNodes("component")).as("component"))
@@ -350,16 +347,6 @@ object ConnectedComponents {
     import spark.implicits._
     (changedOld.toSeq ++ fresh).toDF("id", "component")
   }
-
-  /** Broadcast hint honoring the fold's `broadcastNew` escape hatch —
-    * the batch-bounded sides (edge endpoints, the contracted relabel
-    * map) are broadcast-sized at streaming cadence, but a
-    * backfill-sized batch's are not; the flag then leaves the planner
-    * free to shuffle both sides, mirroring `DedupQueries`'
-    * `broadcastBatch`.
-    */
-  private def hinted(df: DataFrame, broadcastNew: Boolean): DataFrame =
-    if (broadcastNew) broadcast(df) else df
 
   /** The pieces [[foldPieces]] hands [[incremental]] /
     * [[incrementalDelta]]: existing labels, batch-introduced singleton
@@ -392,8 +379,7 @@ object ConnectedComponents {
       labels: DataFrame,
       newEdges: DataFrame,
       aCol: String,
-      bCol: String,
-      broadcastNew: Boolean = true): Fold = {
+      bCol: String): Fold = {
     // self-edges are kept in e0 (node derivation) and dropped only for
     // contraction: a batch node appearing ONLY in self-edges must still
     // get a singleton label row, exactly as [[run]] (whose minLabelLoop
@@ -404,8 +390,8 @@ object ConnectedComponents {
     val longOnly = (pairs.schema.fields ++ labels.schema.fields).forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     val cap = graft.core.Tables.driverRowCap(labels.sparkSession)
-    // Streaming-cadence fast path: when the caller asserted
-    // batch-bounded edges, the WHOLE fold preamble (batch nodes, seen
+    // Streaming-cadence fast path: when the batch's edges fit the
+    // driver row cap, the WHOLE fold preamble (batch nodes, seen
     // labels, contraction, min-label components) runs on driver-local
     // data with ONE Spark job — a pushed-`In` fetch of the touched
     // labels — instead of the distributed preamble's five-plus
@@ -416,7 +402,7 @@ object ConnectedComponents {
     // verified pairs of a streaming batch) are read and deduplicated
     // in place; others are materialized and counted once first.
     val local =
-      if (broadcastNew && longOnly && pairs.schema.forall(!_.nullable))
+      if (longOnly && pairs.schema.forall(!_.nullable))
         graft.core.Tables.localRows(pairs)
           .map(_.map(r => (r.getLong(0), r.getLong(1))).distinct)
       else None
@@ -433,7 +419,7 @@ object ConnectedComponents {
       // arm never pays a wasted partial collect and the under-cap arm
       // collects straight from cache
       val edgeCount = e0.count()
-      if (broadcastNew && longOnly && edgeCount <= cap) {
+      if (longOnly && edgeCount <= cap) {
         val es = e0.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         release()
         return foldPiecesDriver(labels, es)
@@ -452,7 +438,7 @@ object ConnectedComponents {
         .unionByName(e0.select(col("dst").as("id")))
         .distinct()
       val seenLab = lab
-        .join(hinted(batchNodes, broadcastNew), Seq("id"), "left_semi")
+        .join(broadcast(batchNodes), Seq("id"), "left_semi")
         .localCheckpoint() // batch-bounded; consumed by anti + both
                            // contraction sides — one corpus scan total
       // batch-bounded (anti join between two batch-bounded sets);
@@ -460,8 +446,7 @@ object ConnectedComponents {
       // `touched` side and the caller's fresh-rows derivation) never
       // recompute the probe
       val newNodes = batchNodes
-        .join(hinted(seenLab.select(col("id")), broadcastNew),
-          Seq("id"), "left_anti")
+        .join(broadcast(seenLab.select(col("id"))), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component"))
         .localCheckpoint()
       // every batch-incident node's label, batch-bounded by
@@ -470,8 +455,8 @@ object ConnectedComponents {
       val la = touched.select(col("id").as("ia"), col("component").as("ca"))
       val lb = touched.select(col("id").as("ib"), col("component").as("cb"))
       val contracted = e
-        .join(hinted(la, broadcastNew), e("src") === col("ia"))
-        .join(hinted(lb, broadcastNew), e("dst") === col("ib"))
+        .join(broadcast(la), e("src") === col("ia"))
+        .join(broadcast(lb), e("dst") === col("ib"))
         .select(col("ca").as("u"), col("cb").as("w"))
         .filter(col("u") =!= col("w"))
         .distinct()
@@ -481,9 +466,8 @@ object ConnectedComponents {
       // a maintenance trigger (~2.5 s of a ~7 s tiny trigger, SCALING.md
       // round 10, "Per-trigger job profile"). Union-find on the collected edge list produces the
       // identical min-label result in one collect + one parallelize;
-      // over-cap or non-broadcast (backfill) graphs keep the
-      // log-round distributed path.
-      val altMap = driverAltMap(contracted, broadcastNew).getOrElse {
+      // over-cap (backfill) graphs keep the log-round distributed path.
+      val altMap = driverAltMap(contracted).getOrElse {
         val (alt, _) = runAdaptive(contracted, "u", "w")
         alt.select(col("id").as("aid"), col("component").as("acomp"))
       }
@@ -567,15 +551,12 @@ object ConnectedComponents {
     * driver-side — `(aid, acomp)` rows identical to
     * `runAdaptive(contracted).select(id, component)`: union-find over
     * the collected edges, each node labeled the minimum id reachable
-    * from it. Engaged only when the caller asserted broadcast-sized
-    * batches (`enabled`), both columns are LongType, and the edge list
-    * is under [[graft.core.Tables.driverRowCap]]; `None` otherwise (the
+    * from it. Engaged only when both columns are LongType and the edge
+    * list is under [[graft.core.Tables.driverRowCap]]; `None` otherwise (the
     * distributed path recomputes `contracted` from its persisted inputs — two
     * broadcast joins, no corpus work).
     */
-  private def driverAltMap(
-      contracted: DataFrame, enabled: Boolean): Option[DataFrame] = {
-    if (!enabled) return None
+  private def driverAltMap(contracted: DataFrame): Option[DataFrame] = {
     if (!contracted.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType)) return None
     val cap = graft.core.Tables.driverRowCap(contracted.sparkSession)

@@ -831,7 +831,6 @@ object StreamingPipeline {
   def maintainClusters(
       spark: SparkSession, sigDir: String, labelsDir: String,
       batch: DataFrame, batchId: Long,
-      broadcastBatch: Boolean = true,
       threshold: Double = 0.5): Unit = {
     import graft.analytics.DedupQueries
     // heal a previous upsert's crashed swap BEFORE reading labels: the
@@ -848,10 +847,11 @@ object StreamingPipeline {
     // compaction crash state is healed first, so the append moves
     // nothing under the reader. The append runs on its own thread,
     // which inherits this thread's Spark job properties. The table's
-    // first batch, and the distributed arm, append first.
+    // first batch appends first, and the distributed arm awaits the
+    // append before it reads the table.
     val fs = new org.apache.hadoop.fs.Path(sigDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val beside = broadcastBatch && fs.exists(new org.apache.hadoop.fs.Path(sigDir))
+    val beside = fs.exists(new org.apache.hadoop.fs.Path(sigDir))
     val append = new java.util.concurrent.FutureTask[Unit](() =>
       DedupQueries.appendToSignaturesIdempotent(batch, sigDir, batchId))
     def appended(): Unit =
@@ -868,16 +868,14 @@ object StreamingPipeline {
       val (delta, nDelta) =
         graft.sinks.IncrementalParquet.batchScopedResultCounted(
           spark, deltaDirFor(labelsDir), batchId) {
-        val edges = (if (broadcastBatch)
-            DedupQueries.batchVerifiedPairsLocal(spark, sigDir, batch, threshold)
-          else None).getOrElse {
+        val edges = DedupQueries.batchVerifiedPairsLocal(
+            spark, sigDir, batch, threshold).getOrElse {
           appended()
           DedupQueries.batchVerifiedPairsDistributed(
-            spark, sigDir, batch, threshold, broadcastBatch)
+            spark, sigDir, batch, threshold)
         }
         graft.operators.ConnectedComponents.incrementalDelta(
-          clusterLabels(spark, labelsDir), edges, "doc_id_a", "doc_id_b",
-          broadcastNew = broadcastBatch)
+          clusterLabels(spark, labelsDir), edges, "doc_id_a", "doc_id_b")
       }
       // the emptiness gate reads the stored delta's FOOTER count — the
       // delta is parquet-backed either way (no recompute), and an
@@ -932,13 +930,11 @@ object StreamingPipeline {
       labelsDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      broadcastBatch: Boolean = true,
       compactEvery: Int = DefaultCompactEvery,
       threshold: Double = 0.5): StreamingQuery = {
     startIndexIngest(spark, incomingDir, checkpointDir, docSchema, trigger) {
       (batch, batchId) =>
-        maintainClusters(spark, sigDir, labelsDir, batch, batchId,
-          broadcastBatch, threshold)
+        maintainClusters(spark, sigDir, labelsDir, batch, batchId, threshold)
         onCadence(compactEvery, batchId) {
           graft.analytics.DedupQueries.compactSignaturesMinor(spark, sigDir); ()
         }
@@ -963,7 +959,7 @@ object StreamingPipeline {
   def maintainEmbedClusters(
       spark: SparkSession, bucketsDir: String, labelsDir: String,
       vecsDir: String, batch: DataFrame, batchId: Long,
-      threshold: Double = 0.4, broadcastBatch: Boolean = true,
+      threshold: Double = 0.4,
       bands: Int = 4, bits: Int = 8): Unit = {
     // the two appends touch DISJOINT tables (sign buckets, raw
     // vectors) with no ordering dependence — run them concurrently so
@@ -997,11 +993,9 @@ object StreamingPipeline {
       graft.sinks.IncrementalParquet.batchScopedResultCounted(
         spark, deltaDirFor(labelsDir), batchId) {
       val edges = graft.analytics.DedupQueries.batchVerifiedEmbedPairs(
-        spark, bucketsDir, batch, vecsDir, threshold, broadcastBatch,
-        bands, bits)
+        spark, bucketsDir, batch, vecsDir, threshold, bands, bits)
       graft.operators.ConnectedComponents.incrementalDelta(
-        clusterLabels(spark, labelsDir), edges, "id_a", "id_b",
-        broadcastNew = broadcastBatch)
+        clusterLabels(spark, labelsDir), edges, "id_a", "id_b")
     }
     if (nDelta > 0) // footer-count gate, same rationale as the lexical loop
       Upsert.upsertParquetPartitioned(spark, delta, labelsDir,
@@ -1043,13 +1037,12 @@ object StreamingPipeline {
       checkpointDir: String,
       threshold: Double = 0.4,
       trigger: Trigger = Trigger.AvailableNow(),
-      broadcastBatch: Boolean = true,
       compactEvery: Int = DefaultCompactEvery,
       bands: Int = 4, bits: Int = 8): StreamingQuery =
     startIndexIngest(spark, incomingDir, checkpointDir, embeddingSchema,
       trigger) { (batch, batchId) =>
       maintainEmbedClusters(spark, bucketsDir, labelsDir, vecsDir,
-        batch, batchId, threshold, broadcastBatch, bands, bits)
+        batch, batchId, threshold, bands, bits)
       onCadence(compactEvery, batchId) {
         graft.analytics.DedupQueries.compactSignaturesMinor(spark, bucketsDir)
         graft.analytics.DedupQueries.compactSignaturesMinor(spark, vecsDir); ()

@@ -170,6 +170,35 @@ class BenchSpec extends AnyFunSuite {
     assert(multi.map(_._1) == Seq("q_bad", "q_ok"))
   }
 
+  test("a sidecar from a like host is a baseline: cpus recorded, ratio and floor kept") {
+    val doc = Bench.renderFull(Map("q_a" -> 2.000, "q_b" -> 0.500),
+      "/tmp/sf0.1", calib = Some(0.090), cpus = Some(8))
+    assert(doc.contains("\"cpus\": 8"))
+    // the integer meta field never reads as a query wall
+    assert(!Bench.parseFullQueries(doc).contains("cpus"))
+    // same cores, calib within the band either way
+    assert(Bench.incomparable(doc, 8, Some(0.090)).isEmpty)
+    assert(Bench.incomparable(doc, 8, Some(0.090 * 1.2)).isEmpty)
+    assert(Bench.incomparable(doc, 8, Some(0.090 / 1.2)).isEmpty)
+    val prev = Bench.parseFullQueries(doc)
+    assert(Bench.regressions(prev, Map("q_a" -> 2.400, "q_b" -> 0.640)) ==
+      Seq(("q_a", 2.000, 2.400)), "x1.2 +0.4 s flags; x1.28 +0.14 s does not")
+  }
+
+  test("a sidecar from another host is no baseline: cpus or calib outside the band") {
+    val doc = Bench.renderFull(Map("q_a" -> 2.000), "/tmp/sf0.1",
+      calib = Some(0.087), cpus = Some(8))
+    // the recorded mismatch: an 8-core sidecar read by a 4-core run
+    assert(Bench.incomparable(doc, 4, Some(0.087)).exists(_.contains("cpus 8 -> 4")))
+    assert(Bench.incomparable(doc, 8, Some(0.187)).exists(_.contains("calib")))
+    assert(Bench.incomparable(doc, 8, Some(0.060)).exists(_.contains("calib")))
+    assert(Bench.incomparable(doc, 8, None).nonEmpty)
+    // a sidecar written before cpus was recorded
+    val old = Bench.renderFull(Map("q_a" -> 2.000), "/tmp/sf0.1",
+      calib = Some(0.087))
+    assert(Bench.incomparable(old, 8, Some(0.087)).exists(_.contains("no cpus")))
+  }
+
   test("the line carries calib as provenance and noisy as a failure signal") {
     val line = Bench.renderLine(Map("q_x" -> 1.234), "/tmp/sf0.1",
       calib = Some(0.0843), noise = Some(3.21))

@@ -244,7 +244,7 @@ class ClusterMaintenanceSpec extends SparkSpec {
         land(w, incoming, f"w$i%02d.parquet")
         StreamingPipeline.startDedupMaintenance(
           spark, incoming.toString, sig.toString, labels, ckpt,
-          Trigger.AvailableNow(), broadcastBatch = true, compactEvery = 2)
+          Trigger.AvailableNow(), compactEvery = 2)
           .awaitTermination(180000)
       }
 

@@ -226,12 +226,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(same.as[(Long, Long)].collect().toMap == unionFind(old))
   }
 
-  test("driver union-find path == distributed path (broadcastNew flag)") {
+  test("driver union-find path == distributed path (driver row cap)") {
     import spark.implicits._
-    // broadcastNew=true engages the driver-side union-find shortcut on
-    // the contracted graph; false keeps the distributed runAdaptive.
+    // under the driver row cap the fold runs union-find on the driver;
+    // at cap 0 it takes the distributed preamble, and driverAltMap
+    // declines too, so the contracted graph goes through runAdaptive.
     // Both must produce the identical min-reachable-id labeling — the
-    // backfill escape hatch cannot change results.
+    // backfill shape cannot change results.
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(100 + seed)
       val n = 40
@@ -242,20 +243,20 @@ class ConnectedComponentsSpec extends SparkSpec {
       val base = ConnectedComponents.runAdaptive(
         old.toDF("a", "b"), "a", "b")._1
       val viaDriver = ConnectedComponents.incremental(
-        base, batch.toDF("a", "b"), "a", "b", broadcastNew = true)
+        base, batch.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
-      val viaCluster = ConnectedComponents.incremental(
-        base, batch.toDF("a", "b"), "a", "b", broadcastNew = false)
-        .as[(Long, Long)].collect().toMap
+      val viaCluster = withoutDriverCollects(ConnectedComponents.incremental(
+        base, batch.toDF("a", "b"), "a", "b")
+        .as[(Long, Long)].collect().toMap)
       assert(viaDriver == viaCluster, s"seed=$seed")
       assert(viaDriver == unionFind(edges), s"seed=$seed vs oracle")
       // delta form too
       val dDriver = ConnectedComponents.incrementalDelta(
-        base, batch.toDF("a", "b"), "a", "b", broadcastNew = true)
+        base, batch.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
-      val dCluster = ConnectedComponents.incrementalDelta(
-        base, batch.toDF("a", "b"), "a", "b", broadcastNew = false)
-        .as[(Long, Long)].collect().toMap
+      val dCluster = withoutDriverCollects(ConnectedComponents.incrementalDelta(
+        base, batch.toDF("a", "b"), "a", "b")
+        .as[(Long, Long)].collect().toMap)
       assert(dDriver == dCluster, s"seed=$seed delta")
     }
   }

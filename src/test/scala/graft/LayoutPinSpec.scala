@@ -17,8 +17,9 @@ import graft.sinks.IncrementalParquet
   * (d) keys first supplied after birth are persisted into the pin,
   * (e) compaction preserves the pinned clustering inside every file it
   * writes, (f) the driver-side hash-bucket evaluation agrees with the
-  * column plan exactly, and (g) the pushed-probe and join-fallback
-  * arms of both batch pair probes return identical pairs.
+  * column plan exactly, and (g) the pushed-probe and over-cap
+  * (join-fallback) arms of both batch pair probes return identical
+  * pairs.
   */
 class LayoutPinSpec extends SparkSpec {
 
@@ -174,16 +175,12 @@ class LayoutPinSpec extends SparkSpec {
       val pushed = pairsOf(
         DedupQueries.batchVerifiedPairs(spark, t, batch))
       assert(pushed.nonEmpty, "vacuous: no verified pairs")
-      // over-cap: every collectLocal falls to its distributed arm while
-      // broadcast hints stay on (the backfill-misuse guard path)
+      // over-cap: every collectLocal falls to its distributed arm, the
+      // broadcast-semi join fallback (the backfill shape)
       val overCap = withoutDriverCollects {
         pairsOf(DedupQueries.batchVerifiedPairs(spark, t, batch))
       }
       assert(overCap == pushed, "over-cap arm diverged from pushed probe")
-      // join fallback: no driver collection, no broadcast hints
-      val shuffled = pairsOf(DedupQueries.batchVerifiedPairs(
-        spark, t, batch, broadcastBatch = false))
-      assert(shuffled == pushed, "join-fallback arm diverged")
     }
   }
 
@@ -199,18 +196,14 @@ class LayoutPinSpec extends SparkSpec {
       DedupQueries.appendToSignBucketsIdempotent(batch, sb, 1L,
         bands = 4, bits = 16)
       DedupQueries.appendToVectorsIdempotent(batch, vecs, 1L)
-      def arms(broadcastBatch: Boolean) = pairsOf(
+      def pairs() = pairsOf(
         DedupQueries.batchVerifiedEmbedPairs(spark, sb, batch, vecs,
-          threshold = 0.8, broadcastBatch = broadcastBatch,
-          bands = 4, bits = 16))
-      val pushed = arms(broadcastBatch = true)
+          threshold = 0.8, bands = 4, bits = 16))
+      val pushed = pairs()
       assert(pushed.nonEmpty, "vacuous: no verified embed pairs")
-      val overCap = withoutDriverCollects {
-        arms(broadcastBatch = true)
-      }
+      // over-cap: the checkpointed batch side and the semi-join fallback
+      val overCap = withoutDriverCollects(pairs())
       assert(overCap == pushed, "over-cap arm diverged from pushed probe")
-      assert(arms(broadcastBatch = false) == pushed,
-        "join-fallback arm diverged")
     }
   }
 
@@ -225,16 +218,13 @@ class LayoutPinSpec extends SparkSpec {
     def deltaMap(d: DataFrame): Map[Long, Long] =
       d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val driver = deltaMap(graft.operators.ConnectedComponents
-      .incrementalDelta(labels, edges, "id_a", "id_b", broadcastNew = true))
-    // seam: cap 0 forces the distributed preamble even with the hint on
+      .incrementalDelta(labels, edges, "id_a", "id_b"))
+    // seam: cap 0 forces the distributed preamble
     val dist = withoutDriverCollects {
       deltaMap(graft.operators.ConnectedComponents
-        .incrementalDelta(labels, edges, "id_a", "id_b", broadcastNew = true))
+        .incrementalDelta(labels, edges, "id_a", "id_b"))
     }
-    val shuffledArm = deltaMap(graft.operators.ConnectedComponents
-      .incrementalDelta(labels, edges, "id_a", "id_b", broadcastNew = false))
     assert(driver == dist, "driver fold diverged from distributed fold")
-    assert(driver == shuffledArm, "broadcast arm diverged from shuffled arm")
     // the expected delta, by hand: 5's component joins 1 (via 2—5),
     // 20 enters under 9, 30/31 form a fresh pair, 40 is a singleton
     assert(driver == Map(5L -> 1L, 20L -> 9L, 30L -> 30L, 31L -> 30L,

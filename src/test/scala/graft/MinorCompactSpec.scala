@@ -184,7 +184,12 @@ class MinorCompactSpec extends SparkSpec {
     }
   }
 
-  test("broadcastBatch=false: shuffled probe plan, identical verified pairs") {
+  test("over-cap probe: the stored signatures are scanned, never exchanged") {
+    import org.apache.spark.sql.execution.{FileSourceScanLike, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import scala.jdk.CollectionConverters._
     withTempDir { root =>
       val t = root.resolve("sig").toString
       DedupQueries.appendToSignaturesIdempotent(docs(0, 600), t, 0L)
@@ -192,15 +197,49 @@ class MinorCompactSpec extends SparkSpec {
       val copies = docs(0, 80).select(
         (col("doc_id") + 600).as("doc_id"), col("text"))
       DedupQueries.appendToSignaturesIdempotent(copies, t, 1L)
-      def pairs(flag: Boolean): Set[(Long, Long)] =
-        DedupQueries.batchVerifiedPairs(spark, t, copies,
-            broadcastBatch = flag)
+      def pairs(): Set[(Long, Long)] =
+        DedupQueries.batchVerifiedPairs(spark, t, copies)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val bc = pairs(true)
-      assert(bc.nonEmpty, "vacuous: no cross-batch pairs at all")
-      // the backfill escape hatch must not force driver broadcasts of
-      // the id sets either — same output through the shuffled plan
-      assert(pairs(false) == bc)
+      val driverArm = pairs()
+      assert(driverArm.nonEmpty, "vacuous: no cross-batch pairs at all")
+      // the executed plan of every query the distributed arm runs
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      // auto-broadcast off: the plan's own hints, not size estimates,
+      // must keep the stored side out of every exchange
+      val overCap = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+        withoutDriverCollects {
+          spark.listenerManager.register(listener)
+          try {
+            val r = pairs()
+            org.apache.spark.graftspec.Bus.drain(spark.sparkContext)
+            r
+          } finally spark.listenerManager.unregister(listener)
+        }
+      }
+      assert(overCap == driverArm, "distributed arm diverged from the driver arm")
+      // per stored-table scan: does an Exchange sit between it and the
+      // join that consumes it (the batch-bounded join OUTPUT may shuffle)
+      def storedScans(p: SparkPlan, exchanged: Boolean): Seq[Boolean] = p match {
+        case s: FileSourceScanLike
+            if s.relation.location.rootPaths.exists(_.toString.contains(t)) =>
+          Seq(exchanged)
+        case a: AdaptiveSparkPlanExec => storedScans(a.executedPlan, exchanged)
+        case q: QueryStageExec => storedScans(q.plan, exchanged)
+        case r: ReusedExchangeExec => storedScans(r.child, exchanged)
+        case _: BaseJoinExec => p.children.flatMap(storedScans(_, exchanged = false))
+        case _: Exchange => p.children.flatMap(storedScans(_, exchanged = true))
+        case _ => p.children.flatMap(storedScans(_, exchanged))
+      }
+      val scans = plans.asScala.toSeq.flatMap(storedScans(_, exchanged = false))
+      // the candidate probe and the shingle fetch each read the table
+      assert(scans.size >= 2, s"vacuous: ${scans.size} stored-table scans seen")
+      assert(!scans.contains(true),
+        "the stored signature table is exchanged:\n" + plans.asScala.mkString("\n"))
     }
   }
 

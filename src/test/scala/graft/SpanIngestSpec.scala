@@ -74,14 +74,10 @@ class SpanIngestSpec extends SparkSpec {
       }
       assert(crossBatch, "no cross-batch span — corpus too easy, vacuous test")
 
-      // probe-arm parity: the join fallback must agree with the pushed
-      // probe (batchSpanPairs' collectLocal arms)
-      assert(spanSet(DedupQueries.batchSpanPairs(spark, win, b1,
-        broadcastBatch = false)) == batchSpans,
-        "span probe join-fallback arm diverged")
-      // ... and the over-cap arm (collectLocal declines, localCheckpoint
-      // + broadcast join, no key pruning) — the driver-cap seam
-      // LayoutPinSpec uses on the lexical/embed probes
+      // probe-arm parity: the over-cap arm (collectLocal declines,
+      // localCheckpoint + broadcast join, no key pruning) must agree
+      // with the pushed probe — the driver-cap seam LayoutPinSpec uses
+      // on the lexical/embed probes
       withoutDriverCollects(assert(spanSet(DedupQueries.batchSpanPairs(
         spark, win, b1)) == batchSpans, "span probe over-cap arm diverged"))
 
