@@ -1981,7 +1981,8 @@ object RetrievalQueries {
     * the worker thread.
     */
   private def collectArm(mk: => DataFrame): Array[(Long, Long, Int)] =
-    mk.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    mk.collect().map(r => (r.getAs[Number](0).longValue,
+      r.getAs[Number](1).longValue, r.getInt(2)))
 
   /** Driver-side mirror of [[rrfFusedRanked]] over two collected arms:
     * full-outer merge on (q_id, n_id), rrf = Σ 1/(60+rank) over the
@@ -2033,14 +2034,32 @@ object RetrievalQueries {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Size-aware fusion: interactive batches (the [[mmrBulk]] bound —
-    * both arms are ≤ queries × [[FuseDepth]] rows by construction)
-    * collect the two arms CONCURRENTLY and fuse driver-side; bulk
-    * batches keep the distributed full-outer fuse.
+  /** Whether a retrieval batch of at most `rows` per-query rows
+    * (queries × fusion depth or MMR pool) takes its interactive arms
+    * (driver-collected fusion arms and candidate ids, an id-pruned
+    * vector fetch, a broadcast query side): within the literal rule
+    * BM25 already reads ([[PushdownTermsMax]]) and the driver-collect
+    * cap ([[Tables.driverRowCap]]). The query count is known on the
+    * driver before any job. Above it the batch is bulk: a driver fuse
+    * over it is single-threaded, its query vectors (~300 B a row) may
+    * outgrow a broadcast and its candidate ids an `isin` list.
+    */
+  private def interactiveBatch(s: SparkSession, rows: Long): Boolean =
+    rows <= math.min(PushdownTermsMax, Tables.driverRowCap(s))
+
+  /** Whether a batch's fusion arms are collected: each arm is
+    * ≤ queries × [[FuseDepth]] rows by construction.
+    */
+  private def fusesLocally(s: SparkSession, numQueries: Long): Boolean =
+    interactiveBatch(s, numQueries * FuseDepth)
+
+  /** Size-aware fusion: within [[fusesLocally]] the two arms are
+    * collected CONCURRENTLY and fused driver-side; above it the
+    * distributed full-outer fuse runs.
     */
   private def rrfFuseSized(s: SparkSession, numQueries: Long,
       mkBt: => DataFrame, mkCt: => DataFrame): DataFrame =
-    if (!mmrBulk(numQueries)) {
+    if (fusesLocally(s, numQueries)) {
       val (btRows, ctRows) = inParallel(collectArm(mkBt), collectArm(mkCt))
       rrfFuseDfLocal(s, rrfFuseLocal(btRows.toSeq, ctRows.toSeq))
     } else rrfFuse(mkBt, mkCt)
@@ -2173,9 +2192,11 @@ object RetrievalQueries {
     * library itself is correct for any λ ∈ [0,1].
     */
   def mmrDiversified(s: SparkSession, dir: String, nQueries: Int,
-      pool: Int, picks: Int, lam: Double): DataFrame =
-    mmrForQueries(s, dir, mmrCorpusQueryFrame(s, dir, nQueries),
-      pool, picks, lam, nQueries.toLong)
+      pool: Int, picks: Int, lam: Double): DataFrame = {
+    val served = mmrExactServed(s, dir, mmrCorpusQueryFrame(s, dir, nQueries),
+      pool, picks, lam)
+    served.plan(exactPoolTier(s, nQueries, pool, Tables.tier(served.leaves: _*)))
+  }
 
   /** The INDEXED MMR tier: same greedy selection, but the candidate
     * pool comes from the stored-codes ANN serve instead of an exact
@@ -2189,10 +2210,8 @@ object RetrievalQueries {
     */
   def mmrDiversifiedIndexed(s: SparkSession, dir: String, nQueries: Int,
       pool: Int, picks: Int, lam: Double): DataFrame =
-    mmrSelect(
-      mmrIndexedCandidates(s, dir, mmrCorpusQueryFrame(s, dir, nQueries),
-        pool, bulk = mmrBulk(nQueries.toLong)),
-      picks, lam, nQueries.toLong)
+    mmrGreedy(mmrIndexedCandidates(s, dir,
+      mmrCorpusQueryFrame(s, dir, nQueries), pool, nQueries), picks, lam)
 
   /** Corpus-size threshold (bytes, embeddings-table stats) above which
     * [[mmrSearchVectors]] pools candidates from the stored-codes ANN
@@ -2236,35 +2255,30 @@ object RetrievalQueries {
   }
 
   /** The exact-pool arm of [[mmrSearchVectors]] at embeddings
-    * generation `embKey`; in the one-partition tier the entry's
-    * template is the whole request.
+    * generation `embKey`: the entry's template is the whole request in
+    * every tier.
     */
   private[graft] def mmrVectorsExact(s: SparkSession, dir: String,
       embKey: String, vectors: Seq[Array[Float]], pool: Int, picks: Int,
       lam: Double): DataFrame = {
-    val nq = vectors.size.toLong
     val rows = mmrQueryRows(vectors)
     val p = Tables.Request(s"mmrSearchVectors|$embKey|$pool|$picks|$lam",
       embKey, Tables.Bindings(rows = Map("q" -> (MmrQuerySchema, rows))),
       sl => {
         val sv = mmrExactServed(s, dir, mmrQuery(sl.rows("q")), pool, picks, lam)
-        Tables.Served(sv.leaves, tier =>
-          if (tier.onePartition) mmrExternal(sv.plan(tier)) else sv.plan(tier))
+        Tables.Served(sv.leaves, tier => mmrExternal(sv.plan(tier)))
       }).prepare(s)
-    val tier = if (mmrBulk(nq)) Tables.Tier.Planner else p.tier
-    if (tier.onePartition) p.plan(tier)
-    else mmrExternal(mmrSelect(p.plan(tier), picks, lam, nq))
+    p.plan(exactPoolTier(s, vectors.size, pool, p.tier))
   }
 
   /** The indexed-pool arm of [[mmrSearchVectors]]. */
   private[graft] def mmrVectorsIndexed(s: SparkSession, dir: String,
       vectors: Seq[Array[Float]], pool: Int, picks: Int,
       lam: Double): DataFrame = {
-    val nq = vectors.size.toLong
     val q = mmrQuery(s.createDataFrame(
       java.util.Arrays.asList(mmrQueryRows(vectors): _*), MmrQuerySchema))
-    mmrExternal(mmrSelect(
-      mmrIndexedCandidates(s, dir, q, pool, bulk = mmrBulk(nq)), picks, lam, nq))
+    mmrExternal(mmrGreedy(
+      mmrIndexedCandidates(s, dir, q, pool, vectors.size), picks, lam))
   }
 
   /** An external MMR batch as (q_id, qv) rows on negative ids. */
@@ -2306,33 +2320,23 @@ object RetrievalQueries {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         l2Norm(col("embedding")).as("qn"))
 
+  /** The tier of an exact-pool request of `numQueries` queries at
+    * `pool`: the request's own `tier` while [[interactiveBatch]], else
+    * [[Tables.Tier.Planner]] — the hint drops and AQE decides (the BM25
+    * JOIN-arm discipline): the theta-join pool is then a shuffle join,
+    * still never all-pairs materialized past the rank cut.
+    */
+  private def exactPoolTier(s: SparkSession, numQueries: Long, pool: Int,
+      tier: => Tables.Tier): Tables.Tier =
+    if (interactiveBatch(s, numQueries * pool)) tier else Tables.Tier.Planner
+
   /** The EXACT candidate pool + greedy selection over an arbitrary
     * query frame (q_id, qv, qn) — the oracle-exact small-corpus form.
-    * The embeddings and the query frame are the request's leaves
+    * The embeddings and the query frame are its leaves
     * ([[Tables.tier]]): within one task's bound the theta join is a
-    * one-task CartesianProduct and the grouped greedy kernel runs in
-    * the same partition, so the whole request is one job.
-    */
-  private def mmrForQueries(s: SparkSession, dir: String, q: DataFrame,
-      pool: Int, picks: Int, lam: Double, numQueries: Long): DataFrame = {
-    val served = mmrExactServed(s, dir, q, pool, picks, lam)
-    // interactive batches broadcast the query frame; a bulk batch's
-    // query frame may exceed driver-broadcast size, so the hint drops
-    // and AQE decides (the BM25 JOIN-arm discipline) — the theta-join
-    // pool is then a shuffle join, still never all-pairs materialized
-    // past the rank cut
-    val tier =
-      if (mmrBulk(numQueries)) Tables.Tier.Planner
-      else Tables.tier(served.leaves: _*)
-    if (tier.onePartition) served.plan(tier)
-    else mmrSelect(served.plan(tier), picks, lam, numQueries)
-  }
-
-  /** The exact-pool body of [[mmrForQueries]]: the embeddings and the
-    * query frame are its leaves. In the one-partition tier its plan is
-    * the whole selection (the grouped greedy kernel in the pool's one
-    * partition); in the distributed tiers it is the candidate pool
-    * (q_id, n_id, rel, cv, cn), which [[mmrSelect]] finishes.
+    * one-task CartesianProduct and the grouped greedy kernel
+    * ([[mmrGreedy]]) runs in the same partition, so the whole request
+    * is one job.
     */
   private def mmrExactServed(s: SparkSession, dir: String, q: DataFrame,
       pool: Int, picks: Int, lam: Double): Tables.Served = {
@@ -2342,13 +2346,11 @@ object RetrievalQueries {
     val wrel = Window.partitionBy(col("q_id"))
       .orderBy(col("rel").desc, col("n_id"))
     Tables.Served(Seq(c, q), tier => {
-      val cand = tier.single(tier.single(c).join(tier.cross(q),
+      mmrGreedy(tier.single(tier.single(c).join(tier.cross(q),
           col("n_id") =!= col("q_id")))
         .withColumn("rel", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
         .withColumn("rk", row_number().over(wrel))
-        .filter(col("rk") <= pool)
-        .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
-      if (tier.onePartition) mmrGreedyDistributed(cand, picks, lam) else cand
+        .filter(col("rk") <= pool), picks, lam)
     })
   }
 
@@ -2376,62 +2378,60 @@ object RetrievalQueries {
       nprobe = 2, topC = math.max(MmrIndexedTopC, pool), depth = pool)
 
   /** The INDEXED candidate pool (q_id, n_id, rel, cv, cn) over an
-    * arbitrary query frame (q_id, qv, qn): candidate ids from the
-    * stored-codes ANN serve (never a corpus-side encode or exact-scan
-    * — the index work was paid at build time), then a point fetch of
-    * the ≤ queries × pool candidate vectors for the greedy stage's
-    * exact rel/sim math. Both stages are bounded by the query batch:
-    * the candidate-pair collect is ≤ queries × pool driver rows, and
-    * the fetch prunes the embeddings scan to the candidate ids.
+    * arbitrary query frame (q_id, qv, qn) of `numQueries` queries:
+    * candidate ids from the stored-codes ANN serve (never a corpus-side
+    * encode or exact-scan — the index work was paid at build time),
+    * then the ≤ queries × pool candidate vectors fetched by
+    * [[mmrCandidates]], with rel the exact cosine to the query.
     */
   private[graft] def mmrIndexedCandidates(s: SparkSession, dir: String,
-      q: DataFrame, pool: Int, bulk: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val ranked = mmrIndexedPool(s, dir, q, pool)
-    val fetched =
-      if (bulk) {
-        // BULK fetch arm: the pair frame stays distributed and the
-        // candidate vectors arrive by JOIN — a collect + `isin`
-        // literal over millions of candidate ids would bottleneck the
-        // driver and blow the plan (the BM25 JOIN-arm discipline). No
-        // broadcast hints: at the batch sizes that pick this arm the
-        // pair/query frames may exceed driver-broadcast size; AQE
-        // still broadcasts small ones on its own.
-        t(s, dir, "embeddings")
-          .select(col("vec_id").as("n_id"), col("embedding").as("cv"),
-            l2Norm(col("embedding")).as("cn"))
-          .join(ranked.select(col("q_id"), col("n_id")), Seq("n_id"))
-          .join(q, Seq("q_id"))
-      } else {
-        val pairRows = ranked.select(col("q_id"), col("n_id")).collect().toSeq
-        val ids = pairRows.map(_.getLong(1)).distinct
-        val pairs = s.createDataFrame(
-          java.util.Arrays.asList(pairRows: _*),
-          StructType(Seq(StructField("q_id", LongType),
-            StructField("n_id", LongType))))
-        t(s, dir, "embeddings")
-          .filter(col("vec_id").isin(ids: _*))
-          .select(col("vec_id").as("n_id"), col("embedding").as("cv"),
-            l2Norm(col("embedding")).as("cn"))
-          .join(broadcast(pairs), Seq("n_id"))
-          .join(broadcast(q), Seq("q_id"))
-      }
-    fetched
-      .select(col("q_id"), col("n_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("rel"),
-        col("cv"), col("cn"))
+      q: DataFrame, pool: Int, numQueries: Long): DataFrame =
+    mmrCandidates(s, dir,
+      mmrIndexedPool(s, dir, q, pool).select(col("q_id"), col("n_id")),
+      numQueries * pool, Some(q))
+
+  /** The MMR candidate frame (q_id, n_id, rel, cv, cn): the at most
+    * `bound` candidate `pairs` (q_id, n_id, and rel unless `q` is
+    * given) joined to each candidate's stored vector and norm — cv/cn
+    * by the same plan-side l2Norm expression as the exact pool — and,
+    * given the query frame `q` (q_id, qv, qn), rel as the exact cosine
+    * to the query. Candidates without an embedding row drop out. While
+    * `bound` is [[interactiveBatch]], the pairs are driver rows, an
+    * `In(vec_id)` predicate prunes the embeddings scan to their ids,
+    * and the frame is laid out by the request's [[Tables.tier]] — one
+    * job with the greedy in the one-partition tier. Above it the pairs
+    * stay distributed and the vectors arrive by an unhinted join: a
+    * collect + `isin` literal over millions of candidate ids would
+    * bottleneck the driver and blow the plan.
+    */
+  private def mmrCandidates(s: SparkSession, dir: String, pairs: DataFrame,
+      bound: Long, q: Option[DataFrame]): DataFrame = {
+    val e = t(s, dir, "embeddings")
+    val (vecs, side, tier) =
+      if (interactiveBatch(s, bound)) {
+        val rows = Tables.collectLocal(pairs).toSeq
+        val ids = rows.map(_.getAs[Any]("n_id")).distinct
+        val pruned = e.filter(col("vec_id").isin(ids: _*))
+        val local = s.createDataFrame(java.util.Arrays.asList(rows: _*), pairs.schema)
+        (pruned, local, Tables.tier(pruned +: local +: q.toSeq: _*))
+      } else (e, pairs, Tables.Tier.Planner)
+    val fetched = tier.single(tier.leaf(vecs.select(col("vec_id").as("n_id"),
+        col("embedding").as("cv"), l2Norm(col("embedding")).as("cn")))
+      .join(tier.small(side), Seq("n_id")))
+    q.fold(fetched)(qf => tier.single(fetched.join(tier.small(qf), Seq("q_id")))
+        .withColumn("rel", dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
+      .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
   }
 
   /** ONE query's MMR greedy selection over its candidate pool rows
     * `(n_id, rel, cv, cn)` → `(n_id, pick, mmr_score)` — THE selection
-    * kernel, shared bit-for-bit by the driver arm ([[mmrGreedy]]) and
-    * the distributed bulk arm ([[mmrGreedyDistributed]]): the same
-    * compiled arithmetic runs in both places, so the arms cannot
-    * drift. Every double op mirrors the relational form the unrolled
-    * oracle CTEs re-derive — FloatVectorDot's strict left-to-right
-    * accumulation, λ·rel − (1−λ)·max-sim with the same literal
-    * products, ties by (value desc, n_id asc); the seed pick mirrors
-    * the oracle's s1 CTE EXACTLY: ordered by (rel desc, n_id asc)
+    * kernel, run per query by the grouped [[mmrGreedy]] for every
+    * entry of the diversified family. Every double op mirrors the
+    * relational form the unrolled oracle CTEs re-derive —
+    * FloatVectorDot's strict left-to-right accumulation,
+    * λ·rel − (1−λ)·max-sim with the same literal products, ties by
+    * (value desc, n_id asc); the seed pick mirrors the oracle's s1 CTE
+    * EXACTLY: ordered by (rel desc, n_id asc)
     * with mmr emitted as λ·rel (ordering by λ·rel would diverge at
     * λ=0, where every product ties at 0 and the tie-break would pick
     * the lowest n_id regardless of relevance). Order-independent in
@@ -2476,52 +2476,17 @@ object RetrievalQueries {
   }
 
   /** The MMR greedy selection over a candidate pool (q_id, n_id, rel,
-    * cv, cn) — shared by the exact and indexed tiers so the selection
-    * semantics cannot drift between them. This is the INTERACTIVE
-    * (driver) arm: the pool is query-batch-sized BY CONSTRUCTION
-    * (≤ queries × pool rows of 64-dim vectors — driver metadata, the
-    * ANN serve's collect-once discipline), so the greedy selection
-    * runs as plain driver arithmetic on ONE collected frame. Rounds
-    * 13–15 ran the loop distributed over per-step localCheckpoints:
-    * correct, but 8+ scheduler jobs per pick on query-batch-sized
-    * local relations — a 46-job floor for a 1-query search
-    * (SCALING.md round 16, "External search entries: the planning
-    * floor cut"). For OFFLINE bulk batches the per-query
-    * kernel runs distributed instead ([[mmrGreedyDistributed]]); the
-    * catalog hash gates pin the shared kernel bit-for-bit at every
-    * dial, and the arm-identity spec pins the two arms row-identical.
+    * cv, cn) — the one tail of every diversified entry, exact or
+    * indexed pool, so the selection semantics cannot drift between
+    * them. The per-query kernel ([[mmrGreedyPerQuery]]) runs inside
+    * `flatMapGroups` keyed on q_id: queries never interact, so a large
+    * batch scales with the cluster, and over a one-partition candidate
+    * frame ([[Tables.Tier.OnePartition]]) the grouping plans no
+    * exchange, so an interactive request runs the greedy inside its
+    * one job instead of collecting the pool. The catalog hash gates
+    * pin the kernel bit-for-bit at every dial.
     */
   private[graft] def mmrGreedy(
-      cand0: DataFrame, picks: Int, lam: Double): DataFrame = {
-    val s = cand0.sparkSession
-    val rows = cand0.collect()
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Double)]
-    rows.groupBy(_.getLong(0)).foreach { case (q, rs) =>
-      // (n_id, rel, cv, cn), pool-sized
-      val cs = rs.map(r => (r.getLong(1), r.getDouble(2),
-        r.getSeq[Float](3).toArray, r.getDouble(4)))
-      mmrGreedyPerQuery(cs, picks, lam).foreach { case (n, k, m) =>
-        out += ((q, n, k, m)) }
-    }
-    import s.implicits._
-    out.toSeq.toDF("q_id", "n_id", "pick", "mmr_score")
-      .orderBy(col("q_id"), col("pick"))
-  }
-
-  /** The BULK (distributed) greedy arm: the per-query kernel runs
-    * inside `flatMapGroups` keyed on q_id — embarrassingly parallel
-    * (queries never interact), so an offline million-query
-    * diversification scales with the cluster instead of collecting
-    * queries × pool candidate VECTORS to the driver and running the
-    * selection single-threaded. Same compiled kernel as the driver
-    * arm — identical output by construction (and pinned row-identical
-    * by the arm-identity spec on random pools). Over a one-partition
-    * candidate frame ([[Tables.Tier.OnePartition]]) the grouping plans
-    * no exchange, so the exact tier's interactive request runs the
-    * greedy inside its one job instead of collecting the pool.
-    */
-  private[graft] def mmrGreedyDistributed(
       cand0: DataFrame, picks: Int, lam: Double): DataFrame = {
     val s = cand0.sparkSession
     import s.implicits._
@@ -2537,43 +2502,6 @@ object RetrievalQueries {
       .toDF("q_id", "n_id", "pick", "mmr_score")
       .orderBy(col("q_id"), col("pick"))
   }
-
-  /** Query-batch-size bound (count of queries — known on the driver
-    * before any job, the [[PushdownTermsMax]] discipline) above
-    * which the diversified family's greedy and candidate-fetch stages
-    * switch from the interactive driver arm (collect + literal-pruned
-    * point fetch + driver arithmetic) to the distributed bulk arm
-    * (join-based vector fetch + grouped per-query greedy). The driver
-    * arm's collect carries the candidate VECTORS (≈ queries × pool ×
-    * 64 floats ≈ 300 B/row) and builds an `isin` literal over the
-    * candidate ids, both linear in the batch — fine interactive,
-    * driver-bound for offline million-query batches. The default is
-    * set by the STRUCTURAL bound, not local wall-clock: the round-17
-    * measurement at sf1 (SCALING.md round 17, "Bulk (distributed) arm
-    * for the diversified retrieval family") has the bulk arm
-    * winning at EVERY batch size on this box (n=1: 0.78 vs 1.02 s;
-    * n=512: 1.60 vs 1.97; n=10k: 9.6 vs 12.3) because a 5 MB local
-    * corpus makes the bulk arm's un-pruned embeddings scan free — but
-    * at 100 TB that scan term dominates a small batch, and the driver
-    * arm's id-pruned point fetch (O(candidates) IO) is the right plan
-    * exactly while the candidate-id set fits the literal-pushdown
-    * discipline: 512 queries × pool 20 = 10,240 ids, just under the
-    * [[PushdownTermsMax]] 16,384-literal line. Above it the
-    * literal stops pruning anyway and the measured-everywhere-faster
-    * bulk arm takes over.
-    */
-  private val MmrBulkQueriesMin = 512L
-
-  private def mmrBulk(numQueries: Long): Boolean = numQueries > MmrBulkQueriesMin
-
-  /** Size-aware greedy dispatch — driver arm at interactive batch
-    * sizes, distributed arm above [[MmrBulkQueriesMin]].
-    */
-  private def mmrSelect(cand: DataFrame, picks: Int, lam: Double,
-      numQueries: Long): DataFrame =
-    if (mmrBulk(numQueries))
-      mmrGreedyDistributed(cand, picks, lam)
-    else mmrGreedy(cand, picks, lam)
 
   // ------------------------------------------------------------------
   // Streaming relevance scoring — the retrieval family's gate member
@@ -2767,12 +2695,10 @@ object RetrievalQueries {
     * retrieval stack in one chain). Both fusion arms serve from their
     * stored indexes (the q_hybrid_rrf_indexed chain); the candidate
     * list is query-batch-sized and nothing is corpus-sized after the
-    * two index serves. Size-aware like every retrieval entry: at
-    * interactive batch sizes the vectors arrive by id-pruned point
-    * fetch and the greedy runs driver-side; above
-    * [[MmrBulkQueriesMin]] the fetch is an un-hinted join and the
-    * per-query greedy runs distributed (same kernel — arm-identity
-    * pinned).
+    * two index serves. Size-aware like every retrieval entry: the
+    * arms fuse on the driver while the batch [[fusesLocally]], and the
+    * candidate vectors arrive as [[mmrCandidates]] decides, feeding the
+    * one grouped greedy ([[mmrGreedy]]).
     */
   def hybridDiversified(s: SparkSession, dir: String, nQueries: Int,
       picks: Int, lam: Double): DataFrame =
@@ -2780,64 +2706,32 @@ object RetrievalQueries {
       hybridIndexedBmArm(s, dir, nQueries),
       hybridIndexedCosArm(s, dir, nQueries))
 
-  /** Size-aware diversified tail over the two fusion arms: the
-    * interactive tier collects the arms CONCURRENTLY, fuses
+  /** Size-aware diversified tail over the two fusion arms: within
+    * [[fusesLocally]] the arms are collected CONCURRENTLY and fused
     * driver-side ([[rrfFuseLocal]] — rel is the raw fused rrf, exactly
-    * the triples the previous shape collected from the distributed
-    * fuse), point-fetches the candidate vectors in ONE id-pruned job
-    * and runs the shared greedy kernel on the driver
-    * ([[mmrGreedyLocal]]). Bulk batches keep the distributed fuse +
-    * join-fetch + grouped greedy.
+    * the distributed fuse's), and the fused triples bind as a local
+    * relation; above it the distributed fuse ([[rrfFusedRanked]])
+    * runs. Either way the triples meet their vectors in
+    * [[mmrCandidates]] and the grouped kernel picks.
     */
   private def diversifiedSized(s: SparkSession, dir: String,
       numQueries: Long, picks: Int, lam: Double,
-      mkBt: => DataFrame, mkCt: => DataFrame): DataFrame =
-    if (mmrBulk(numQueries))
-      mmrSelect(fusedCandidates(s, dir, rrfFusedRanked(mkBt, mkCt)),
-        picks, lam, numQueries)
-    else {
-      val (btRows, ctRows) = inParallel(collectArm(mkBt), collectArm(mkCt))
-      mmrGreedyLocal(s, dir,
-        rrfFuseLocal(btRows.toSeq, ctRows.toSeq)
-          .map { case (q, n, rrf, _, _, _) => (q, n, rrf) },
-        picks, lam)
-    }
-
-  /** The interactive diversified tail over locally fused (q_id, n_id,
-    * rel) triples: ONE id-pruned embeddings job fetches each distinct
-    * candidate's (vector, norm) — cv/cn computed by the SAME plan-side
-    * l2Norm expression as every other tier — and the shared per-query
-    * kernel [[mmrGreedyPerQuery]] runs on the driver. Candidates
-    * without an embedding row drop out exactly like the previous
-    * shape's inner join. Replaces collect-fused → broadcast-pair join
-    * → collect-candidates (two driver round trips + a join stage) with
-    * one slim fetch.
-    */
-  private def mmrGreedyLocal(s: SparkSession, dir: String,
-      triples: Seq[(Long, Long, Double)], picks: Int,
-      lam: Double): DataFrame = {
-    val ids = triples.map(_._2).distinct
-    val vecs = t(s, dir, "embeddings")
-      .filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id"), col("embedding"),
-        l2Norm(col("embedding")).as("cn"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getSeq[Float](1).toArray, r.getDouble(2)))).toMap
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int, Double)]
-    triples.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (q, rs) =>
-      val cs = rs.flatMap { case (_, n, rel) =>
-        vecs.get(n).map { case (cv, cn) => (n, rel, cv, cn) }
-      }.toArray
-      mmrGreedyPerQuery(cs, picks, lam).foreach { case (n, k, m) =>
-        out += ((q, n, k, m))
-      }
-    }
-    import s.implicits._
-    out.toSeq.toDF("q_id", "n_id", "pick", "mmr_score")
-      .orderBy(col("q_id"), col("pick"))
+      mkBt: => DataFrame, mkCt: => DataFrame): DataFrame = {
+    val fused =
+      if (fusesLocally(s, numQueries)) {
+        val (btRows, ctRows) = inParallel(collectArm(mkBt), collectArm(mkCt))
+        val rows = rrfFuseLocal(btRows.toSeq, ctRows.toSeq)
+          .map { case (q, n, rrf, _, _, _) => Row(q, n, rrf) }
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), FusedSchema)
+      } else rrfFusedRanked(mkBt, mkCt)
+        .select(col("q_id"), col("n_id"), col("rrf").as("rel"))
+    mmrGreedy(mmrCandidates(s, dir, fused, numQueries * TopK, None), picks, lam)
   }
+
+  /** The (q_id, n_id, rel) schema of driver-fused MMR candidates. */
+  private val FusedSchema = StructType(Seq(
+    StructField("q_id", LongType), StructField("n_id", LongType),
+    StructField("rel", org.apache.spark.sql.types.DoubleType)))
 
   /** Diversified hybrid search for EXTERNAL (text, vector) queries —
     * the diversified sibling of [[hybridSearch]]: same two stored-
@@ -2853,19 +2747,6 @@ object RetrievalQueries {
       .withColumn("q_id", -col("q_id") - 1)
       .orderBy(col("q_id"), col("pick"))
   }
-
-  /** The BULK MMR candidate frame (q_id, n_id, rel, cv, cn) over a
-    * fused ranking: the triples stay distributed and the vectors
-    * arrive by un-hinted join (see [[mmrIndexedCandidates]]).
-    */
-  private def fusedCandidates(s: SparkSession, dir: String,
-      fused: DataFrame): DataFrame =
-    t(s, dir, "embeddings")
-      .select(col("vec_id").as("n_id"), col("embedding").as("cv"),
-        l2Norm(col("embedding")).as("cn"))
-      .join(fused.select(col("q_id"), col("n_id"),
-        col("rrf").as("rel")), Seq("n_id"))
-      .select(col("q_id"), col("n_id"), col("rel"), col("cv"), col("cn"))
 
   /** The diversified hybrid oracle: the full fused chain (both index
     * serves re-derived relationally, fusion CTEs) feeding the shared
@@ -3233,10 +3114,9 @@ object RetrievalQueries {
     // itself is cross-engine identical, and the oracle re-derives all
     // 5 selection steps as unrolled CTEs (the QuantizedLr discipline
     // for iterative algorithms). Scale: after the candidate rank,
-    // everything is query-batch-sized (pool² sims per query); the
-    // candidate and pairwise frames are localCheckpoint-materialized
-    // so the 5-step loop re-reads tiny local relations instead of
-    // re-running the corpus scan per step (the iterative-plan lesson).
+    // everything is query-batch-sized (pool² sims per query), and the
+    // 5-step loop runs per query inside the grouped greedy kernel, in
+    // the same plan as the pool — the corpus scan runs once.
     GraftQuery(
       "q_mmr_diversify",
       mmrSql(FuseDepth, MmrPicks, "0.5", "0.5")) { (s, dir) =>

@@ -1070,9 +1070,10 @@ object SimilarityQueries {
       StructField("qn", DoubleType)))
     val probes = qRows.toSeq.flatMap { r =>
       r.getAs[scala.collection.Seq[Int]]("pcells").map(c =>
-        Row(r.getLong(0), c, r.getAs[Any]("dl")))
+        Row(r.getAs[Number](0).longValue, c, r.getAs[Any]("dl")))
     }
-    val qn = qRows.toSeq.map(r => Row(r.getLong(0), r.getAs[Any]("qv"), r.getDouble(4)))
+    val qn = qRows.toSeq.map(r =>
+      Row(r.getAs[Number](0).longValue, r.getAs[Any]("qv"), r.getDouble(4)))
     val cells = qRows.flatMap(
       _.getAs[scala.collection.Seq[Int]]("pcells")).distinct.toSeq
     Tables.Bindings(
@@ -1296,7 +1297,7 @@ object SimilarityQueries {
   private[graft] def pointFetch(e: DataFrame, cand: DataFrame,
       collect: DataFrame => Array[Row]): (DataFrame, DataFrame) = {
     val rows = collect(cand).toSeq
-    val ids = rows.map(_.getLong(cand.schema.fieldIndex("n_id"))).distinct
+    val ids = rows.map(_.getAs[Any]("n_id")).distinct
     (e.filter(col("vec_id").isin(ids: _*)),
       localDf(e.sparkSession, cand.schema, rows))
   }

@@ -40,12 +40,18 @@ object LocalFs {
   private val ModeBits = 0x3ff
 
   private val StatusAttrs =
-    "unix:mode,size,lastModifiedTime,lastAccessTime,isDirectory,isSymbolicLink,owner,group"
+    "unix:mode,size,lastModifiedTime,lastAccessTime,isDirectory,isSymbolicLink,uid,gid"
 
   /** The raw (unchecksummed) local FileSystem. */
   class Raw extends RawLocalFileSystem {
 
     private var blockSize = 0L
+
+    /** Owner and group names by uid and gid: each id's name lookup
+      * (`getpwuid`/`getgrgid`) runs once per FileSystem, not per status.
+      */
+    private val names = Seq("owner", "group").map(
+      _ -> new java.util.concurrent.ConcurrentHashMap[Integer, String]()).toMap
 
     override def initialize(uri: URI, conf: Configuration): Unit = {
       super.initialize(uri, conf)
@@ -90,18 +96,22 @@ object LocalFs {
       else Array(getFileStatus(f))
 
     /** One `stat` for everything a status carries, permission, owner
-      * and group included (Hadoop reads those lazily through `ls -ld`).
-      * The mode keeps the sticky bit, as `ls -ld` parsing does.
+      * and group included (Hadoop reads those lazily through `ls -ld`);
+      * the owner and group come as ids, named through [[names]]. The
+      * mode keeps the sticky bit, as `ls -ld` parsing does.
       */
     private def status(f: Path, follow: Boolean): FileStatus = {
       val file = pathToFile(f)
-      val a =
-        try Files.readAttributes(file.toPath, StatusAttrs,
-          (if (follow) Nil else Seq(LinkOption.NOFOLLOW_LINKS)): _*)
+      val opts = if (follow) Nil else Seq(LinkOption.NOFOLLOW_LINKS)
+      def read(attrs: String) =
+        try Files.readAttributes(file.toPath, attrs, opts: _*)
         catch { case _: NoSuchFileException =>
           throw new FileNotFoundException(s"File $f does not exist") }
+      val a = read(StatusAttrs)
       def millis(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
-      def name(k: String) = a.get(k).asInstanceOf[UserPrincipal].getName
+      def name(k: String, id: String) = names(k).computeIfAbsent(
+        a.get(id).asInstanceOf[Integer],
+        _ => read(s"unix:$k").get(k).asInstanceOf[UserPrincipal].getName)
       val link =
         if (a.get("isSymbolicLink") == true)
           new Path(Files.readSymbolicLink(file.toPath).toString)
@@ -109,7 +119,7 @@ object LocalFs {
       new FileStatus(a.get("size").asInstanceOf[Long], a.get("isDirectory") == true,
         1, blockSize, millis("lastModifiedTime"), millis("lastAccessTime"),
         new FsPermission((a.get("mode").asInstanceOf[Int] & ModeBits).toShort),
-        name("owner"), name("group"), link,
+        name("owner", "uid"), name("group", "gid"), link,
         new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
     }
   }

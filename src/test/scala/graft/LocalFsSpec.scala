@@ -87,6 +87,21 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
+  test("owner and group names read by id equal the file system's own, " +
+      "for a file and a directory") {
+    withTempDir { root =>
+      Files.createDirectories(root.resolve("d"))
+      Files.writeString(root.resolve("d/x.parquet"), "xx")
+      for (p <- Seq("d", "d/x.parquet"); _ <- 1 to 2) {
+        val nio = root.resolve(p)
+        val st = ours.getFileStatus(new Path(nio.toString))
+        assert(st.getOwner == Files.getOwner(nio).getName, p)
+        assert(st.getGroup == Files.readAttributes(nio,
+          classOf[java.nio.file.attribute.PosixFileAttributes]).group.getName, p)
+      }
+    }
+  }
+
   test("FileContext.rename with OVERWRITE replaces the destination") {
     withTempDir { root =>
       val conf = spark.sparkContext.hadoopConfiguration

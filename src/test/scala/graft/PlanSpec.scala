@@ -640,23 +640,17 @@ class PlanSpec extends SparkSpec {
       "corpus-side coarse assignment in serve plan")
   }
 
-  test("q_mmr_diversify_indexed: greedy over checkpointed local " +
-      "relations; the candidate stage reads the stored codes table " +
-      "with id-pruned embeddings fetches — no full-corpus exact-cosine " +
-      "join anywhere") {
-    val p = plan("q_mmr_diversify_indexed")
-    // final plan: same checkpointed-local-relation shape as the exact
-    // dials — no embeddings scan re-executes per greedy step
-    assert(!p.contains("embeddings.parquet"), p.take(3000))
-    assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"),
-      p.take(3000))
-    // the candidate STAGE carries the scale claim and is checkpointed
-    // away from the final plan — pin it directly. The serve stage must
-    // source from the stored codes, never a corpus-side encode or an
-    // exact-cosine corpus join (the exact tier's
-    // BroadcastNestedLoopJoin on n_id ≠ q_id). Below the 4 MB line its
-    // re-rank is the fused arm, so the ADC stage stays in-plan; the
-    // point-fetch arm's pruned scan is pinned in CodesIncrementalSpec.
+  test("q_mmr_diversify_indexed: the greedy runs in-plan with no " +
+      "exchange over id-pruned embeddings scans; the candidate stage " +
+      "reads the stored codes table — no full-corpus exact-cosine join " +
+      "anywhere") {
+    diversifiedTail("q_mmr_diversify_indexed")
+    // the serve stage must source from the stored codes, never a
+    // corpus-side encode or an exact-cosine corpus join (the exact
+    // tier's BroadcastNestedLoopJoin on n_id ≠ q_id). Below the 4 MB
+    // line its re-rank is the fused arm, so the ADC stage stays
+    // in-plan; the point-fetch arm's pruned scan is pinned in
+    // CodesIncrementalSpec.
     val q = graft.analytics.RetrievalQueries.mmrCorpusQueryFrame(spark, dir, 5)
     val pool = graft.analytics.RetrievalQueries.mmrIndexedPool(spark, dir, q, 20)
     val pp = pool.queryExecution.executedPlan.toString
@@ -665,47 +659,46 @@ class PlanSpec extends SparkSpec {
     assert(!pp.contains("BroadcastNestedLoopJoin") &&
       !pp.contains("CartesianProduct"), pp.take(3000))
     assert(pp.contains("graft-codes-inc"), pp.take(3000))
-    // the candidates' own vector fetch and query frame: every
-    // embeddings scan id- or query-pruned
-    val cand = graft.analytics.RetrievalQueries.mmrIndexedCandidates(spark, dir, q, 20)
-    val cp = cand.queryExecution.executedPlan.toString
-    assert(!cp.contains("BroadcastNestedLoopJoin") &&
-      !cp.contains("CartesianProduct"),
-      "full-corpus cosine join in candidate plan:\n" + cp.take(3000))
-    val eScans = cp.linesIterator
-      .filter(_.contains("embeddings.parquet")).toSeq
+  }
+
+  test("q_search_diversified: the greedy runs in-plan with no exchange, " +
+      "and no un-pruned corpus scan or corpus theta join survives into " +
+      "the final plan") {
+    // the fused arms are the same pinned chains as q_hybrid_rrf_indexed
+    // (their own tests above) and are collected while the request is
+    // built; the final plan is the candidate-vector fetch and the greedy
+    val p = diversifiedTail("q_search_diversified")
+    assert(!p.contains("documents.parquet"), p.take(3000))
+  }
+
+  test("q_mmr_diversify: the 5-step greedy runs in-plan over the exact " +
+      "pool in every tier, and the corpus is scanned once") {
+    for (p <- Seq(onePartitionPlan("q_mmr_diversify"),
+        withDistributedServes(plan("q_mmr_diversify")))) {
+      assert(p.contains("MapGroups"), p.take(3000))
+      // the candidate side reads the whole corpus once; the query side
+      // is the vec_id < 5 scan
+      val eScans = scansOf(p, "embeddings")
+      assert(eScans.count(!_.contains("LessThan(vec_id")) == 1,
+        eScans.mkString("\n").take(2000))
+    }
+  }
+
+  /** The final plan of a diversified entry over an indexed pool, in the
+    * one-partition tier: the grouped greedy with no exchange, every
+    * embeddings scan id- or query-pruned, and no theta join.
+    */
+  private def diversifiedTail(name: String): String = {
+    val p = onePartitionPlan(name)
+    assert(p.contains("MapGroups"), p.take(3000))
+    val eScans = scansOf(p, "embeddings")
     assert(eScans.nonEmpty && eScans.forall(l =>
       l.contains("In(vec_id") || l.contains("LessThan(vec_id")),
       eScans.mkString("\n").take(2000))
-  }
-
-  test("q_search_diversified: the greedy output is a local relation " +
-      "and no un-pruned corpus scan survives into the final plan") {
-    // the fused arms are the same pinned chains as q_hybrid_rrf_indexed
-    // (their own tests above); here the diversified tail's claim is
-    // pinned: after the arms, everything is query-batch-sized — the
-    // candidate-vector fetch prunes the embeddings scan to candidate
-    // ids inside mmrGreedyLocal's fetch, and the final plan is the
-    // driver-greedy local relation
-    val p = plan("q_search_diversified")
-    assert(!p.contains("embeddings.parquet") &&
-      !p.contains("documents.parquet"), p.take(3000))
-    assert(p.contains("LocalTableScan") || p.contains("ExistingRDD"),
-      p.take(3000))
-  }
-
-  test("q_mmr_diversify: the 5-step greedy loop runs over checkpointed " +
-      "local relations — the corpus scan never re-executes per step") {
-    // the distributed tier (the one-partition tier runs the grouped
-    // greedy kernel inside its one job, pinned below)
-    val p = withDistributedServes(plan("q_mmr_diversify"))
-    // the candidate + pairwise frames are localCheckpoint-materialized
-    // BEFORE the selection loop, so the final plan reads ExistingRDDs
-    // and contains NO embeddings scan at all
-    assert(!p.contains("embeddings.parquet"), p.take(3000))
-    assert(p.contains("ExistingRDD") || p.contains("LocalTableScan"),
-      p.take(3000))
-    assert(!p.contains("CartesianProduct"), p.take(2000))
+    assert(!p.contains("BroadcastNestedLoopJoin") &&
+      !p.contains("CartesianProduct"),
+      s"theta join in the $name plan:\n" + p.take(3000))
+    p
   }
 
   /** Executed-plan text of a catalog query in the one-partition serve

@@ -1155,9 +1155,9 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
-  test("property: driver greedy == distributed bulk greedy == " +
-      "independent reference MMR on 100 random (pool, lambda) cases " +
-      "including exact rel ties and lambda in {0, 0.25, 0.5, 1}") {
+  test("property: grouped greedy == independent reference MMR on 100 " +
+      "random (pool, lambda) cases including exact rel ties and lambda " +
+      "in {0, 0.25, 0.5, 1}") {
     import spark.implicits._
     val rnd = new scala.util.Random(9042)
     for (lam <- Seq(0.0, 0.25, 0.5, 1.0)) {
@@ -1179,26 +1179,23 @@ class RetrievalSpec extends SparkSpec {
       def key(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           r.getDouble(3))).sortBy(t => (t._1, t._3)).toSeq
-      val driver = key(RetrievalQueries.mmrGreedy(df, 5, lam).collect())
-      val dist = key(
-        RetrievalQueries.mmrGreedyDistributed(df, 5, lam).collect())
+      val got = key(RetrievalQueries.mmrGreedy(df, 5, lam).collect())
       val ref = referenceMmr(cand, 5, lam)
         .map(t => (t._1, t._2, t._3, t._4)).sortBy(t => (t._1, t._3))
-      assert(driver == dist,
-        s"lambda=$lam: driver and distributed arms diverge")
-      assert(driver == ref,
+      assert(got == ref,
         s"lambda=$lam: kernel diverges from the independent reference")
     }
   }
 
-  test("bulk arm end-to-end: searchDiversified and " +
-      "mmrDiversifiedIndexed forced through the distributed path are " +
-      "row-identical to the interactive driver path") {
-    def key(rows: Array[Row], shift: Long = 0L) = rows.map(r =>
-      (r.getLong(0) + shift, r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
-    // 513 external queries take the bulk arm (distributed fuse,
-    // join-fetched vectors, grouped greedy); the same queries split
-    // into batches of 512 and 1 take the interactive one
+  test("distributed arms end-to-end: searchDiversified and " +
+      "mmrDiversifiedIndexed with no driver collects in the distributed " +
+      "serve tier are row-identical to the default path") {
+    def key(rows: Array[Row]) = rows.map(r =>
+      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+    // the driver-collect cap at 0 takes the distributed fuse, the
+    // join-fetched vectors and the exchanged grouped greedy
+    def distributed[T](body: => T): T =
+      withoutDriverCollects(withDistributedServes(body))
     val texts = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("text").isNotNull).orderBy(col("doc_id"))
       .select(col("text")).collect().map(_.getString(0))
@@ -1206,25 +1203,19 @@ class RetrievalSpec extends SparkSpec {
       .orderBy(col("vec_id")).select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
     val rnd = new scala.util.Random(513)
-    val queries = Seq.fill(513)(
+    val queries = Seq.fill(7)(
       texts(rnd.nextInt(texts.length)).split(" ").take(4).mkString(" ") ->
         vecs(rnd.nextInt(vecs.length)))
-    def search(qs: Seq[(String, Array[Float])]) =
-      RetrievalQueries.searchDiversified(spark, sfDir, qs).collect()
-    val bulk = key(search(queries))
-    val interactive =
-      key(search(queries.take(512))) ++ key(search(queries.drop(512)), 512L)
-    assert(bulk.map(_._1).distinct.size == 513, "queries served no rows")
-    assert(bulk == interactive, "searchDiversified arms diverge")
-    // the corpus has too few documents for a bulk batch of corpus
-    // queries: compare mmrDiversifiedIndexed with its bulk arms
-    val q = RetrievalQueries.mmrCorpusQueryFrame(spark, sfDir, 3)
-    val mi = key(RetrievalQueries.mmrDiversifiedIndexed(
+    def search() =
+      key(RetrievalQueries.searchDiversified(spark, sfDir, queries).collect())
+    val interactive = search()
+    assert(interactive.map(_._1).distinct.size == 7, "queries served no rows")
+    assert(distributed(search()) == interactive, "searchDiversified arms diverge")
+    def indexed() = key(RetrievalQueries.mmrDiversifiedIndexed(
       spark, sfDir, 3, 20, 5, 0.5).collect())
-    val miBulk = key(RetrievalQueries.mmrGreedyDistributed(
-      RetrievalQueries.mmrIndexedCandidates(spark, sfDir, q, 20, bulk = true),
-      5, 0.5).collect())
-    assert(mi.nonEmpty && mi == miBulk, "mmrDiversifiedIndexed arms diverge")
+    val mi = indexed()
+    assert(mi.nonEmpty && distributed(indexed()) == mi,
+      "mmrDiversifiedIndexed arms diverge")
   }
 
   test("driver query arms read INT doc ids: q_bm25_topk, " +
@@ -1240,6 +1231,28 @@ class RetrievalSpec extends SparkSpec {
           .map(_.toSeq.map { case i: Int => i.toLong; case v => v }
             .mkString("|"))
       for (q <- Seq("q_bm25_topk", "q_phrase_search", "q_phrase_trigram")) {
+        val want = rows(q, sfDir)
+        assert(want.nonEmpty, q)
+        assert(rows(q, root.toString) == want, q)
+      }
+    }
+  }
+
+  test("diversified and fused index serves read INT ids: " +
+      "q_mmr_diversify_indexed, q_search_diversified and " +
+      "q_hybrid_rrf_indexed over INT-id copies of the corpus give the " +
+      "original rows") {
+    withTempDir { root =>
+      for ((table, id) <- Seq("documents" -> "doc_id", "embeddings" -> "vec_id"))
+        spark.read.parquet(s"$sfDir/$table.parquet")
+          .withColumn(id, col(id).cast("int"))
+          .write.parquet(s"$root/$table.parquet")
+      def rows(q: String, dir: String): Seq[String] =
+        SparkEntry.queries(q)(spark, dir).collect().toSeq
+          .map(_.toSeq.map { case i: Int => i.toLong; case v => v }
+            .mkString("|"))
+      for (q <- Seq("q_mmr_diversify_indexed", "q_search_diversified",
+          "q_hybrid_rrf_indexed")) {
         val want = rows(q, sfDir)
         assert(want.nonEmpty, q)
         assert(rows(q, root.toString) == want, q)

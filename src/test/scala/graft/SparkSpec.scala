@@ -65,8 +65,8 @@ trait SparkSpec extends AnyFunSuite {
     * tier ([[graft.core.Tables.tier]]): a one-task bound of 1 KB, below
     * every request's leaves on the test corpora. Not 1 byte: the same
     * conf sets the scans' split size, and a body that collects while
-    * it is built (the hybrid arms, the MMR greedy) would run one task
-    * per byte of input. The other size decisions are constants, reached
+    * it is built (the fusion arms, the indexed MMR pool's candidate
+    * ids) would run one task per byte of input. The other size decisions are constants, reached
     * through their real inputs or by calling their arms; the one other
     * seam is the driver-collect cap, [[withoutDriverCollects]].
     */
